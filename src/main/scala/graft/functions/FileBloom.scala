@@ -1,15 +1,7 @@
 package graft.functions
 
-import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
 import java.nio.charset.StandardCharsets
 import java.security.MessageDigest
-
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 
 /** Per-file Bloom filters — the point-lookup half of data skipping
   * (Delta's Bloom filter index, published design): zone maps prune
@@ -24,8 +16,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * Hashing is MD5-based Kirsch-Mitzenmacher (two 64-bit halves h1, h2;
   * position_i = (h1 + i·h2) mod m) over a CANONICAL key string (the
   * long value's decimal form for integral/date/timestamp columns, the
-  * raw string otherwise). Insertion ([[BloomAgg]], a mergeable
-  * `TypedImperativeAggregate` grouped by file) and the driver-side
+  * raw string otherwise). Insertion (in the write tasks, by
+  * [[graft.sources.TxStats.WriteStats]]) and the driver-side
   * probe ([[FileBloom.Bloom.mightContain]]) share [[FileBloom.set]]'s
   * exact position function, so parity is by construction, not by
   * convention. FPR ≈ (1 − e^{−kn/m})^k — the defaults (m = 2^20 bits,
@@ -85,83 +77,4 @@ object FileBloom {
     while (i < words.length) { words(i) = bb.getLong(); i += 1 }
     Bloom(k, words)
   }
-}
-
-/** `graft_file_bloom(key)` — mergeable Bloom-filter aggregate over a
-  * long or string key column; eval returns the filter's words as
-  * binary. Partials merge by OR, so the plan is the standard
-  * partial → exchange → final aggregate shape.
-  */
-case class BloomAgg(
-    child: Expression,
-    numWords: Int,
-    k: Int,
-    override val mutableAggBufferOffset: Int = 0,
-    override val inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Array[Long]] {
-
-  require(numWords > 0 && k > 0)
-
-  override def prettyName: String = "graft_file_bloom"
-  override def children: Seq[Expression] = Seq(child)
-  override def nullable: Boolean = false
-  override def dataType: DataType = BinaryType
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case LongType | StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"graft_file_bloom expects a long or string key, got $other")
-  }
-
-  override def createAggregationBuffer(): Array[Long] = new Array[Long](numWords)
-
-  override def update(buf: Array[Long], input: InternalRow): Array[Long] = {
-    val v = child.eval(input)
-    if (v != null) {
-      val key = child.dataType match {
-        case LongType => v.asInstanceOf[Long].toString
-        case _ => v.asInstanceOf[UTF8String].toString
-      }
-      FileBloom.set(buf, key, k)
-    }
-    buf
-  }
-
-  override def merge(buf: Array[Long], other: Array[Long]): Array[Long] = {
-    var i = 0
-    while (i < buf.length) { buf(i) |= other(i); i += 1 }
-    buf
-  }
-
-  override def eval(buf: Array[Long]): Any = {
-    val bb = java.nio.ByteBuffer.allocate(buf.length * 8)
-    buf.foreach(bb.putLong)
-    bb.array()
-  }
-
-  override def serialize(buf: Array[Long]): Array[Byte] = {
-    val bos = new ByteArrayOutputStream()
-    val out = new DataOutputStream(bos)
-    out.writeInt(buf.length)
-    buf.foreach(out.writeLong)
-    out.flush()
-    bos.toByteArray
-  }
-
-  override def deserialize(bytes: Array[Byte]): Array[Long] = {
-    val in = new DataInputStream(new ByteArrayInputStream(bytes))
-    val n = in.readInt()
-    val buf = new Array[Long](n)
-    var i = 0
-    while (i < n) { buf(i) = in.readLong(); i += 1 }
-    buf
-  }
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): BloomAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): BloomAgg =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): Expression =
-    copy(child = newChildren(0))
 }

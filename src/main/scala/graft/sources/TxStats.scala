@@ -2,12 +2,14 @@ package graft.sources
 
 import java.nio.charset.StandardCharsets
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.{Column, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.execution.datasources.{WriteJobStatsTracker, WriteTaskStats, WriteTaskStatsTracker}
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
+
+import graft.functions.FileBloom
 
 /** Per-file column statistics (zone maps) for [[TxTable]] — the
   * data-skipping layer the reference's Delta tables get from
@@ -47,15 +49,13 @@ import org.apache.spark.sql.types._
   *    the stored bounds through them keeps pruning sound even where the
   *    conversions are lossy.
   *  - **NaN and -0.0 follow Spark's total order** (NaN greatest,
-  *    -0.0 == 0.0): stats are normalized at collection time and
-  *    compared with `Double.compare`/`Float.compare`, matching the
-  *    ordering Spark's min/max aggregates used to produce them.
+  *    -0.0 == 0.0): bounds are recorded in the order Spark's min/max
+  *    aggregates use, -0.0 is folded to 0.0, and they are compared with
+  *    `Double.compare`/`Float.compare`.
   *
-  * Stats collection reads back ONLY the indexed columns of the freshly
-  * staged files (one column-pruned scan, grouped by file); a production
-  * port would lift the same numbers from the parquet footers the write
-  * already produced — the sidecar format and pruning logic are
-  * unchanged either way.
+  * Stats are computed while each file is written ([[WriteStats]], a
+  * tracker on the staging write's tasks — Delta's shape), so a commit
+  * costs no read-back of the files it just wrote.
   */
 object TxStats {
 
@@ -78,252 +78,204 @@ object TxStats {
     * per-column Bloom filters for point-lookup skipping.
     */
   case class FileStats(rows: Long, cols: Map[String, ColStats],
-      blooms: Map[String, graft.functions.FileBloom.Bloom] = Map.empty)
+      blooms: Map[String, FileBloom.Bloom] = Map.empty)
 
-  /** Normalization for an eligible type: (type tag, column rewrite that
-    * makes min/max collectible as Long/Double/String). Date → epoch
-    * days, timestamp → epoch micros (NOT a seconds cast, which would
-    * floor the max and break soundness).
+  /** Zone-map tag of an eligible column type: "l" stores a Long
+    * (integral, boolean as 0/1, date as epoch days, timestamp as epoch
+    * micros — never a seconds cast, which would floor the max), "d" a
+    * Double (float/double), "s" a String.
     */
-  private def normType(dt: DataType): Option[(String, Column => Column)] = dt match {
-    case ByteType | ShortType | IntegerType | LongType =>
-      Some(("l", _.cast("long")))
-    case BooleanType => Some(("l", _.cast("long")))
-    case DateType => Some(("l", c => unix_date(c).cast("long")))
-    case TimestampType => Some(("l", c => unix_micros(c)))
-    case FloatType | DoubleType => Some(("d", _.cast("double")))
-    case StringType => Some(("s", identity))
+  private def tagOf(dt: DataType): Option[String] = dt match {
+    case ByteType | ShortType | IntegerType | LongType | BooleanType |
+         DateType | TimestampType => Some("l")
+    case FloatType | DoubleType => Some("d")
+    case StringType => Some("s")
     case _ => None
   }
 
   private def negZero(d: Double): Double = if (d == 0.0) 0.0 else d
 
-  /** Collect per-file stats for freshly staged files: one column-pruned
-    * scan of `names` under `dir`, grouped by `input_file_name()`. Bounded
-    * driver memory: one row per staged file.
+  /** Spark's SQL order on doubles (NaN greatest, -0.0 == 0.0), the order
+    * its min/max aggregates use.
     */
-  def collect(spark: SparkSession, dir: String, names: Seq[String],
-      schema: StructType, bloomFor: Seq[String] = Nil,
-      bloomBits: Int = graft.functions.FileBloom.DefaultBits): Map[String, FileStats] = {
-    if (names.isEmpty) return Map.empty
-    val fields = schema.fields.iterator
-      .flatMap(f => normType(f.dataType).map { case (tag, fn) => (f.name, tag, fn) })
-      .take(MaxIndexedCols).toSeq
-    // Bloom keys must canonicalize exactly: integral/date/timestamp
-    // normalize to long, strings stay raw; float/double are refused
-    // (no stable canonical form across engines/NaN)
-    val bloomFields = bloomFor.map { n =>
-      val f = fields.find(_._1 == n).getOrElse(throw new IllegalArgumentException(
-        s"bloom column $n is not a stats-eligible column of the write schema"))
-      require(f._2 != "d", s"bloom column $n has a floating type — " +
-        "equality canonicalization is not stable; use an integral/string key")
-      f
-    }
-    val numWords = math.max(1, (bloomBits + 63) / 64)
-    val bloomK = graft.functions.FileBloom.DefaultK
-    val df = spark.read.schema(schema).parquet(names.map(n => s"$dir/$n"): _*)
-    val aggs = Seq(count(lit(1)).as("__rows")) ++ fields.zipWithIndex.flatMap {
-      case ((name, tag, fn), i) =>
-        val c = fn(col(name))
-        val (lo, hi) =
-          if (tag == "s")
-            (min(substring(c, 1, StringPrefixCap + 1)),
-              max(substring(c, 1, StringPrefixCap + 1)))
-          else (min(c), max(c))
-        Seq(lo.as(s"__lo$i"), hi.as(s"__hi$i"), count(c).as(s"__nn$i"))
-    } ++ bloomFields.zipWithIndex.map { case ((name, _, fn), i) =>
-      org.apache.spark.sql.GraftSqlBridge.column(
-        graft.functions.BloomAgg(
-          org.apache.spark.sql.GraftSqlBridge.expression(fn(col(name))),
-          numWords, bloomK).toAggregateExpression()).as(s"__bf$i")
-    }
-    val rows = df.groupBy(input_file_name().as("__file"))
-      .agg(aggs.head, aggs.tail: _*).collect()
-    // key results by the caller's names (which may be partition-relative
-    // paths); basenames are UUID-token-unique within a staging batch
-    val byBase = names.map(n => n.split('/').last -> n).toMap
-    val collected = rows.iterator.map { r =>
-      val fname = byBase(r.getString(r.fieldIndex("__file")).split('/').last)
-      val nRows = r.getLong(r.fieldIndex("__rows"))
-      val cols = fields.zipWithIndex.map { case ((name, tag, _), i) =>
-        val rawLo = Option(r.get(r.fieldIndex(s"__lo$i")))
-        val rawHi = Option(r.get(r.fieldIndex(s"__hi$i")))
-        val nn = r.getLong(r.fieldIndex(s"__nn$i"))
-        val (lo, hi) = tag match {
-          case "s" =>
-            (rawLo.map(_.asInstanceOf[String].take(StringPrefixCap)),
-              rawHi.map(_.asInstanceOf[String])
-                .filter(_.length <= StringPrefixCap))
-          case "d" =>
-            (rawLo.map(v => negZero(v.asInstanceOf[Double])),
-              rawHi.map(v => negZero(v.asInstanceOf[Double])))
-          case _ =>
-            (rawLo.map(_.asInstanceOf[Long]), rawHi.map(_.asInstanceOf[Long]))
-        }
-        name -> ColStats(tag, nRows - nn, lo, hi)
-      }.toMap
-      val blooms = bloomFields.zipWithIndex.map { case ((name, _, _), i) =>
-        val bytes = r.getAs[Array[Byte]](r.fieldIndex(s"__bf$i"))
-        val bb = java.nio.ByteBuffer.wrap(bytes)
-        val words = new Array[Long](bytes.length / 8)
-        (0 until words.length).foreach(j => words(j) = bb.getLong())
-        name -> graft.functions.FileBloom.Bloom(bloomK, words)
-      }.toMap
-      fname -> FileStats(nRows, cols, blooms)
-    }.toMap
-    // an empty staged file produces no group — record rows=0 stats so
-    // it is provably prunable rather than merely stats-less
-    val empties = names.filterNot(collected.contains).map { n =>
-      n -> FileStats(0, fields.map { case (name, tag, _) =>
-        name -> ColStats(tag, 0, None, None)
-      }.toMap)
-    }
-    collected ++ empties
+  private def cmpD(x: Double, y: Double): Int =
+    if (x == y) 0 else java.lang.Double.compare(x, y)
+
+  /** Stored string bounds from a file's min and max: the lower bound is
+    * truncated to [[StringPrefixCap]] chars — one fewer when the cut
+    * would split a surrogate pair, so the bound stays valid UTF-16 and
+    * still a prefix of the minimum — and an upper bound longer than the
+    * cap is dropped. A truncated lower bound is a strict prefix of the
+    * minimum, so it never equals a stored upper bound: equality tests
+    * that need lo == hi == v stay sound at either cut.
+    */
+  private[sources] def strBounds(lo: String, hi: String): (Option[String], Option[String]) = {
+    val cut = if (lo.length > StringPrefixCap &&
+      Character.isHighSurrogate(lo.charAt(StringPrefixCap - 1))) StringPrefixCap - 1
+      else StringPrefixCap
+    (Some(lo.take(cut)), Some(hi).filter(_.length <= StringPrefixCap))
   }
 
-  /** Footer-based stats collection — the production shape the scan-based
-    * [[collect]] documents: lift rows / null counts / min / max from the
-    * parquet FOOTERS the staged write already produced, zero data IO and
-    * zero Spark jobs (guide §6: skipping decisions must come from
-    * O(files) driver-side metadata; the old read-back was a second full
-    * pass over every committed byte). Sidecar format, pruning logic and
-    * soundness rules are unchanged — only the producer moves.
+  /** A write's indexed column: name, tag, ordinal in the written row, type. */
+  private case class Indexed(name: String, tag: String, ord: Int, dt: DataType)
+
+  /** A task's file stats, keyed by staged file path relative to the output. */
+  private case class StagedStats(files: Map[String, FileStats]) extends WriteTaskStats
+
+  /** In-write stats: the producer of every write's zone maps and Bloom
+    * filters. Attached to the staging write's `FileFormatWriter`, its task
+    * instances see each row as it is written and fold it into the open
+    * file's row count, per-column null count and min/max, and the
+    * opt-in `bloomFor` filters; committed tasks report their files and
+    * [[result]] keys them by path relative to the staging directory
+    * (`partitionDepth` hive directories plus the file name). No read-back
+    * and no extra Spark job.
     *
-    * Parity with the scan path, case by case:
-    *  - integral / date / boolean: parquet INT32/INT64/BOOLEAN footer
-    *    min/max are exact under the same signed order Spark's min/max
-    *    aggregates use — identical values.
-    *  - float/double: parquet-mr's FLOAT/DOUBLE statistics compare with
-    *    `Double.compare` (NaN greatest, -0.0 < 0.0), the same total
-    *    order Spark's min/max use; `negZero` then folds -0.0 exactly as
-    *    the scan path does. A chunk whose stats were dropped by the
-    *    writer falls open (bounds unknown) — fail-open as ever.
-    *  - strings: footer BINARY bounds are raw byte-order min/max of the
-    *    column (parquet-mr drops them above its 4 KB cap — falls open);
-    *    the [[StringPrefixCap]] truncate-lo / drop-hi rule applies on
-    *    top, so stored bounds are exactly the scan path's.
-    *  - timestamps written as INT96 (Spark's default output type) carry
-    *    no ordered footer bounds: null counts are kept (order-free),
-    *    min/max stay unknown — strictly less pruning than the scan
-    *    path, never unsound. TIMESTAMP(MICROS/MILLIS) files get full
-    *    bounds.
-    *  - a column with ANY chunk lacking usable null counts is omitted
-    *    from the file's entry entirely (every pruning path falls open on
-    *    a missing column).
+    * `dataSchema` is the written row's schema — partition columns are not
+    * in the data files, and their stats come from the path at read time.
+    * The first [[MaxIndexedCols]] eligible columns are indexed. Bounds are
+    * exactly what Spark's min/max would return over the normalized column:
+    * strings compare as UTF-8 bytes over their first cap + 1 code points
+    * (Spark's `substring`), doubles in Spark's SQL order with -0.0 folded
+    * to 0.0 afterwards, then [[strBounds]] applies the cap. A file with no
+    * rows gets `rows = 0` stats (provably prunable) and no Bloom.
     *
-    * Blooms still need the data pass — callers with `bloomFor` keep
-    * using [[collect]].
+    * Bloom keys canonicalize exactly as the probe in [[canMatch]] expects:
+    * the normalized long's decimal form, or the raw string; float/double
+    * columns are refused (no stable canonical form across NaN/engines).
     */
-  def collectFromFooters(spark: SparkSession, dir: String, names: Seq[String],
-      schema: StructType): Map[String, FileStats] = {
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-    import org.apache.parquet.schema.LogicalTypeAnnotation
-    val conf = spark.sessionState.newHadoopConf()
-    val fields = schema.fields.iterator
-      .flatMap(f => normType(f.dataType).map { case (tag, _) => (f.name, tag, f.dataType) })
-      .take(MaxIndexedCols).toSeq
-    names.map { n =>
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(s"$dir/$n"), conf)
-      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      try {
-        val blocks = reader.getFooter.getBlocks.asScala.toSeq
-        val rows = blocks.map(_.getRowCount).sum
-        if (rows == 0L)
-          n -> FileStats(0L, fields.map { case (name, tag, _) =>
-            name -> ColStats(tag, 0L, None, None)
-          }.toMap)
-        else {
-          val chunksByName = blocks.flatMap(_.getColumns.asScala)
-            .groupBy(_.getPath.toDotString)
-          val cols = fields.flatMap { case (name, tag, sparkDt) =>
-            chunksByName.get(name).flatMap { chunks =>
-              var nulls = 0L
-              var known = true // null counts present on every chunk
-              var bounded = true // ordered bounds recoverable on every chunk
-              var lo: Option[Any] = None
-              var hi: Option[Any] = None
-              def merge(mn: Any, mx: Any): Unit = {
-                def less(a: Any, b: Any): Boolean = (a, b) match {
-                  case (x: Long, y: Long) => x < y
-                  case (x: Double, y: Double) => java.lang.Double.compare(x, y) < 0
-                  case (x: String, y: String) => utf8Cmp(x, y) < 0
-                  case _ => false
-                }
-                lo = Some(lo.filter(v => less(v, mn)).getOrElse(mn))
-                hi = Some(hi.filter(v => less(mx, v)).getOrElse(mx))
-              }
-              chunks.foreach { c =>
-                val st = c.getStatistics
-                if (st == null || !st.isNumNullsSet) known = false
-                else {
-                  nulls += st.getNumNulls
-                  if (st.hasNonNullValue) {
-                    val ptn = c.getPrimitiveType.getPrimitiveTypeName
-                    val logical = c.getPrimitiveType.getLogicalTypeAnnotation
-                    (tag, ptn) match {
-                      case ("l", INT64) =>
-                        val scale: Option[Long] = sparkDt match {
-                          case TimestampType => logical match {
-                            case t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
-                              t.getUnit match {
-                                case LogicalTypeAnnotation.TimeUnit.MICROS => Some(1L)
-                                case LogicalTypeAnnotation.TimeUnit.MILLIS => Some(1000L)
-                                case _ => None
-                              }
-                            case _ => None
-                          }
-                          case _ => Some(1L)
-                        }
-                        scale match {
-                          case Some(k) => merge(
-                            st.genericGetMin.asInstanceOf[java.lang.Long].longValue * k,
-                            st.genericGetMax.asInstanceOf[java.lang.Long].longValue * k)
-                          case None => bounded = false
-                        }
-                      case ("l", INT32) => merge(
-                        st.genericGetMin.asInstanceOf[java.lang.Integer].longValue,
-                        st.genericGetMax.asInstanceOf[java.lang.Integer].longValue)
-                      case ("l", BOOLEAN) => merge(
-                        if (st.genericGetMin.asInstanceOf[java.lang.Boolean]) 1L else 0L,
-                        if (st.genericGetMax.asInstanceOf[java.lang.Boolean]) 1L else 0L)
-                      case ("d", DOUBLE) => merge(
-                        negZero(st.genericGetMin.asInstanceOf[java.lang.Double].doubleValue),
-                        negZero(st.genericGetMax.asInstanceOf[java.lang.Double].doubleValue))
-                      case ("d", FLOAT) => merge(
-                        negZero(st.genericGetMin.asInstanceOf[java.lang.Float].doubleValue),
-                        negZero(st.genericGetMax.asInstanceOf[java.lang.Float].doubleValue))
-                      case ("s", BINARY) => merge(
-                        st.genericGetMin.asInstanceOf[org.apache.parquet.io.api.Binary]
-                          .toStringUsingUTF8,
-                        st.genericGetMax.asInstanceOf[org.apache.parquet.io.api.Binary]
-                          .toStringUsingUTF8)
-                      case _ => bounded = false // INT96 et al: order unusable
-                    }
-                  } else if (st.getNumNulls < c.getValueCount) {
-                    bounded = false // non-null rows exist but bounds dropped
-                  }
-                }
-              }
-              if (!known) None // no sound null count: omit column, fall open
-              else {
-                val (flo, fhi) =
-                  if (!bounded) (None, None)
-                  else tag match {
-                    case "s" =>
-                      (lo.map(_.asInstanceOf[String].take(StringPrefixCap)),
-                        hi.map(_.asInstanceOf[String])
-                          .filter(_.length <= StringPrefixCap))
-                    case _ => (lo, hi)
-                  }
-                Some(name -> ColStats(tag, nulls, flo, fhi))
-              }
-            }
-          }.toMap
-          n -> FileStats(rows, cols)
+  private[sources] final class WriteStats(dataSchema: StructType,
+      bloomFor: Seq[String], partitionDepth: Int) extends WriteJobStatsTracker {
+
+    private val cols: Array[Indexed] = dataSchema.fields.iterator.zipWithIndex
+      .flatMap { case (f, i) => tagOf(f.dataType).map(Indexed(f.name, _, i, f.dataType)) }
+      .take(MaxIndexedCols).toArray
+
+    private val bloomCols: Array[Indexed] = bloomFor.map { n =>
+      val ix = cols.find(_.name == n).getOrElse(throw new IllegalArgumentException(
+        s"bloom column $n is not a stats-eligible column of the write schema"))
+      require(ix.tag != "d", s"bloom column $n has a floating type — " +
+        "equality canonicalization is not stable; use an integral/string key")
+      ix
+    }.toArray
+
+    @transient private var collected = Map.empty[String, FileStats]
+
+    /** Stats of every committed staged file, by path relative to the output. */
+    def result: Map[String, FileStats] = collected
+
+    override def newTaskInstance(): WriteTaskStatsTracker =
+      new TaskStats(cols, bloomCols, partitionDepth)
+
+    override def processStats(stats: Seq[WriteTaskStats], jobCommitTime: Long): Unit =
+      collected = stats.iterator.flatMap { case StagedStats(files) => files }.toMap
+  }
+
+  private val BloomWords = math.max(1, (FileBloom.DefaultBits + 63) / 64)
+
+  /** The normalized long of an "l"-tagged column (see [[tagOf]]). */
+  private def longAt(row: InternalRow, ix: Indexed): Long = ix.dt match {
+    case ByteType => row.getByte(ix.ord).toLong
+    case ShortType => row.getShort(ix.ord).toLong
+    case IntegerType | DateType => row.getInt(ix.ord).toLong
+    case BooleanType => if (row.getBoolean(ix.ord)) 1L else 0L
+    case _ => row.getLong(ix.ord) // long, timestamp micros
+  }
+
+  /** One open file's running stats. */
+  private final class FileAcc(cols: Array[Indexed], bloomCols: Array[Indexed]) {
+    private val n = cols.length
+    private var rows = 0L
+    private val nonNull = new Array[Long](n)
+    private val loL, hiL = new Array[Long](n)
+    private val loD, hiD = new Array[Double](n)
+    private val loS, hiS = new Array[UTF8String](n)
+    private val blooms = bloomCols.map(_ => new Array[Long](BloomWords))
+
+    // a string's first cap + 1 code points, copied out of the reused row
+    private def prefix(v: UTF8String): UTF8String = v.substringSQL(1, StringPrefixCap + 1)
+
+    def add(row: InternalRow): Unit = {
+      rows += 1
+      var c = 0
+      while (c < n) {
+        val ix = cols(c)
+        if (!row.isNullAt(ix.ord)) {
+          val first = nonNull(c) == 0
+          nonNull(c) += 1
+          ix.tag match {
+            case "l" =>
+              val v = longAt(row, ix)
+              if (first || v < loL(c)) loL(c) = v
+              if (first || v > hiL(c)) hiL(c) = v
+            case "d" =>
+              val v = if (ix.dt == FloatType) row.getFloat(ix.ord).toDouble
+                else row.getDouble(ix.ord)
+              if (first || cmpD(v, loD(c)) < 0) loD(c) = v
+              if (first || cmpD(v, hiD(c)) > 0) hiD(c) = v
+            case _ =>
+              // prefixing is monotone and a stored bound is its own prefix,
+              // so comparing the raw value decides; copy only on a change
+              val v = row.getUTF8String(ix.ord)
+              if (first || v.compareTo(loS(c)) < 0) loS(c) = prefix(v)
+              if (first || v.compareTo(hiS(c)) > 0) hiS(c) = prefix(v)
+          }
         }
-      } finally reader.close()
-    }.toMap
+        c += 1
+      }
+      var b = 0
+      while (b < bloomCols.length) {
+        val ix = bloomCols(b)
+        if (!row.isNullAt(ix.ord)) {
+          val key = if (ix.tag == "s") row.getUTF8String(ix.ord).toString
+            else longAt(row, ix).toString
+          FileBloom.set(blooms(b), key, FileBloom.DefaultK)
+        }
+        b += 1
+      }
+    }
+
+    def result: FileStats = FileStats(rows,
+      cols.indices.map { c =>
+        val ix = cols(c)
+        val (lo, hi) =
+          if (nonNull(c) == 0L) (None, None)
+          else ix.tag match {
+            case "l" => (Some(loL(c)), Some(hiL(c)))
+            case "d" => (Some(negZero(loD(c))), Some(negZero(hiD(c))))
+            case _ => strBounds(loS(c).toString, hiS(c).toString)
+          }
+        ix.name -> ColStats(ix.tag, rows - nonNull(c), lo, hi)
+      }.toMap,
+      if (rows == 0L) Map.empty // an empty file is pruned by its row count
+      else bloomCols.indices.map(b =>
+        bloomCols(b).name -> FileBloom.Bloom(FileBloom.DefaultK, blooms(b))).toMap)
+  }
+
+  private final class TaskStats(cols: Array[Indexed], bloomCols: Array[Indexed],
+      partitionDepth: Int) extends WriteTaskStatsTracker {
+    private val files = collection.mutable.LinkedHashMap.empty[String, FileAcc]
+    private var curPath: String = null
+    private var cur: FileAcc = null
+
+    // the writer's path is the commit protocol's task-attempt file; its
+    // tail (partition directories + file name) is the committed layout
+    private def key(path: String): String =
+      path.split('/').takeRight(partitionDepth + 1).mkString("/")
+
+    override def newPartition(partitionValues: InternalRow): Unit = ()
+    override def newFile(filePath: String): Unit = {
+      cur = new FileAcc(cols, bloomCols)
+      curPath = filePath
+      files(key(filePath)) = cur
+    }
+    override def closeFile(filePath: String): Unit = ()
+    override def newRow(filePath: String, row: InternalRow): Unit = {
+      if (filePath ne curPath) { cur = files(key(filePath)); curPath = filePath }
+      cur.add(row)
+    }
+    override def getFinalStats(taskCommitTime: Long): WriteTaskStats =
+      StagedStats(files.iterator.map { case (k, a) => k -> a.result }.toMap)
   }
 
   // ---- sidecar codec (TSV, escaped; dependency-free both ways) ----
@@ -391,7 +343,7 @@ object TxStats {
     val rows = collection.mutable.Map.empty[String, Long]
     val cols = collection.mutable.Map.empty[String, List[(String, ColStats)]]
     val blooms = collection.mutable.Map
-      .empty[String, List[(String, graft.functions.FileBloom.Bloom)]]
+      .empty[String, List[(String, FileBloom.Bloom)]]
     s.linesIterator.filter(_.nonEmpty).foreach { line =>
       val p = line.split("\t", -1)
       p(0) match {
@@ -404,7 +356,7 @@ object TxStats {
         case "B" =>
           val f = unesc(p(1))
           blooms(f) = (unesc(p(2)) ->
-            graft.functions.FileBloom.fromBase64(p(3).toInt, p(4))) ::
+            FileBloom.fromBase64(p(3).toInt, p(4))) ::
             blooms.getOrElse(f, Nil)
         case _ => // unknown record kind: ignore (forward compatibility)
       }
@@ -544,7 +496,7 @@ object TxStats {
   private def hasNonNull(fs: FileStats, cs: ColStats): Boolean = cs.nulls < fs.rows
 
   /** Bloom probe: false ONLY when the filter proves the key absent.
-    * Keys canonicalize exactly as [[collect]] inserted them (normalized
+    * Keys canonicalize exactly as [[WriteStats]] inserted them (normalized
     * long's decimal form, raw string); anything else falls open.
     */
   private def bloomMayContain(fs: FileStats, name: String, v: Any,

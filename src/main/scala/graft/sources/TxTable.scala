@@ -1,9 +1,13 @@
 package graft.sources
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import org.apache.hadoop.mapreduce.Job
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.execution.datasources.OutputWriterFactory
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 import scala.jdk.CollectionConverters._
 
@@ -39,7 +43,8 @@ import scala.jdk.CollectionConverters._
   *    `update` complete the DML surface with the same copy-on-write
   *    shape, file-pruned through the zone maps below.
   *  - **Data skipping.** Every write records per-file min/max/nullCount
-  *    zone maps ([[TxStats]], an atomic `<v>.stats.tsv` sidecar next to
+  *    zone maps, computed by the write tasks as they write each file
+  *    ([[TxStats.WriteStats]]; an atomic `<v>.stats.tsv` sidecar next to
   *    the commit); [[readWhere]] evaluates the predicate against them
   *    driver-side and scans only files that can match. Advisory and
   *    fail-open: a file without stats is always read, and the full
@@ -177,21 +182,27 @@ object TxTable {
     live.toSeq
   }
 
-  /** Committed schema at `asOf` (default latest), if any commit exists. */
-  def schemaAt(dir: String, asOf: Option[Long] = None): Option[StructType] = {
-    val commits = readLog(dir, asOf)
-    commits.lastOption.filter(_.schemaJson.nonEmpty).map(c =>
-      org.apache.spark.sql.types.DataType.fromJson(c.schemaJson)
-        .asInstanceOf[StructType])
+  /** The commit at `asOf` (default latest; capped at the latest), if any.
+    * Every commit carries the table's schema and partitioning, so this one
+    * entry answers both without replaying the log.
+    */
+  private def commitAt(dir: String, asOf: Option[Long]): Option[Commit] = {
+    val v = math.min(asOf.getOrElse(Long.MaxValue), currentVersion(dir))
+    if (v < 0) None else Some(parse(Files.readString(entryPath(dir, v))))
   }
 
-  /** The table's partition columns at `asOf` (empty = unpartitioned).
-    * Every commit carries the table's partitioning, so this is the last
-    * commit's list; an overwrite may change it (it replaces the file set
-    * wholly), an append may not.
+  /** Committed schema at `asOf` (default latest), if any commit exists. */
+  def schemaAt(dir: String, asOf: Option[Long] = None): Option[StructType] =
+    commitAt(dir, asOf).filter(_.schemaJson.nonEmpty).map(c =>
+      org.apache.spark.sql.types.DataType.fromJson(c.schemaJson)
+        .asInstanceOf[StructType])
+
+  /** The table's partition columns at `asOf` (empty = unpartitioned):
+    * the commit's own list; an overwrite may change it (it replaces the
+    * file set wholly), an append may not.
     */
   def partitionColsAt(dir: String, asOf: Option[Long] = None): Seq[String] =
-    readLog(dir, asOf).lastOption.map(_.partitionBy).getOrElse(Nil)
+    commitAt(dir, asOf).map(_.partitionBy).getOrElse(Nil)
 
   /** Partition column types that path-encode with EXACT recoverable
     * bounds (the hive layout's value-in-the-directory-name contract).
@@ -319,9 +330,8 @@ object TxTable {
               case Some(r) => partNorm(r, fd.dataType) match {
                 case s: String =>
                   // the same truncation soundness rule stored stats use
-                  TxStats.ColStats(tag, 0L,
-                    Some(s.take(TxStats.StringPrefixCap)),
-                    if (s.length <= TxStats.StringPrefixCap) Some(s) else None)
+                  val (lo, hi) = TxStats.strBounds(s, s)
+                  TxStats.ColStats(tag, 0L, lo, hi)
                 case v =>
                   TxStats.ColStats(tag, 0L, Some(v), Some(v))
               }
@@ -372,34 +382,40 @@ object TxTable {
     base.where(predicate)
   }
 
+  /** Parquet whose timestamps are written as TIMESTAMP(MICROS), not
+    * Spark's INT96 default, set on the write job's own Hadoop conf (never
+    * the session's): INT64 timestamps carry ordered footer statistics, so
+    * parquet row-group pushdown works on `ts`-range scans of the table,
+    * and every Spark reader handles both encodings.
+    */
+  private final class MicrosParquet extends ParquetFileFormat {
+    override def prepareWrite(spark: SparkSession, job: Job,
+        options: Map[String, String], dataSchema: StructType): OutputWriterFactory = {
+      val factory = super.prepareWrite(spark, job, options, dataSchema)
+      job.getConfiguration.set(SQLConf.PARQUET_OUTPUT_TIMESTAMP_TYPE.key,
+        SQLConf.ParquetOutputTimestampType.TIMESTAMP_MICROS.toString)
+      factory
+    }
+  }
+
   /** Stage `df` as parquet under UUID-prefixed names in `dir` (with
     * `partitionBy` set: under hive-style `col=value/` subdirectories, the
-    * layout Spark's own partitioned writer produces); returns the staged
-    * file names relative to `dir` (not yet visible to any reader).
+    * layout Spark's own partitioned writer produces) and return the staged
+    * file names relative to `dir` (not yet visible to any reader) with
+    * their zone maps and `bloomFor` filters, computed by the write tasks
+    * themselves ([[TxStats.WriteStats]]) — one Spark job. Partition
+    * columns are not in the data files; their per-file stats are
+    * synthesized from the path at read time ([[fileStats]]).
     */
-  private def stage(df: DataFrame, dir: String,
-      partitionBy: Seq[String] = Nil): Seq[String] = {
+  private def stage(df: DataFrame, dir: String, partitionBy: Seq[String] = Nil,
+      bloomFor: Seq[String] = Nil): (Seq[String], Map[String, TxStats.FileStats]) = {
     val token = java.util.UUID.randomUUID().toString.take(12)
     val tmp = Paths.get(dir, s"_staging-$token")
-    // Stage timestamps as TIMESTAMP(MICROS), not Spark's INT96 default:
-    // INT96 chunks carry no ordered footer statistics, so the footer
-    // zone-map path silently lost min/max on every TimestampType column
-    // — a quiet data-skipping regression on ts-range predicates. MICROS
-    // footers give exact ordered bounds (the collectFromFooters MICROS
-    // branch), the values are bit-identical either way, and every Spark
-    // reader handles both encodings.
-    val spark = df.sparkSession
-    val tsKey = "spark.sql.parquet.outputTimestampType"
-    val prevTs = spark.conf.getOption(tsKey)
-    spark.conf.set(tsKey, "TIMESTAMP_MICROS")
-    try {
-      val w = df.write.mode("overwrite")
-      (if (partitionBy.isEmpty) w else w.partitionBy(partitionBy: _*))
-        .parquet(tmp.toString)
-    } finally prevTs match {
-      case Some(v) => spark.conf.set(tsKey, v)
-      case None => spark.conf.unset(tsKey)
-    }
+    val tracker = new TxStats.WriteStats(
+      StructType(df.schema.filterNot(f => partitionBy.contains(f.name))),
+      bloomFor, partitionBy.size)
+    org.apache.spark.sql.GraftSqlBridge.writeFiles(df, new MicrosParquet,
+      tmp.toString, partitionBy, Seq(tracker))
     val parts = Files.walk(tmp).iterator().asScala.toSeq
       .filter(_.getFileName.toString.endsWith(".parquet")).sortBy(_.toString)
     val named = parts.zipWithIndex.map { case (p, i) =>
@@ -408,42 +424,21 @@ object TxTable {
       val target = if (rel.isEmpty) Paths.get(dir) else Paths.get(dir, rel)
       Files.createDirectories(target)
       Files.move(p, target.resolve(name))
-      if (rel.isEmpty) name else s"$rel/$name"
+      (if (rel.isEmpty) name else s"$rel/$name",
+        tracker.result.get(tmp.relativize(p).toString))
     }
     // recursive cleanup (partitioned staging nests directories)
     Files.walk(tmp).sorted(java.util.Comparator.reverseOrder())
       .iterator().asScala.foreach(Files.delete)
-    named
+    (named.map(_._1), named.collect { case (n, Some(st)) => n -> st }.toMap)
   }
 
-  /** Stage plus zone-map collection (one column-pruned read-back of the
-    * staged files; a production port lifts the same numbers from the
-    * parquet footers the write produced). Partition columns are not in
-    * the data files — their per-file stats are synthesized from the path
-    * at read time ([[fileStats]]), never collected.
+  /** Bloom columns of the files a rewrite replaces: a rewritten row keeps
+    * the point-lookup index its file had.
     */
-  private def stageWithStats(df: DataFrame, dir: String,
-      bloomFor: Seq[String] = Nil, partitionBy: Seq[String] = Nil)
-      : (Seq[String], Map[String, TxStats.FileStats]) = {
-    val names = stage(df, dir, partitionBy)
-    val dataSchema = StructType(
-      df.schema.filterNot(f => partitionBy.contains(f.name)))
-    val spark = df.sparkSession
-    // Zone maps come from the parquet FOOTERS the stage just wrote — zero
-    // data IO, zero Spark jobs (the scan-based collect was a second full
-    // pass over every committed byte; guide §6). Blooms are the one stat
-    // a footer cannot provide (they hash every value), so `bloomFor`
-    // writes keep the scan; `spark.graft.stats.fromFooters=false` forces
-    // it too (parity escape hatch). Any footer-read failure falls back —
-    // stats are advisory, the commit must not die on them.
-    val stats =
-      if (bloomFor.isEmpty &&
-          spark.conf.get("spark.graft.stats.fromFooters", "true").toBoolean)
-        try TxStats.collectFromFooters(spark, dir, names, dataSchema)
-        catch { case scala.util.control.NonFatal(_) =>
-          TxStats.collect(spark, dir, names, dataSchema) }
-      else TxStats.collect(spark, dir, names, dataSchema, bloomFor = bloomFor)
-    (names, stats)
+  private def bloomsOf(dir: String, base: Long, files: Seq[String]): Seq[String] = {
+    val stats = fileStats(dir, Some(base))
+    files.flatMap(f => stats.get(f).toSeq.flatMap(_.blooms.keys)).distinct.sorted
   }
 
   /** Publish a commit. Appends (`basedOn = None`) are order-independent:
@@ -564,14 +559,6 @@ object TxTable {
           oldNames(f.name)))
     }
 
-  /** Atomic append (order-independent — claims the next free version).
-    *
-    * `bloomFor` opts listed integral/string columns into per-file Bloom
-    * filters alongside the zone maps — the point-lookup complement:
-    * an equality probe on a high-cardinality key in arrival-order
-    * layout passes every file's [min, max], but a Bloom "definitely
-    * absent" prunes it (no false negatives, so always sound).
-    */
   /** Validate + resolve the partitioning a write runs under: inherit the
     * table's, or establish it on first commit. An append can never change
     * the layout; a write naming partition columns checks they exist with
@@ -600,13 +587,23 @@ object TxTable {
     pcols
   }
 
+  /** Atomic append (order-independent — claims the next free version).
+    *
+    * `bloomFor` opts listed integral/string columns into per-file Bloom
+    * filters alongside the zone maps — the point-lookup complement:
+    * an equality probe on a high-cardinality key in arrival-order
+    * layout passes every file's [min, max], but a Bloom "definitely
+    * absent" prunes it (no false negatives, so always sound). Rewrites
+    * (merge, update, delete, and compact without its own `bloomFor`)
+    * keep the Bloom columns of the files they replace.
+    */
   def append(df: DataFrame, dir: String, bloomFor: Seq[String] = Nil,
       opTag: Option[String] = None, partitionBy: Seq[String] = Nil): Long = {
     Files.createDirectories(Paths.get(dir))
     val pcols = resolvePartitioning(dir, df, partitionBy, "append",
       allowChange = false)
     val schema = evolve(dir, df.schema)
-    val (names, stats) = stageWithStats(df, dir, bloomFor, pcols)
+    val (names, stats) = stage(df, dir, pcols, bloomFor)
     publish(dir, "append" + opTag.map(":" + _).getOrElse(""), names, Nil,
       schema.json, basedOn = None, stats = stats, partitionBy = pcols)
   }
@@ -626,7 +623,7 @@ object TxTable {
     requireVersion(dir, expectedVersion, base, "overwrite")
     val pcols = resolvePartitioning(dir, df, partitionBy, "overwrite",
       allowChange = true)
-    val (names, stats) = stageWithStats(df, dir, partitionBy = pcols)
+    val (names, stats) = stage(df, dir, pcols)
     publish(dir, "overwrite", names, activeFiles(dir, Some(base)),
       df.schema.json, basedOn = Some(base), stats = stats,
       partitionBy = pcols)
@@ -660,7 +657,8 @@ object TxTable {
     // a partitioned snapshot re-stages through the partitioned writer —
     // the layout survives OPTIMIZE; targetFiles bounds the write
     // parallelism, per-directory files follow from it
-    val (names, stats) = stageWithStats(arranged, dir, bloomFor, pcols)
+    val blooms = if (bloomFor.nonEmpty) bloomFor else bloomsOf(dir, base, before)
+    val (names, stats) = stage(arranged, dir, pcols, blooms)
     publish(dir, if (zorderBy.isEmpty) "compact" else "zorder",
       names, before, snap.schema.json, basedOn = Some(base), stats = stats,
       partitionBy = pcols)
@@ -729,7 +727,7 @@ object TxTable {
       allStats.get(f).exists(TxStats.mustMatchAll(cond, _)))
     val kept = readFilesAs(spark, dir, rewrite, schema, pcols)
       .where(!coalesce(predicate, lit(false)))
-    val (names, stats) = stageWithStats(kept, dir, partitionBy = pcols)
+    val (names, stats) = stage(kept, dir, pcols, bloomsOf(dir, base, rewrite))
     publish(dir, "delete", names, touched, schema.json,
       basedOn = Some(base), stats = stats, partitionBy = pcols)
   }
@@ -765,7 +763,7 @@ object TxTable {
     require(updated.schema.fields.map(f => (f.name, f.dataType)).sameElements(
       schema.fields.map(f => (f.name, f.dataType))),
       "UPDATE must preserve column types")
-    val (names, stats) = stageWithStats(updated, dir, partitionBy = pcols)
+    val (names, stats) = stage(updated, dir, pcols, bloomsOf(dir, base, touched))
     publish(dir, "update", names, touched, schema.json,
       basedOn = Some(base), stats = stats, partitionBy = pcols)
   }
@@ -782,7 +780,7 @@ object TxTable {
     val op = "merge" + opTag.map(":" + _).getOrElse("")
     requireVersion(dir, expectedVersion, base, op)
     if (base < 0) { // first commit: MERGE into an empty table is an insert
-      val (names0, stats0) = stageWithStats(source, dir)
+      val (names0, stats0) = stage(source, dir)
       return publish(dir, op, names0, Nil,
         evolve(dir, source.schema).json, basedOn = Some(base),
         stats = stats0)
@@ -805,7 +803,7 @@ object TxTable {
       else snap.where(col("__name").isin(touchedBases: _*)).drop("__name")
         .join(srcKeys, keys, "left_anti")
     val newData = kept.unionByName(source)
-    val (names, stats) = stageWithStats(newData, dir, partitionBy = pcols)
+    val (names, stats) = stage(newData, dir, pcols, bloomsOf(dir, base, touched))
     publish(dir, op, names, touched,
       evolve(dir, source.schema).json, basedOn = Some(base), stats = stats,
       partitionBy = pcols)
@@ -921,7 +919,7 @@ object TxTable {
     // again (guide §1.2: don't compute things twice). A fully-cancelled
     // or layout-only apply stages only empty files — dropped here, so the
     // published commit is adds-free exactly as before.
-    val (adds0, stats0) = stageWithStats(newData, dir, partitionBy = pcols)
+    val (adds0, stats0) = stage(newData, dir, pcols)
     val staged = adds0.map(n => stats0.get(n).map(_.rows).getOrElse(1L)).sum
     val (adds, stats) =
       if (staged == 0L) {

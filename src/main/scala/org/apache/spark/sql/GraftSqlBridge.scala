@@ -3,10 +3,11 @@ package org.apache.spark.sql
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
-/** Narrow bridge to two `private[sql]` seams the public API does not expose:
-  * building a DataFrame from a custom LogicalPlan and extracting a Column's
-  * Catalyst expression. Standard practice for Spark extension libraries
-  * (placed in the org.apache.spark.sql package for access, nothing else).
+/** Narrow bridge to the `private[sql]` seams the public API does not expose:
+  * building a DataFrame from a custom LogicalPlan, extracting a Column's
+  * Catalyst expression, and running a file write on the classic session.
+  * Standard practice for Spark extension libraries (placed in the
+  * org.apache.spark.sql package for access, nothing else).
   */
 object GraftSqlBridge {
 
@@ -89,5 +90,38 @@ object GraftSqlBridge {
     val d = df.asInstanceOf[classic.Dataset[Row]]
     d.sparkSession.internalCreateDataFrame(
       d.queryExecution.toRdd, df.schema, isStreaming = false)
+  }
+
+  /** Write `df` as `format` files under `path` (hive-style `col=value/`
+    * directories for `partitionBy`) through Spark's own `FileFormatWriter`
+    * and the session's commit protocol — the machinery `df.write` runs —
+    * with `trackers` attached next to Spark's basic write metrics. Each
+    * tracker's task instances see every written row inside the write tasks,
+    * and its `processStats` receives the reports of committed tasks only.
+    */
+  def writeFiles(df: DataFrame, format: execution.datasources.FileFormat,
+      path: String, partitionBy: Seq[String],
+      trackers: Seq[execution.datasources.WriteJobStatsTracker]): Unit = {
+    import execution.datasources.{BasicWriteJobStatsTracker, FileFormatWriter}
+    val ds = df.asInstanceOf[classic.Dataset[Row]]
+    val spark = ds.sparkSession
+    val qe = ds.queryExecution
+    val conf = spark.sessionState.conf
+    val hadoopConf = spark.sessionState.newHadoopConf()
+    val committer = org.apache.spark.internal.io.FileCommitProtocol.instantiate(
+      conf.fileCommitProtocolClass, java.util.UUID.randomUUID().toString, path)
+    val basic = new BasicWriteJobStatsTracker(
+      new org.apache.spark.util.SerializableConfiguration(hadoopConf),
+      BasicWriteJobStatsTracker.metrics)
+    execution.SQLExecution.withNewExecutionId(qe, Some("save")) {
+      val plan = qe.executedPlan
+      val out = plan.output
+      util.SchemaUtils.checkColumnNameDuplication(out.map(_.name),
+        conf.caseSensitiveAnalysis)
+      FileFormatWriter.write(spark, plan, format, committer,
+        FileFormatWriter.OutputSpec(path, Map.empty, out), hadoopConf,
+        partitionBy.map(c => out.find(a => conf.resolver(a.name, c)).get),
+        bucketSpec = None, statsTrackers = basic +: trackers, options = Map.empty)
+    }
   }
 }

@@ -71,16 +71,12 @@ class TxStatsSpec extends SparkSpec {
     assert(f0.cols("s").lo.contains("apple") && f0.cols("s").hi.contains("banana"))
     assert(f0.cols("t").nulls == 1)
     assert(f0.cols("b") == TxStats.ColStats("l", 1, Some(0L), Some(1L)))
-    // NaN handling, producer-dependent and sound either way: the scan
-    // producer records NaN as the max (Spark's total order, NaN
-    // greatest); the footer producer (the default) falls OPEN on a
-    // NaN-containing chunk, because parquet-mr omits min/max for it —
-    // unbounded can never mis-prune, and `v > 1e300` still keeps the
-    // file (the battery below pins that).
+    // NaN is the max (Spark's total order, NaN greatest), so `v > 1e300`
+    // still keeps the file (the battery below pins that)
     val f1 = byLoK(1)
     val v1 = f1.cols("v")
-    assert(v1.hi.exists(_.asInstanceOf[Double].isNaN) ||
-      (v1.lo.isEmpty && v1.hi.isEmpty), s"unsound NaN bounds: $v1")
+    assert(v1.lo.contains(7.25) && v1.hi.exists(_.asInstanceOf[Double].isNaN),
+      s"unsound NaN bounds: $v1")
     // a >64-char string: lower bound truncated to a sound prefix; the
     // max element ("zebra") is short, so the upper bound stays exact
     val f2 = byLoK(2)
@@ -104,53 +100,193 @@ class TxStatsSpec extends SparkSpec {
     assert(TxTable.readWhere(spark, dir, col("s") > "zzz").count() == 0)
   }
 
-  /** Producer parity: the footer-based collector (the default write
-    * path) must agree with the scan-based collect on every column the
-    * footer can bound — same rows, same null counts, same lo/hi — on a
-    * table that exercises nulls, NaN, -0.0, long strings, booleans and
-    * timestamps. Timestamps are the one allowed divergence: INT96
-    * footers carry no ordered bounds, so lo/hi may fall open (None) —
-    * never a different value.
-    */
-  test("footer-based stats match scan-based stats (bounds exact or open)") {
-    val dir = freshDir("footer")
-    buildTable(dir)
-    val names = TxTable.activeFiles(dir)
-    val schema = StructType(Seq(
-      StructField("k", LongType, nullable = false),
-      StructField("v", DoubleType, nullable = true),
-      StructField("s", StringType, nullable = true),
-      StructField("t", TimestampType, nullable = true),
-      StructField("b", BooleanType, nullable = true)))
-    val scan = TxStats.collect(spark, dir, names, schema)
-    val foot = TxStats.collectFromFooters(spark, dir, names, schema)
-    assert(foot.keySet == scan.keySet)
+  /** Equal stats, NaN == NaN and Bloom words compared bit for bit. */
+  private def assertSameStats(f: String, got: TxStats.FileStats,
+      want: TxStats.FileStats): Unit = {
     def same(a: Option[Any], b: Option[Any]): Boolean = (a, b) match {
-      case (Some(x: Double), Some(y: Double)) =>
-        java.lang.Double.compare(x, y) == 0 // NaN == NaN here
+      case (Some(x: Double), Some(y: Double)) => java.lang.Double.compare(x, y) == 0
       case _ => a == b
     }
-    names.foreach { f =>
-      assert(foot(f).rows == scan(f).rows, s"$f rows")
-      scan(f).cols.foreach { case (c, sc) =>
-        val fc = foot(f).cols.getOrElse(c,
-          fail(s"$f.$c missing from footer stats"))
-        assert(fc.typ == sc.typ && fc.nulls == sc.nulls, s"$f.$c meta")
-        // two allowed open-fallbacks, never a disagreement: INT96
-        // timestamps carry no ordered footer bounds, and parquet-mr
-        // omits min/max for a NaN-containing float/double chunk
-        val mayFallOpen = c == "t" ||
-          (sc.typ == "d" && sc.hi.exists(x =>
-            x.asInstanceOf[Double].isNaN))
-        if (mayFallOpen) {
-          assert(fc.lo.isEmpty || same(fc.lo, sc.lo), s"$f.$c lo")
-          assert(fc.hi.isEmpty || same(fc.hi, sc.hi), s"$f.$c hi")
-        } else { // every other column: bounds must be EXACT — the footer
-          // is the default producer; pruning power must not regress
-          assert(same(fc.lo, sc.lo), s"$f.$c lo ${fc.lo} vs ${sc.lo}")
-          assert(same(fc.hi, sc.hi), s"$f.$c hi ${fc.hi} vs ${sc.hi}")
-        }
-      }
+    assert(got.rows == want.rows, s"$f rows")
+    assert(got.cols.keySet == want.cols.keySet, s"$f columns")
+    want.cols.foreach { case (c, w) =>
+      val g = got.cols(c)
+      assert(g.typ == w.typ && g.nulls == w.nulls, s"$f.$c: $g vs $w")
+      assert(same(g.lo, w.lo) && same(g.hi, w.hi), s"$f.$c bounds: $g vs $w")
+    }
+    assert(got.blooms.keySet == want.blooms.keySet, s"$f bloom columns")
+    want.blooms.foreach { case (c, w) =>
+      assert(got.blooms(c).k == w.k && got.blooms(c).words.sameElements(w.words),
+        s"$f.$c bloom words differ")
+    }
+  }
+
+  /** Producer parity: the zone maps and Bloom filters the write tasks
+    * compute must be IDENTICAL to the scan-based reference
+    * ([[ScanStats.collect]], Spark's own min/max/count and a Bloom
+    * aggregate over the files read back) — rows, null counts, lo/hi and
+    * Bloom words — on every edge the normalization has: nulls, NaN, -0.0,
+    * strings past the cap, a supplementary code point straddling the cap,
+    * booleans, dates, timestamps, narrow integrals, an all-null file, an
+    * empty staged file, and a partitioned write.
+    */
+  test("in-write stats match the scan-based reference exactly (bounds and Bloom words)") {
+    val schema = StructType(Seq(
+      StructField("k", LongType, nullable = false),
+      StructField("i", IntegerType), StructField("h", ShortType),
+      StructField("v", DoubleType), StructField("f", FloatType),
+      StructField("s", StringType), StructField("b", BooleanType),
+      StructField("d", DateType), StructField("t", TimestampType),
+      StructField("p", StringType)))
+    def frame(rows: Seq[Row], parts: Int): DataFrame =
+      spark.createDataFrame(new java.util.ArrayList[Row](rows.asJava), schema)
+        .repartition(parts)
+    def d(x: String) = java.sql.Date.valueOf(x)
+    val emoji = "\uD83D\uDE00" // one supplementary code point, two chars
+    val rowsA = Seq(
+      Row(1L, 1, 1.toShort, 1.5, 1.5f, "apple", true, d("2020-01-01"),
+        ts("2020-01-01 00:00:00"), "x"),
+      Row(2L, null, null, null, Float.NaN, "a" * 63 + emoji + "b", false,
+        d("1969-12-31"), ts("1969-12-31 23:59:59.999999"), "y"),
+      Row(3L, -5, (-2).toShort, -0.0, -0.0f, null, null, null, null, "x"),
+      Row(4L, 7, 9.toShort, Double.NaN, 2.5f, "x" * 200, true, d("2021-06-01"),
+        ts("2021-06-01 12:00:00.123456"), "y"))
+    val rowsB = Seq(
+      Row(10L, 0, 0.toShort, 0.0, 0.0f, "a" * 64 + emoji, true, d("2020-02-02"),
+        ts("2020-02-02 00:00:00"), "x"),
+      Row(11L, 3, 3.toShort, -0.0, -0.0f, "zz", false, d("2020-02-03"),
+        ts("2020-02-03 00:00:00"), "x"),
+      Row(12L, 4, 4.toShort, -1e300, Float.MaxValue, "\u00e9t\u00e9", true,
+        d("2020-02-04"), ts("2020-02-04 00:00:00"), "y"))
+    val allNull = Seq(Row(20L, null, null, null, null, null, null, null, null, "x"))
+    // 40 supplementary code points: the 64-char cut falls between pairs
+    val emojis = Seq(Row(30L, 1, 1.toShort, 1.0, 1.0f, emoji * 40, true,
+      d("2020-03-01"), ts("2020-03-01 00:00:00"), "y"))
+    val blooms = Seq("k", "s")
+
+    def check(dir: String, pcols: Seq[String]): Unit = {
+      val files = TxTable.activeFiles(dir)
+      val dataSchema = StructType(schema.filterNot(f => pcols.contains(f.name)))
+      val want = ScanStats.collect(spark, dir, files, dataSchema, blooms)
+      val got = TxTable.fileStats(dir)
+      files.foreach(f => assertSameStats(f,
+        got(f).copy(cols = got(f).cols -- pcols), want(f)))
+    }
+
+    val flat = freshDir("parity")
+    TxTable.append(frame(rowsA, 1), flat, bloomFor = blooms)
+    TxTable.append(frame(rowsB, 2), flat, bloomFor = blooms)
+    TxTable.append(frame(allNull, 1), flat, bloomFor = blooms)
+    TxTable.append(frame(emojis, 1), flat, bloomFor = blooms)
+    TxTable.append(frame(Nil, 1), flat, bloomFor = blooms)
+    check(flat, Nil)
+    val stats = TxTable.fileStats(flat).values.toSeq
+    // the edges were really exercised
+    assert(stats.exists(_.rows == 0), "no empty staged file")
+    assert(stats.exists(_.cols("v").hi.exists(_.asInstanceOf[Double].isNaN)))
+    assert(stats.exists(_.cols("s").lo.contains("a" * 63)),
+      "a supplementary code point at the cap is cut before it, not split")
+    assert(stats.exists(_.cols("s").lo.contains(emoji * 32)))
+
+    val parted = freshDir("parity_part")
+    TxTable.append(frame(rowsA ++ allNull, 2), parted, bloomFor = blooms,
+      partitionBy = Seq("p"))
+    TxTable.append(frame(rowsB, 1), parted, bloomFor = blooms)
+    assert(TxTable.activeFiles(parted).forall(_.startsWith("p=")))
+    check(parted, Seq("p"))
+  }
+
+  /** Properties of every Spark job `body` starts (seen by a listener
+    * keyed by a fresh job group).
+    */
+  private def jobsOf(body: => Unit): Seq[java.util.Properties] = {
+    val sc = spark.sparkContext
+    val group = s"txjobs-${java.util.UUID.randomUUID()}"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[java.util.Properties]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).filter(p => p.getProperty("spark.jobGroup.id") == group)
+          .foreach(jobs.add)
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "tx jobs", interruptOnCancel = false)
+      try body finally sc.clearJobGroup()
+      org.apache.spark.ListenerBusDrain(sc)
+    } finally sc.removeSparkListener(listener)
+    jobs.asScala.toSeq
+  }
+
+  test("a Bloom append of a local DataFrame runs exactly one Spark job") {
+    val dir = freshDir("onejob")
+    val s = spark
+    import s.implicits._
+    val df = (1L to 500L).map(i => (i, s"user-$i", i * 0.5)).toDF("k", "u", "x")
+    TxTable.append(df, dir, bloomFor = Seq("k"))
+    val jobs = jobsOf(TxTable.append(df, dir, bloomFor = Seq("k")))
+    assert(jobs.size == 1, s"a Bloom append ran ${jobs.size} Spark jobs")
+    assert(TxTable.fileStats(dir).size == TxTable.activeFiles(dir).size)
+  }
+
+  test("rewrites keep the Bloom filters of the files they replace") {
+    val dir = freshDir("keepbloom")
+    val s = spark
+    import s.implicits._
+    // even keys only: an odd key inside [min, max] is prunable by Bloom alone
+    def part(lo: Long) = (lo until lo + 1000L by 2L).map(k => (k, k % 7, 1.0))
+      .toDF("k", "g", "v").repartition(1)
+    TxTable.append(part(0L), dir, bloomFor = Seq("k"))
+    TxTable.append(part(1000L), dir, bloomFor = Seq("k"))
+    def assertBloomed(after: String, absent: Long): Unit = {
+      val stats = TxTable.fileStats(dir)
+      TxTable.activeFiles(dir).foreach(f => assert(stats(f).blooms.contains("k"),
+        s"after $after, $f lost its Bloom filter"))
+      val (kept, _) = TxTable.pruneFiles(spark, dir, col("k") === absent)
+      assert(kept.isEmpty, s"after $after, an absent key still reads $kept")
+    }
+    val before = TxTable.activeFiles(dir).toSet
+    TxTable.update(spark, dir, col("k") === 4L, Map("v" -> lit(2.0)))
+    val rewritten = TxTable.activeFiles(dir).filterNot(before)
+    assert(rewritten.size == 1)
+    val (_, skipped) = TxTable.pruneFiles(spark, dir, col("k") === 5L)
+    assert(skipped.contains(rewritten.head), "the updated file must prune on its Bloom")
+    assertBloomed("update", 5L)
+    TxTable.delete(spark, dir, col("k") === 1002L)
+    assertBloomed("delete", 1003L)
+    TxTable.merge(spark, dir, Seq((6L, 1L, 3.0)).toDF("k", "g", "v"), Seq("k"))
+    assertBloomed("merge", 7L)
+    TxTable.compact(spark, dir)
+    assertBloomed("compact", 9L)
+    assert(TxTable.read(spark, dir).count() == 999L)
+  }
+
+  test("staging writes TIMESTAMP(MICROS) without changing the session conf") {
+    import org.apache.parquet.schema.LogicalTypeAnnotation
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+    val dir = freshDir("int96")
+    val key = "spark.sql.parquet.outputTimestampType"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "INT96")
+    try {
+      // the write job runs under the session's SQL conf, so the session
+      // value must stay INT96 during the append, not only after it
+      val jobs = jobsOf(TxTable.append(mixedDf(Seq(
+        (1L, 1.0, "a", ts("2020-01-01 00:00:00"), java.lang.Boolean.TRUE))), dir))
+      assert(jobs.nonEmpty && jobs.forall(_.getProperty(key) == "INT96"),
+        "append changed the session conf while writing")
+      assert(spark.conf.get(key) == "INT96", "append changed the session conf")
+      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(s"$dir/${TxTable.activeFiles(dir).head}"),
+          new org.apache.hadoop.conf.Configuration()))
+      val t = try reader.getFooter.getFileMetaData.getSchema.getType(Seq("t"): _*).asPrimitiveType
+        finally reader.close()
+      assert(t.getPrimitiveTypeName == PrimitiveTypeName.INT64)
+      assert(t.getLogicalTypeAnnotation == LogicalTypeAnnotation.timestampType(
+        true, LogicalTypeAnnotation.TimeUnit.MICROS))
+    } finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
     }
   }
 
@@ -325,10 +461,8 @@ class TxStatsSpec extends SparkSpec {
 
   test("timestamp columns keep ordered zone-map bounds and prune " +
       "(MICROS staging, r15)") {
-    // stage() writes TIMESTAMP_MICROS, so the default footer collector
-    // records ordered ts bounds — before r15, Spark's INT96 default made
-    // every TimestampType column fall open and ts-range predicates never
-    // pruned a file
+    // every TimestampType column gets ordered bounds (epoch micros), so
+    // ts-range predicates prune files
     val dir = freshDir("tsbounds")
     TxTable.append(mixedDf(Seq(
       (1L, 1.0, "a", ts("2020-01-01 00:00:00"), java.lang.Boolean.TRUE),

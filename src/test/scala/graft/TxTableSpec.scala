@@ -40,6 +40,14 @@ class TxTableSpec extends SparkSpec {
     assert(slurp(dir, Some(0L)) == Set(1L -> "a", 2L -> "b"))
   }
 
+  test("a write with duplicate column names is refused and commits nothing") {
+    val dir = freshDir("dupcols")
+    intercept[org.apache.spark.sql.AnalysisException] {
+      TxTable.append(df(1L -> "a").toDF("k", "k"), dir)
+    }
+    assert(TxTable.currentVersion(dir) == -1L)
+  }
+
   test("overwrite replaces the snapshot; history keeps the old one") {
     val dir = freshDir("overwrite")
     TxTable.append(df(1L -> "a"), dir)
