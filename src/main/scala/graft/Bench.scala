@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.core.GraftSession
 
 /** Benchmark main (driver contract): runs the headline queries on
   * SPARK_GRAFT_SF_DIR and prints one JSON line.
@@ -354,22 +354,8 @@ object Bench {
     // size them to ~128-200 MB of shuffle data each) — the knob exists so
     // the sf1 scale proof can measure exactly that.
     val shufflePartitions = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      // static conf, default 100: the generated-class cache is keyed by
-      // codegen source, and a multi-hundred-query run holds far more than
-      // 100 distinct codegen units — at the default every pass re-compiles
-      // (Janino) every query's whole-stage code, which is pure fixed
-      // overhead in steady state (guide §1.2: per-task work after shape).
-      // Scale-independent: it caches compiled CODE, never data or results.
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
+    val spark = GraftSession
+      .builder(s"local[$cpus]", shufflePartitions.toInt)
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 

@@ -1,9 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
-import graft.core.Tables
+import graft.core.{GraftSession, Tables}
 import graft.operators.CurationPipeline
 
 /** Corpus-scale bench of the composed curation chain (BENCH_SCALE
@@ -35,15 +34,8 @@ object ChainBench {
     val storageName = sys.env.getOrElse("SPARK_GRAFT_CHAIN_STORAGE",
       "MEMORY_AND_DISK")
     val storage = StorageLevel.fromString(storageName)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
+    val spark = GraftSession
+      .builder(s"local[$cpus]", cpus.toInt)
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 

@@ -2,16 +2,33 @@ package graft.core
 
 import org.apache.spark.sql.SparkSession
 
-/** SparkSession factory with the engine's standard configuration.
+/** The engine's only SparkSession factory: every main and the test
+  * session build through [[builder]], passing their master and shuffle
+  * partitions; a caller adds a `.config` on the returned builder only for
+  * a setting that is specific to it, never a copy of the standard ones.
   *
   * Mirrors the reference's session conventions (UTC session timezone,
   * `gps-analytics/src/pipeline/geocode_stop_locations.scala:19`; shuffle
   * partition tuning, `compiled-bookdown/06-mobility.Rmd:227`) but sized for
-  * this harness: `local[32]`, AQE on, shuffle.partitions=32. On a real
-  * cluster the same builder is used with `master` unset and
-  * `shufflePartitions` sized to ~2-3x total cores.
+  * this harness: `local[32]` unless `SPARK_GRAFT_CPUS` says otherwise, AQE
+  * on, shuffle.partitions=32. On a real cluster the same builder is used
+  * with `master` unset and `shufflePartitions` sized to ~2-3x total cores.
+  *
+  * The generated-code cache is process-wide: Spark sizes it once per JVM,
+  * from the conf of whichever session first triggers codegen, so a session
+  * built anywhere else can silently bring back the 100-entry default.
   */
 object GraftSession {
+
+  /** Generated-class cache entries (static conf, Spark's default is 100).
+    * The cache is keyed by codegen source, and a multi-query run holds far
+    * more than 100 distinct codegen units — at the default every pass
+    * re-compiles (Janino) every query's whole-stage code and then runs
+    * classes the JIT has never seen, which is pure fixed overhead in
+    * steady state. Scale-independent: it caches compiled CODE, never data
+    * or results.
+    */
+  private val CodegenCacheEntries = 10000
 
   def builder(
       master: String = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]",
@@ -22,6 +39,7 @@ object GraftSession {
       .master(master)
       .appName(appName)
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
@@ -31,7 +49,7 @@ object GraftSession {
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       // Parquet scan sizing: at 100 TB this is the knob that keeps input
       // partitions ~128MB; harmless locally.
-      .config("spark.sql.files.maxPartitionBytes", "134217728")
+      .config("spark.sql.files.maxPartitionBytes", "128MB")
       // Runtime skew-join splitting (the AQE complement to the explicit
       // salting in SkewJoin/q93): oversized post-shuffle partitions are
       // split at runtime. On by default in Spark 4; pinned so a cluster's

@@ -20,11 +20,16 @@ object Tables {
     * repeated inference is pure single-threaded driver overhead (guide
     * §5/§7.3). The memo hands `DataFrameReader.schema` the known
     * StructType, which skips inference entirely; execution still reads
-    * every row from parquet. Keyed by path string: testdata fixtures
-    * are immutable for the life of a process (the driver contract).
+    * every row from parquet. One entry per path, holding the file's
+    * `mtime:size` stamp with its schema: a fixture regenerated in place
+    * within one JVM (test/regen flows) gets a fresh inference that
+    * replaces the stale entry instead of adding one. One stat call per
+    * frame construction — still zero footer reads when warm.
     */
-  private val schemaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
+  private val schemaCache = new java.util.concurrent.ConcurrentHashMap[
+    String, (String, org.apache.spark.sql.types.StructType)]()
+
+  private[graft] def schemaMemoSize: Int = schemaCache.size
 
   /** Timestamp normalization across driver testdata generations: the
     * events table has shipped as TIMESTAMP(NANOS) (read as long under
@@ -39,14 +44,11 @@ object Tables {
     import org.apache.spark.sql.functions.col
     import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
     val path = s"$dir/$name.parquet"
-    // Memo key carries the file's (mtime, size): a fixture regenerated
-    // in-place within one JVM (test/regen flows) gets a fresh inference
-    // instead of a stale schema silently miscasting columns. One stat
-    // call per frame construction — still zero footer reads when warm.
     val f = new java.io.File(path)
-    val key = s"$path@${f.lastModified}:${f.length}"
-    val schema = schemaCache.computeIfAbsent(key,
-      _ => spark.read.parquet(path).schema)
+    val stamp = s"${f.lastModified}:${f.length}"
+    val (_, schema) = schemaCache.compute(path, (_, memo) =>
+      if (memo != null && memo._1 == stamp) memo
+      else (stamp, spark.read.parquet(path).schema))
     val df = spark.read.schema(schema).parquet(path)
     val withTs =
       if (df.schema.exists(f => f.name == "ts" && f.dataType == LongType))

@@ -9,7 +9,7 @@ import graft.functions._
   * they are usable from SQL and `call_function` alike.
   *
   * Install via `spark.sql.extensions=graft.plans.GraftExtensions` (set by
-  * `GraftSession`/`Verify`/`Bench`) or `.withExtensions(new GraftExtensions)`.
+  * `GraftSession.builder`) or `.withExtensions(new GraftExtensions)`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 

@@ -925,20 +925,23 @@ object TxTable {
       if (staged == 0L) {
         // delete the staged files AND any partition subdirectories the
         // stage created for them — a replica receiving many cancelled /
-        // layout-only syncs must not accumulate empty col=value/ dirs
+        // layout-only syncs must not accumulate empty col=value/ dirs.
+        // The delete itself is the emptiness test: a concurrent stage may
+        // create a file in a directory at any moment, and a directory that
+        // is not empty (or already gone) ends the climb.
         val root = Paths.get(dir)
-        def dirEmpty(p: java.nio.file.Path): Boolean = {
-          val s = Files.list(p)
-          try !s.iterator().hasNext finally s.close()
-        }
         adds0.foreach { n =>
           val p = Paths.get(dir, n)
           Files.deleteIfExists(p)
           var parent = p.getParent
-          while (parent != null && parent != root &&
-              Files.isDirectory(parent) && dirEmpty(parent)) {
-            Files.delete(parent)
-            parent = parent.getParent
+          try {
+            while (parent != null && parent != root) {
+              Files.delete(parent)
+              parent = parent.getParent
+            }
+          } catch {
+            case _: java.nio.file.DirectoryNotEmptyException |
+                _: java.nio.file.NoSuchFileException =>
           }
         }
         (Seq.empty[String], Map.empty[String, TxStats.FileStats])

@@ -306,6 +306,24 @@ class PartitionedTxSpec extends SparkSpec {
     assert(graft.sources.TxSync.replicate(spark, src, dst, Seq("k")) == 0)
   }
 
+  test("an empty sync apply keeps partition directories that hold live files") {
+    val src = freshDir("empty_sync_src")
+    val dst = freshDir("empty_sync_dst")
+    TxTable.append(sample(), src, partitionBy = Seq("region"))
+    TxTable.append(sample().where(lit(false)), dst, partitionBy = Seq("day"))
+    graft.sources.TxSync.replicate(spark, src, dst, Seq("k"))
+    val live = TxTable.activeFiles(dst)
+    assert(live.nonEmpty && live.forall(_.startsWith("day=")), live)
+    TxTable.compact(spark, src, targetFiles = 1) // layout-only: empty apply
+    assert(graft.sources.TxSync.replicate(spark, src, dst, Seq("k")) == 1)
+    assert(TxTable.activeFiles(dst) == live)
+    live.foreach { f =>
+      val p = java.nio.file.Paths.get(dst, f)
+      assert(java.nio.file.Files.isRegularFile(p), f)
+    }
+    assert(TxTable.read(spark, dst).count() == 60)
+  }
+
   test("vacuum reclaims nested files dropped by overwrite") {
     val dir = freshDir("vacuum")
     TxTable.append(sample(), dir, partitionBy = Seq("region"))

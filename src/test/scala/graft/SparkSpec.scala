@@ -1,11 +1,12 @@
 package graft
 
+import graft.core.GraftSession
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for Spark-backed specs (small shuffle fan-out for
-  * unit-scale data; extensions registered like production sessions).
+/** Shared local session for Spark-backed specs: the production factory
+  * with a small shuffle fan-out for unit-scale data.
   */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
@@ -13,14 +14,8 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
+    val s = GraftSession
+      .builder("local[2]", shufflePartitions = 2, appName = "graft-test")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
