@@ -1,18 +1,24 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.collection.mutable
+import org.apache.spark.{GraftCheckpointBridge, HashPartitioner, Partitioner}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
-import graft.functions.TextFunctions
+import org.apache.spark.sql.types._
+import graft.functions.{MinHashExpr, ShinglesExpr, TextFunctions}
 
 /** Document deduplication suite for training-data pipelines: exact hash,
   * n-gram Jaccard, MinHash+LSH banding, SimHash.
   *
-  * Everything is declarative (higher-order array functions over a md5-based
-  * 60-bit hash both engines compute identically), so the whole suite is
-  * DuckDB-oracle-checkable and stays inside Catalyst. Scale shape: MinHash
-  * LSH is the linear-time path — signatures are one map-side pass; the only
-  * shuffle is the band-key self-join, whose fan-in per key is bounded by
-  * bucket size, not corpus size. Exact/Jaccard pairwise verification is
+  * Every hash is md5-based and both engines compute it identically (the
+  * shingle and MinHash kernels are native Catalyst expressions with the
+  * values of their SQL form), so the whole suite is DuckDB-oracle-checkable.
+  * Scale shape: MinHash LSH is the linear-time path — signatures are one
+  * map-side pass; the only shuffle is the band-key self-join, whose fan-in
+  * per key is bounded by bucket size, not corpus size, and near-dup
+  * components skip even that. Exact/Jaccard pairwise verification is
   * reserved for in-bucket candidates.
   */
 object Dedup {
@@ -31,57 +37,35 @@ object Dedup {
       .groupBy("fp")
       .agg(min(col(idCol)).as("keep_id"), count(lit(1)).as("n_dups"))
 
-  /** Word n-gram shingles of lower-cased text (1-based slice, inclusive
-    * sequence — mirrors DuckDB `range`/list indexing exactly).
+  /** Word n-gram shingles of lower-cased text, the tokens split once per
+    * row (native kernel, [[graft.functions.MinHash.shingles]]): the DuckDB
+    * `range`/list-slice form, 1-based and inclusive. A text of fewer than
+    * `n` tokens has no shingle (empty array).
     */
-  def shingles(text: Column, n: Int): Column = {
-    val w = TextFunctions.tokens(text)
-    transform(sequence(lit(1), size(w) - (n - 1)),
-      i => array_join(slice(w, i, lit(n)), " "))
-  }
+  def shingles(text: Column, n: Int): Column = GraftSqlBridge.column(
+    ShinglesExpr(GraftSqlBridge.expression(TextFunctions.tokens(text)), n))
 
-  /** Per-shingle base hash: md5-60bit mod `baseMod` (engine-portable). */
-  private def baseHashes(text: Column, p: MinHashParams): Column =
-    transform(shingles(text, p.shingleSize),
-      s => TextFunctions.hash60(s) % p.baseMod)
-
-  /** MinHash signature: for perm i, min over shingles of
-    * ((2i+1)*h + 98765i + 12345) mod prime.
-    */
-  def minhashSignature(text: Column, p: MinHashParams = MinHashParams()): Column = {
-    val hs = baseHashes(text, p)
-    array((0 until p.numPerms).map { i =>
-      val a = 2L * i + 1; val b = 98765L * i + 12345L
-      array_min(transform(hs, h => (h * a + b) % p.prime))
-    }: _*)
-  }
-
-  /** LSH banding keys per doc. Base hashes are materialized through an
-    * `explode` generator (one md5 per shingle, total) and the 32 permuted
-    * minima become 32 `min` aggregates of one hash-per-row frame — inlining
-    * the signature into band expressions instead would replay the md5
-    * hashing per perm/band and explode codegen compile time (measured 51s
-    * on the sf0.1 bench vs ~1s this way).
-    */
-  /** Per-doc signature frame `(doc, s0..s{numPerms-1})` via the exploded
-    * min-aggregate path (one md5 per shingle total — see `bandKeysRows`'s
-    * codegen note). Shared by LSH banding and the estimator-accuracy
-    * measurement (q195).
+  /** Per-doc signature frame `(doc, s0..s{numPerms-1})`, one row per input
+    * row (doc ids are expected unique): one native pass per document
+    * ([[graft.functions.MinHash.signature]]) hashes each shingle once and
+    * folds every permutation; no shuffle, so it is streaming-safe. Docs of
+    * fewer than `shingleSize` tokens have no shingle and are dropped.
+    * Shared by LSH banding and the estimator-accuracy measurement (q195).
     */
   def signatures(
       docs: DataFrame, idCol: String, textCol: String, p: MinHashParams): DataFrame = {
-    val hsRows = docs
-      .where(size(TextFunctions.tokens(col(textCol))) >= p.shingleSize)
-      .select(col(idCol).as("doc"),
-        explode(transform(shingles(col(textCol), p.shingleSize),
-          s => TextFunctions.hash60(s) % p.baseMod)).as("h"))
-    val sigCols = (0 until p.numPerms).map { i =>
-      val a = 2L * i + 1; val b = 98765L * i + 12345L
-      min((col("h") * a + b) % p.prime).as(s"s$i")
-    }
-    hsRows.groupBy("doc").agg(sigCols.head, sigCols.tail: _*)
+    val tokens = TextFunctions.tokens(col(textCol))
+    val sig = GraftSqlBridge.column(MinHashExpr(GraftSqlBridge.expression(tokens),
+      p.shingleSize, p.numPerms, p.baseMod, p.prime))
+    docs
+      .where(size(tokens) >= p.shingleSize)
+      .select(col(idCol).as("doc"), sig.as("sig"))
+      .select(col("doc") +: (0 until p.numPerms).map(i => col("sig")(i).as(s"s$i")): _*)
   }
 
+  /** LSH banding keys `(doc, band, key)`: band `b`'s key joins signature
+    * entries `b·rows .. b·rows + rows - 1` with '_'.
+    */
   def bandKeysRows(
       docs: DataFrame, idCol: String, textCol: String, p: MinHashParams): DataFrame = {
     val rows = p.numPerms / p.bands
@@ -92,6 +76,21 @@ object Dedup {
     }
     sig.select(col("doc"), explode(array(bandStructs: _*)).as("bk"))
       .select(col("doc"), col("bk.band").as("band"), col("bk.key").as("key"))
+  }
+
+  /** `bandKeysRows` with at most `maxBucket` docs per (band, key) bucket,
+    * the smallest ids kept (deterministic).
+    */
+  private def cappedBandRows(docs: DataFrame, idCol: String, textCol: String,
+      p: MinHashParams, maxBucket: Int): DataFrame = {
+    val keyed = bandKeysRows(docs, idCol, textCol, p)
+    if (maxBucket == Int.MaxValue) keyed
+    else {
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy("band", "key").orderBy("doc")
+      keyed.withColumn("rn", row_number().over(w))
+        .where(col("rn") <= maxBucket).drop("rn")
+    }
   }
 
   /** Candidate near-duplicate pairs: docs sharing any band bucket.
@@ -109,15 +108,7 @@ object Dedup {
       docs: DataFrame, idCol: String, textCol: String,
       p: MinHashParams = MinHashParams(),
       maxBucket: Int = Int.MaxValue): DataFrame = {
-    val keyedAll = bandKeysRows(docs, idCol, textCol, p)
-    val keyed =
-      if (maxBucket == Int.MaxValue) keyedAll
-      else {
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy("band", "key").orderBy("doc")
-        keyedAll.withColumn("rn", row_number().over(w))
-          .where(col("rn") <= maxBucket).drop("rn")
-      }
+    val keyed = cappedBandRows(docs, idCol, textCol, p, maxBucket)
     keyed.as("a").join(keyed.as("b"),
         col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
           col("a.doc") < col("b.doc"))
@@ -212,97 +203,158 @@ object Dedup {
       .select(col("doc"), sim.as("sim"))
   }
 
-  /** Distributed connected components over an (id1, id2) pair graph by
-    * iterative min-label propagation WITH pointer jumping: each round
-    * takes label(v) <- min over neighbors' labels, then shortcuts through
-    * the label mapping itself (label(v) <- label(label(v))), which halves
-    * remaining path lengths — convergence is O(log diameter) rounds, so
-    * the default `maxIter` covers any realistic chain (LSH duplicate
-    * clusters are near-cliques and settle in 2-3 rounds). Each round is
-    * three key shuffles; lineage is truncated per round with an eager
-    * checkpoint (reliable when the session has a checkpoint dir, executor-
-    * local otherwise). `Dataset.unpersist` is a no-op on checkpoint-backed
-    * frames (their storage is not in the CacheManager), so each
-    * generation is reclaimed through the `LogicalRDD`'s RDD handle once
-    * the next generation is materialized — `unpersist()` for
-    * localCheckpoint blocks, checkpoint-FILE deletion
-    * (`GraftCheckpointBridge.cleanCheckpointFiles`) for reliable
-    * checkpoints, where unpersist would touch nothing. The FINAL
-    * generation's storage is deliberately retained: it IS the returned
-    * frame's only materialization and is not recomputable once deleted
-    * (localCheckpoint truncates lineage; reliable files are the data), so
-    * freeing it would turn any later read into a hard failure. It is two
-    * longs per node — released with the session / checkpoint-dir cleanup.
-    * Note localCheckpoint blocks die with their executor — set a
-    * checkpoint dir on long multi-hour runs.
-    * Convergence is detected from a `chg` flag carried INSIDE the
-    * materialized frame (did this round change the node's label?), so the
-    * check is a filter-count over already-checkpointed blocks, not an
-    * extra self-join per round. Nothing is collected to the driver except
-    * that count — the scale-safe replacement for driver-side union-find.
-    * THROWS on non-convergence rather than returning split components.
-    *
-    * Returns (id, label) for every node that appears in `pairs`, where
-    * label is the minimum id in the node's component.
+  /** Connected components of an `(id1, id2)` pair graph: `(id, label)` for
+    * every id that appears in `pairs`, label = the minimum id of its
+    * component. Ids may be of any integral, decimal, string, date or
+    * timestamp type (the same in both columns); rows with a null id are
+    * ignored. Nothing is collected to the driver. [[components]] gives
+    * the algorithm, the per-task memory bound and when Spark jobs run.
+    * THROWS when labels still change after `maxIter` propagation rounds,
+    * rather than return split components.
     */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
-    val spark = pairs.sparkSession
-    val reliable = spark.sparkContext.getCheckpointDir.isDefined
-    val edges = pairs
-      .select(col("id1").as("src"), col("id2").as("dst"))
-      .union(pairs.select(col("id2").as("src"), col("id1").as("dst")))
-      .persist()
-    // (frame with truncated lineage, handle that releases its storage).
-    // checkpoint()/localCheckpoint() store InternalRows directly — no
-    // Row round-trip — and are eager by default.
-    def cut(df: DataFrame): (DataFrame, () => Unit) = {
-      val out = if (reliable) df.checkpoint() else df.localCheckpoint()
-      val handle = org.apache.spark.sql.GraftSqlBridge.materializedRdd(out)
-      val free = () => handle.foreach { rdd =>
-        if (reliable) org.apache.spark.GraftCheckpointBridge.cleanCheckpointFiles(rdd)
-        else rdd.unpersist(false)
+    val Seq(t1, t2) = Seq("id1", "id2").map(pairs.schema(_).dataType)
+    require(t1 == t2, s"connectedComponents needs one id type; id1 is " +
+      s"${t1.typeName}, id2 is ${t2.typeName}")
+    components(pairs.select("id1", "id2"), groups = false, maxIter)
+  }
+
+  /** Components of a graph given as two-column rows `(a, b)`.
+    *
+    * Edge mode (`groups = false`): a row is an edge between ids `a` and
+    * `b`. Group mode: a row says id `b` is a member of group `a` (an LSH
+    * bucket); ids that share a group are connected, and groups are not
+    * ids. Returns `(id, label)` for every id, label = the minimum id of
+    * its component.
+    *
+    *  1. Each input partition runs a union-find over its own rows (the
+    *     least id of a set is its root; path compression). This is narrow:
+    *     no shuffle. A task holds at most the distinct ids, and in group
+    *     mode the groups, of its one input partition.
+    *  1. With one input partition the local roots are the components: the
+    *     frame is returned lazily, with no round, no checkpoint and no
+    *     Spark job at construction time.
+    *  1. Otherwise every id and group is shuffled with its local root in
+    *     each partition it occurs in; a key with several distinct roots
+    *     links them. The links form the contracted graph of local roots
+    *     (at most one link per key and extra partition), whose components
+    *     come from [[propagate]]; an id's label is its root's label. The
+    *     partition count comes from the input.
+    *
+    * An input whose plan has a shuffle is planned adaptively, and Spark
+    * runs those shuffle stages when the frame is built.
+    */
+  private def components(rows: DataFrame, groups: Boolean, maxIter: Int): DataFrame = {
+    val Seq(aType, idType) = rows.schema.fields.toSeq.map(_.dataType)
+    require(idType match {
+      case ByteType | ShortType | IntegerType | LongType | _: DecimalType |
+          _: StringType | DateType | TimestampType | TimestampNTZType => true
+      case _ => false
+    }, s"component ids must be integral, decimal, string, date or " +
+      s"timestamp; got ${idType.typeName}")
+    val input = GraftSqlBridge.internalRdd(rows)
+    val single = input.getNumPartitions <= 1
+    // ((is a group, id or group), local root) for each of a partition's
+    // keys; groups only matter when they can span partitions
+    val local = input.mapPartitions { it =>
+      val uf = new UnionFind[Any](IdOrdering)
+      val firstOf = mutable.HashMap.empty[Any, Any]
+      it.foreach { r =>
+        if (!r.isNullAt(0) && !r.isNullAt(1)) {
+          val a = InternalRow.copyValue(r.get(0, aType))
+          val b = InternalRow.copyValue(r.get(1, idType))
+          uf.union(if (groups) firstOf.getOrElseUpdate(a, b) else a, b)
+        }
       }
-      (out, free)
+      val ids = uf.roots.map { case (id, root) => ((false, id), root) }
+      if (single) ids
+      else ids ++ firstOf.iterator.map { case (g, id) => ((true, g), uf.find(id)) }
     }
-    var (labels, freeLabels) = cut(edges.groupBy("src").agg(min("dst").as("nbr"))
-      .select(col("src").as("id"), least(col("src"), col("nbr")).as("label")))
+    val labels: RDD[InternalRow] =
+      if (single)
+        local.collect { case ((false, id), root) => InternalRow(id, root) }
+      else {
+        val part = new HashPartitioner(input.getNumPartitions)
+        val keyRoots = local.groupByKey(part)
+          .mapValues(_.toArray.distinct.sorted(IdOrdering))
+        val links = keyRoots.flatMap { case (_, rs) => rs.iterator.drop(1).map(r => (rs(0), r)) }
+        val rootLabel = propagate(links, part, maxIter)
+        keyRoots.collect { case ((false, id), rs) => (rs(0), id) }
+          .leftOuterJoin(rootLabel)
+          .map { case (root, (id, label)) => InternalRow(id, label.getOrElse(root)) }
+      }
+    GraftSqlBridge.internalFrame(rows.sparkSession, labels, StructType(Seq(
+      StructField("id", idType, nullable = false),
+      StructField("label", idType, nullable = false))))
+  }
+
+  /** Min-label propagation with pointer jumping over the undirected graph
+    * `links`: `(node, label)` per node, label = least node of its
+    * component. Each round takes label(v) <- min over neighbours' labels,
+    * then (from round 2 on) label(v) <- label_prev(label(v)), which halves
+    * the remaining path lengths: rounds grow with log(diameter). Adjacency
+    * and labels are co-partitioned by `part`, so the neighbour and label
+    * joins are narrow.
+    *
+    * Each round is ONE Spark job: the count of changed labels is the
+    * action that materializes the generation's checkpoint — executor-local
+    * blocks, or reliable files when the context has a checkpoint dir (one
+    * more job, which writes them). Once the next generation exists the
+    * previous one is freed: its blocks unpersisted, its checkpoint files
+    * deleted (`unpersist` does not touch those). The final generation is
+    * retained: after the lineage cut it is the labels' only
+    * materialization, so freeing it would make any later read fail; it is
+    * released with the session or checkpoint-dir cleanup. Local blocks die
+    * with their executor — set a checkpoint dir on long multi-hour runs.
+    */
+  private def propagate(links: RDD[(Any, Any)], part: Partitioner,
+      maxIter: Int): RDD[(Any, Any)] = {
+    val reliable = links.sparkContext.getCheckpointDir.isDefined
+    val least = (x: Any, y: Any) => IdOrdering.min(x, y)
+    val adj = links.flatMap { case (a, b) => Iterator((a, b), (b, a)) }
+      .partitionBy(part).persist()
+    var labels: RDD[(Any, Any)] = adj.reduceByKey(part, least)
+      .mapPartitions(_.map { case (v, n) => (v, least(v, n)) }, preservesPartitioning = true)
+    var generation: Option[RDD[_]] = None
     var converged = false
     var i = 0
     while (!converged && i < maxIter) {
-      val nbrMin = edges
-        .join(labels.select(col("id").as("dst"), col("label")), "dst")
-        .groupBy("src").agg(min("label").as("nbr_label"))
-      val hop = labels
-        .join(nbrMin.select(col("src").as("id"), col("nbr_label")), Seq("id"), "left")
-        .select(col("id"), col("label").as("old_label"),
-          least(col("label"), coalesce(col("nbr_label"), col("label"))).as("label"))
-      // pointer jumping through the previous generation's mapping. Skipped
-      // on round 1: near-clique LSH graphs converge before it can help,
-      // and the extra join is pure cost there; long chains still get
-      // O(log diameter) from round 2 on.
-      val stepped = if (i == 0) hop
-      else hop
-        .join(labels.select(col("id").as("pid"), col("label").as("plabel")),
-          hop("label") === col("pid"), "left")
-        .select(hop("id"), hop("old_label"),
-          least(hop("label"), coalesce(col("plabel"), hop("label"))).as("label"))
-      val (next, freeNext) = cut(stepped
-        .select(col("id"), col("label"), (col("label") =!= col("old_label")).as("chg")))
-      val changed = next.where(col("chg")).count() // reads checkpointed blocks
-      freeLabels() // next is materialized; previous generation can go
-      labels = next.select("id", "label")
-      freeLabels = freeNext
+      val nbrMin = adj.join(labels)
+        .map { case (_, (dst, l)) => (dst, l) }
+        .reduceByKey(part, least)
+      val hop = labels.leftOuterJoin(nbrMin)
+        .mapValues { case (l, nbr) => (l, nbr.fold(l)(least(l, _))) }
+      // pointer jumping is skipped on round 1: near-clique LSH graphs
+      // converge before it can help, and long chains still get
+      // O(log diameter) from round 2 on
+      val stepped = if (i == 0) hop else hop
+        .map { case (v, (old, l)) => (l, (v, old)) }
+        .join(labels)
+        .map { case (_, ((v, old), l)) => (v, (old, l)) }
+        .partitionBy(part)
+      val next = stepped.mapValues { case (old, l) => (l, old != l) }
+      if (reliable) next.persist().checkpoint() else next.localCheckpoint()
+      val changed = next.filter(_._2._2).count()
+      generation.foreach { g =>
+        if (reliable) GraftCheckpointBridge.cleanCheckpointFiles(g)
+        g.unpersist(blocking = false)
+      }
+      generation = Some(next)
+      labels = next.mapValues(_._1)
       converged = changed == 0L
       i += 1
     }
-    edges.unpersist()
+    adj.unpersist(blocking = false)
     if (!converged) throw new IllegalStateException(
       s"connectedComponents did not converge in $maxIter rounds; raise maxIter")
-    // The final generation is returned as-is, storage retained (see the
-    // Scaladoc): an earlier revision persist()ed it and then freed the
-    // checkpoint underneath, which made eviction of any cached partition a
-    // guaranteed hard failure — recompute needs exactly the storage freed.
     labels
+  }
+
+  /** Orders component ids as Spark's `min` does: the internal values of
+    * the id types `components` accepts are all `Comparable`.
+    */
+  private object IdOrdering extends Ordering[Any] {
+    def compare(a: Any, b: Any): Int = a.asInstanceOf[Comparable[Any]].compareTo(b)
   }
 
   /** Connected components of a BUCKET-CONFINED pair graph in ONE pass —
@@ -328,8 +380,8 @@ object Dedup {
     *
     * `pairs` must carry `bucketCols` ++ (id1, id2). Ids must be integral
     * (byte/short/int/long) — unlike the type-generic
-    * `connectedComponents`, the in-task union-find keys a primitive-Long
-    * map, and a silent cast from string/decimal would turn a bad schema
+    * `connectedComponents`, the in-task union-find keys longs, and a
+    * silent cast from string/decimal would turn a bad schema
     * into nulls; non-integral id columns are rejected at build time
     * instead. Returns (id, label) over every id that appears in a pair —
     * same label contract as `connectedComponents`.
@@ -365,21 +417,12 @@ object Dedup {
       .as[(String, Long, Long)]
       .groupByKey(_._1)
       .flatMapGroups { (bk, it) =>
-        val parent = scala.collection.mutable.HashMap.empty[Long, Long]
-        def find(x: Long): Long = {
-          var r = x
-          while (parent.getOrElse(r, r) != r) r = parent(r)
-          var c = x // path compression
-          while (parent.getOrElse(c, c) != c) {
-            val n = parent(c); parent(c) = r; c = n
-          }
-          r
-        }
+        val uf = new UnionFind[Long](Ordering.Long)
         it.foreach { case (_, a, b) =>
-          parent.getOrElseUpdate(a, a)
-          parent.getOrElseUpdate(b, b)
+          uf.add(a)
+          uf.add(b)
           // fail before the map grows past the cap, not after the heap does
-          if (parent.size > maxBucketNodes) throw new IllegalStateException(
+          if (uf.size > maxBucketNodes) throw new IllegalStateException(
             s"bucketedComponents bucket '$bk' holds more than " +
               s"$maxBucketNodes distinct ids — the one-pass union-find is " +
               "only safe under the caller's bucket-occupancy invariant " +
@@ -388,33 +431,35 @@ object Dedup {
               "Dedup.connectedComponents, or raise " +
               "spark.graft.bucketedCC.maxBucketNodes only if executor " +
               "heap is provisioned for the per-bucket map.")
-          val ra = find(a); val rb = find(b)
-          if (ra != rb) parent(ra max rb) = ra min rb // min root survives
+          uf.union(a, b)
         }
-        parent.keys.toArray.iterator.map(id => (id, find(id)))
+        uf.roots
       }
       .toDF("id", "label")
   }
 
-  /** Full near-dup dedup: LSH candidate pairs -> connected components ->
+  /** Full near-dup dedup: LSH band buckets -> connected components ->
     * keep the min-id representative of each component.
     *
-    * Components are resolved with distributed min-label propagation
-    * (`connectedComponents`) — no `collect()` anywhere in the path, so a
-    * duplicate-heavy corpus can't blow the driver. `maxBucket` bounds the
-    * quadratic pair fan-out of any one LSH bucket; the default (10000) is
-    * the SCALE configuration — a bucket over the cap silently contributes
-    * only its 10000 smallest ids' pairs, which can split a giant
-    * component. The oracle-verified q76 passes Int.MaxValue explicitly:
-    * capped and uncapped are intentionally different contracts, pick by
-    * corpus dirtiness. Returns the input plus (rep_id, is_kept).
+    * Docs that share a (band, key) bucket are connected; the bucket
+    * membership rows of `bandKeysRows` feed [[components]] directly, so the
+    * quadratic candidate-pair self-join is never built and the components
+    * are those of the `lshCandidatePairs` graph. Nothing is collected to
+    * the driver. `maxBucket` bounds any one bucket's membership; the
+    * default (10000) is the SCALE configuration — a bucket over the cap
+    * keeps only its 10000 smallest ids, which can split a giant component.
+    * The oracle-verified q76 passes Int.MaxValue explicitly: capped and
+    * uncapped are intentionally different contracts, pick by corpus
+    * dirtiness. Over a one-partition input with no cap the frame is built
+    * without running a Spark job. Returns the input plus (rep_id, is_kept).
     */
   def dedupNearDupes(
       docs: DataFrame, idCol: String, textCol: String,
       p: MinHashParams = MinHashParams(),
       maxBucket: Int = 10000): DataFrame = {
-    val pairs = lshCandidatePairs(docs, idCol, textCol, p, maxBucket)
-    val reps = connectedComponents(pairs)
+    val members = cappedBandRows(docs, idCol, textCol, p, maxBucket)
+      .select(concat_ws("_", col("band"), col("key")), col("doc"))
+    val reps = components(members, groups = true, maxIter = 20)
       .select(col("id").as(idCol), col("label").as("rep_id"))
     docs.join(reps, Seq(idCol), "left")
       .withColumn("rep_id", coalesce(col("rep_id"), col(idCol)))
@@ -543,4 +588,36 @@ object Dedup {
         (col("n_tokens") - coalesce(col("n_kept"), lit(0L))).as("n_excised"),
         coalesce(col("text_kept"), lit("")).as("text_kept"))
   }
+}
+
+/** Union-find whose root is always the least member of its set, so a root
+  * is its component's min-id label; path compression on every find.
+  */
+private[operators] final class UnionFind[T](ord: Ordering[T]) {
+  private val parent = mutable.HashMap.empty[T, T]
+
+  def size: Int = parent.size
+
+  def add(x: T): Unit = parent.getOrElseUpdate(x, x)
+
+  def find(x: T): T = {
+    var r = x
+    while (parent.getOrElse(r, r) != r) r = parent(r)
+    var c = x
+    while (parent.getOrElse(c, c) != c) {
+      val n = parent(c); parent(c) = r; c = n
+    }
+    r
+  }
+
+  def union(a: T, b: T): Unit = {
+    add(a)
+    add(b)
+    val ra = find(a)
+    val rb = find(b)
+    if (ra != rb) { if (ord.lt(ra, rb)) parent(rb) = ra else parent(ra) = rb }
+  }
+
+  /** (member, root) for every member added so far. */
+  def roots: Iterator[(T, T)] = parent.keys.toVector.iterator.map(x => (x, find(x)))
 }

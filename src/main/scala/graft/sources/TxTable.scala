@@ -879,15 +879,19 @@ object TxTable {
             removed.withColumn("_change_type", lit("delete"))
           else {
             val dataCols = added.columns.toSeq
-            added.withColumn("__w", lit(1L))
-              .unionByName(removed.withColumn("__w", lit(-1L)))
-              .groupBy(dataCols.map(col): _*).agg(sum("__w").as("__w"))
-              .where(col("__w") =!= 0L)
+            // helper names no data column uses (resolution ignores case)
+            val taken = dataCols.map(_.toLowerCase).toSet
+            val Seq(w, i) = Seq("__w", "__i").map(base =>
+              Iterator.iterate(base)(_ + "_").find(n => !taken(n.toLowerCase)).get)
+            added.withColumn(w, lit(1L))
+              .unionByName(removed.withColumn(w, lit(-1L)))
+              .groupBy(dataCols.map(col): _*).agg(sum(w).as(w))
+              .where(col(w) =!= 0L)
               .withColumn("_change_type",
-                when(col("__w") > 0L, lit("insert")).otherwise(lit("delete")))
-              .withColumn("__i",
-                explode(sequence(lit(1L), abs(col("__w")))))
-              .drop("__w", "__i")
+                when(col(w) > 0L, lit("insert")).otherwise(lit("delete")))
+              .withColumn(i,
+                explode(sequence(lit(1L), abs(col(w)))))
+              .drop(w, i)
           }
         Some(net.withColumn("_commit_version", lit(c.version)))
       }

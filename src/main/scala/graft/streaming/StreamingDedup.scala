@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import graft.functions.TextFunctions
 import graft.operators.Dedup
 
 /** Streaming near-duplicate detection — the continuous-ingestion form of
@@ -12,11 +11,9 @@ import graft.operators.Dedup
   * bounded to one long per occupied LSH bucket.
   *
   * Shape: band keys are computed MAP-SIDE per row (no stateful aggregation
-  * before the keyed state): the per-doc base-hash array is materialized in
-  * one projection and the 32 permuted minima read that array — the md5
-  * hashing runs once per shingle per row (the `bandKeysRows` codegen
-  * lesson: re-inlining the hashing into every perm is the measured compile
-  * blowup). Each (band, key) group then keeps only the MINIMUM doc id ever
+  * before the keyed state) by the batch path's own `Dedup.bandKeysRows`,
+  * whose MinHash kernel hashes each shingle once. Each (band, key) group
+  * then keeps only the MINIMUM doc id ever
   * seen in that bucket (`flatMapGroupsWithState`), and a later arrival in
   * an occupied bucket emits a candidate (doc, rep = that minimum).
   *
@@ -35,30 +32,13 @@ object StreamingDedup {
   case class BandRow(band: Int, key: String, docId: Long)
   case class Candidate(docId: Long, band: Int, repId: Long)
 
-  /** Map-side band keys for a (doc_id, text) frame — streaming-safe
-    * (no aggregation): same signature/banding parameters and values as
-    * `Dedup.bandKeysRows`, so candidates line up with the batch path.
+  /** Map-side band keys for a (doc_id, text) frame: `Dedup.bandKeysRows`
+    * itself (one kernel pass per row, no aggregation, so streaming-safe),
+    * so candidates line up with the batch path.
     */
-  def bandRows(docs: DataFrame, p: Dedup.MinHashParams = Dedup.MinHashParams()): DataFrame = {
-    val rows = p.numPerms / p.bands
-    val hs = transform(Dedup.shingles(col("text"), p.shingleSize),
-      s => TextFunctions.hash60(s) % p.baseMod)
-    val sigCols = (0 until p.numPerms).map { i =>
-      val a = 2L * i + 1; val b = 98765L * i + 12345L
-      array_min(transform(col("hs"), h => (h * a + b) % p.prime)).as(s"s$i")
-    }
-    val bandStructs = (0 until p.bands).map { bnd =>
-      struct(lit(bnd).as("band"),
-        concat_ws("_", (0 until rows).map(r => col(s"s${bnd * rows + r}")): _*).as("key"))
-    }
-    docs
-      .where(size(TextFunctions.tokens(col("text"))) >= p.shingleSize)
-      .select(col("doc_id"), hs.as("hs"))
-      .select(col("doc_id") +: sigCols: _*)
-      .select(col("doc_id"), explode(array(bandStructs: _*)).as("bk"))
-      .select(col("bk.band").as("band"), col("bk.key").as("key"),
-        col("doc_id").as("docId"))
-  }
+  def bandRows(docs: DataFrame, p: Dedup.MinHashParams = Dedup.MinHashParams()): DataFrame =
+    Dedup.bandKeysRows(docs, "doc_id", "text", p)
+      .select(col("band"), col("key"), col("doc").as("docId"))
 
   /** Keyed state step: per (band, key) bucket, remember the min doc id;
     * later arrivals emit (doc, band, rep). Within a micro-batch the

@@ -50,16 +50,14 @@ object GraftSqlBridge {
     finally prev.foreach(sc.conf.set(key, _))
   }
 
-  /** The storage handle behind a `checkpoint()`/`localCheckpoint()`-backed
-    * frame. Those blocks are NOT registered in the CacheManager, so
-    * `Dataset.unpersist` is a no-op on them — freeing a generation of an
-    * iterative algorithm needs the underlying RDD (a `LogicalRDD` leaf in
-    * the analyzed plan) to `unpersist()` directly.
+  /** A batch DataFrame over already-computed internal rows (no job runs
+    * until an action reads it) — for operators that compute on RDDs.
     */
-  def materializedRdd(df: DataFrame): Option[org.apache.spark.rdd.RDD[_]] =
-    df.queryExecution.analyzed.collectFirst {
-      case l: execution.LogicalRDD => l.rdd
-    }
+  def internalFrame(spark: SparkSession,
+      rdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
+      schema: types.StructType): DataFrame =
+    spark.asInstanceOf[classic.SparkSession]
+      .internalCreateDataFrame(rdd, schema, isStreaming = false)
 
   /** Re-root a computed frame as a STREAMING DataFrame — the V1 streaming
     * `Source.getBatch` contract (the engine checks `isStreaming` on what a
@@ -72,9 +70,10 @@ object GraftSqlBridge {
       d.queryExecution.toRdd, df.schema, isStreaming = true)
   }
 
-  /** The frame's computed rows as `RDD[InternalRow]` — for `BaseRelation`s
-    * that declare `needConversion = false` and hand Spark internal rows
-    * directly (skips the external-Row round trip `df.rdd` would pay).
+  /** The frame's computed rows as `RDD[InternalRow]`, without the
+    * external-Row round trip `df.rdd` would pay — for `BaseRelation`s that
+    * declare `needConversion = false`, and for operators that compute on
+    * RDDs.
     */
   def internalRdd(df: DataFrame)
       : org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow] =

@@ -41,12 +41,55 @@ class DedupSpec extends SparkSpec {
   }
 
   test("minhash signature is deterministic and length numPerms") {
-    val sig = docs().where(col("doc_id") === 1)
-      .select(Dedup.minhashSignature(col("text"))).collect().head.getSeq[Long](0)
-    val sig2 = docs().where(col("doc_id") === 3)
-      .select(Dedup.minhashSignature(col("text"))).collect().head.getSeq[Long](0)
-    assert(sig.length == Dedup.MinHashParams().numPerms)
-    assert(sig == sig2) // identical text -> identical signature
+    val sigs = Dedup.signatures(docs(), "doc_id", "text", Dedup.MinHashParams())
+      .collect().map(r => r.getLong(0) -> (1 until r.length).map(r.getLong)).toMap
+    assert(sigs(1L).length == Dedup.MinHashParams().numPerms)
+    assert(sigs(1L) == sigs(3L)) // identical text -> identical signature
+    assert(sigs(1L) != sigs(4L))
+  }
+
+  test("minhash and shingle kernels equal the composed SQL form") {
+    import spark.implicits._
+    val p = Dedup.MinHashParams()
+    val rnd = new scala.util.Random(7)
+    val long = Seq.fill(5000)(rnd.alphanumeric.take(1 + rnd.nextInt(6)).mkString)
+      .mkString(" ")
+    val texts = Seq(
+      base,
+      "double  spaces  make   empty tokens",
+      "a trailing space ",
+      "exactly three tokens",
+      "Ünïcödé straße 東京 タワー naïve café — ok",
+      long)
+    val d = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
+    val want = d.select(col("doc_id"), MinHashReference.minhashSignature(col("text"), p))
+      .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
+    val got = Dedup.signatures(d, "doc_id", "text", p)
+      .collect().map(r => r.getLong(0) -> (1 until r.length).map(r.getLong)).toMap
+    assert(got.keySet == want.keySet)
+    want.foreach { case (id, sig) => assert(got(id) == sig, s"doc $id") }
+    for (n <- Seq(1, 3, 8)) {
+      val rows = d.where(size(split(lower(col("text")), " ")) >= n)
+        .select(MinHashReference.shingles(col("text"), n), Dedup.shingles(col("text"), n))
+        .collect()
+      assert(rows.nonEmpty)
+      rows.foreach(r => assert(r.getSeq[String](1) == r.getSeq[String](0), s"n=$n"))
+    }
+    // fewer tokens than the shingle size: no shingle and no signature
+    val short = Seq((9L, "two words"), (10L, null)).toDF("doc_id", "text")
+    assert(short.select(Dedup.shingles(col("text"), 3)).collect()
+      .map(r => Option(r.getSeq[String](0))).toSeq == Seq(Some(Nil), None))
+    assert(Dedup.signatures(short, "doc_id", "text", p).isEmpty)
+  }
+
+  test("shingles split each text once: no split inside a lambda") {
+    import org.apache.spark.sql.catalyst.expressions.{LambdaFunction, StringSplit}
+    // (coalesce keeps the projection from being folded into a local relation)
+    val plan = docs().coalesce(1).select(Dedup.shingles(col("text"), 3))
+      .queryExecution.optimizedPlan
+    val lambdas = plan.expressions.flatMap(_.collect { case l: LambdaFunction => l })
+    assert(!lambdas.exists(_.exists(_.isInstanceOf[StringSplit])), plan.toString)
+    assert(plan.expressions.exists(_.exists(_.isInstanceOf[StringSplit])), plan.toString)
   }
 
   test("simhash hamming distance: near-dups close, unrelated far") {
@@ -98,31 +141,71 @@ class DedupSpec extends SparkSpec {
     assert(labels.values.forall(_ == 0L), labels.toString)
   }
 
+  /** Min-id labels by a sequential union-find over `edges`. */
+  private def referenceLabels(edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = collection.mutable.Map.empty[Long, Long]
+    def find(x: Long): Long = {
+      var r = x; while (parent.getOrElse(r, r) != r) r = parent(r); r
+    }
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    edges.flatMap(e => Seq(e._1, e._2)).distinct.map(id => id -> find(id)).toMap
+  }
+
   test("connectedComponents matches reference union-find on random graphs") {
     import spark.implicits._
     val rnd = new scala.util.Random(42)
     for (trial <- 1 to 5) {
       val nNodes = 5 + rnd.nextInt(25)
       val nEdges = 1 + rnd.nextInt(40)
-      val edges = Seq.fill(nEdges) {
+      val random = Seq.fill(nEdges) {
         val a = rnd.nextInt(nNodes).toLong; val b = rnd.nextInt(nNodes).toLong
         if (a == b) (a, b + 1) else (math.min(a, b), math.max(a, b)) // no self-loops
       }
-      // reference union-find
-      val parent = collection.mutable.Map.empty[Long, Long]
-      def find(x: Long): Long = {
-        var r = x; while (parent.getOrElse(r, r) != r) r = parent(r); r
+      // a chain whose edges are spread evenly over the input, so every
+      // partitioning below splits it across partitions
+      val chain = (1000L until 1012L).map(i => (i + 1, i))
+      val step = random.length / chain.length + 1
+      val edges = random.grouped(step).toSeq.zipAll(chain.map(Seq(_)), Nil, Nil)
+        .flatMap { case (g, c) => g ++ c }
+      val expected = referenceLabels(edges)
+      for (parts <- Seq(1, 3, 7)) {
+        val pairs = spark.sparkContext.parallelize(edges, parts).toDF("id1", "id2")
+        val got = Dedup.connectedComponents(pairs)
+          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+        assert(got == expected, s"trial $trial, $parts partitions: edges=$edges")
       }
-      edges.foreach { case (a, b) =>
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-      }
-      val expected = edges.flatMap(e => Seq(e._1, e._2)).distinct
-        .map(id => id -> find(id)).toMap
-      val got = Dedup.connectedComponents(edges.toDF("id1", "id2"))
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(got == expected, s"trial $trial: edges=$edges")
+      // type-generic: zero-padded string ids order like the numbers
+      def s(i: Long) = f"n$i%05d"
+      val strPairs = spark.sparkContext
+        .parallelize(edges.map { case (a, b) => (s(a), s(b)) }, 3).toDF("id1", "id2")
+      val strGot = Dedup.connectedComponents(strPairs)
+        .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+      assert(strGot == expected.map { case (k, v) => s(k) -> s(v) }, s"trial $trial")
     }
+  }
+
+  test("connectedComponents throws when propagation has not converged") {
+    import spark.implicits._
+    // a 60-node chain over 7 partitions contracts to a 7-root chain, which
+    // one round cannot settle
+    val chain = spark.sparkContext
+      .parallelize((0L until 59L).map(i => (i, i + 1)), 7).toDF("id1", "id2")
+    val e = intercept[IllegalStateException](Dedup.connectedComponents(chain, maxIter = 1))
+    assert(e.getMessage.contains("did not converge in 1 rounds"), e.getMessage)
+  }
+
+  test("dedupNearDupes over a one-partition input runs no Spark job until an action") {
+    var out: org.apache.spark.sql.DataFrame = null
+    val jobs = jobsOf {
+      out = Dedup.dedupNearDupes(docs().coalesce(1), "doc_id", "text", maxBucket = Int.MaxValue)
+    }
+    assert(jobs.isEmpty, s"building dedupNearDupes ran ${jobs.size} Spark jobs")
+    val reps = out.select("doc_id", "rep_id").collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(reps == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L, 5L -> 5L))
   }
 
   test("connectedComponents reliable path deletes intermediate checkpoint files") {

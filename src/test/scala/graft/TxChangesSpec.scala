@@ -116,4 +116,19 @@ class TxChangesSpec extends SparkSpec {
     assert(v1 == Set(("delete", 1L, "x", 2L), ("insert", 3L, "z", 2L)), v1)
     assertFeedInvariant(dir, -1L, 1L)
   }
+
+  test("user columns named like the net-diff helpers survive a merge") {
+    val dir = freshDir("helpercols")
+    val s = spark
+    import s.implicits._
+    def t(rows: (Long, String, Long)*) = rows.toDF("k", "__w", "__I").repartition(1)
+    TxTable.append(t((1L, "a", 10L), (2L, "b", 20L)), dir) // v0
+    TxTable.merge(spark, dir, t((2L, "B", 21L), (3L, "c", 30L)), Seq("k")) // v1
+    val v1 = TxTable.readChanges(spark, dir, 0L, Some(1L)).collect()
+      .map(r => (r.getAs[String]("_change_type"), r.getAs[Long]("k"),
+        r.getAs[String]("__w"), r.getAs[Long]("__I"))).toSet
+    assert(v1 == Set(("delete", 2L, "b", 20L), ("insert", 2L, "B", 21L),
+      ("insert", 3L, "c", 30L)), v1)
+    assertFeedInvariant(dir, -1L, 1L)
+  }
 }

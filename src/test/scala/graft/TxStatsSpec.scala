@@ -196,27 +196,6 @@ class TxStatsSpec extends SparkSpec {
     check(parted, Seq("p"))
   }
 
-  /** Properties of every Spark job `body` starts (seen by a listener
-    * keyed by a fresh job group).
-    */
-  private def jobsOf(body: => Unit): Seq[java.util.Properties] = {
-    val sc = spark.sparkContext
-    val group = s"txjobs-${java.util.UUID.randomUUID()}"
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[java.util.Properties]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        Option(e.properties).filter(p => p.getProperty("spark.jobGroup.id") == group)
-          .foreach(jobs.add)
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "tx jobs", interruptOnCancel = false)
-      try body finally sc.clearJobGroup()
-      org.apache.spark.ListenerBusDrain(sc)
-    } finally sc.removeSparkListener(listener)
-    jobs.asScala.toSeq
-  }
-
   test("a Bloom append of a local DataFrame runs exactly one Spark job") {
     val dir = freshDir("onejob")
     val s = spark
