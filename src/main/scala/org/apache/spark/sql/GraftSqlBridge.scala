@@ -85,11 +85,8 @@ object GraftSqlBridge {
     * this is the same wrapping `foreachBatch` applies before handing the
     * user their batch.
     */
-  def asBatchFrame(df: DataFrame): DataFrame = {
-    val d = df.asInstanceOf[classic.Dataset[Row]]
-    d.sparkSession.internalCreateDataFrame(
-      d.queryExecution.toRdd, df.schema, isStreaming = false)
-  }
+  def asBatchFrame(df: DataFrame): DataFrame =
+    internalFrame(df.sparkSession, internalRdd(df), df.schema)
 
   /** Write `df` as `format` files under `path` (hive-style `col=value/`
     * directories for `partitionBy`) through Spark's own `FileFormatWriter`

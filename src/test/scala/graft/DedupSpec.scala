@@ -133,8 +133,11 @@ class DedupSpec extends SparkSpec {
   test("connectedComponents converges on a 60-node chain (pointer jumping)") {
     import spark.implicits._
     // diameter 59: one-hop-per-round propagation would need 59 rounds and
-    // blow maxIter=20; pointer jumping must close it in O(log n) rounds
-    val chain = (0L until 59L).map(i => (i, i + 1)).toDF("id1", "id2")
+    // blow maxIter=20; pointer jumping must close it in O(log n) rounds.
+    // One edge per input partition: the partition-local union-find merges
+    // nothing, so propagation runs over the whole chain
+    val chain = spark.sparkContext
+      .parallelize((0L until 59L).map(i => (i, i + 1)), 59).toDF("id1", "id2")
     val labels = Dedup.connectedComponents(chain)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(labels.size == 60)
@@ -210,11 +213,15 @@ class DedupSpec extends SparkSpec {
 
   test("connectedComponents reliable path deletes intermediate checkpoint files") {
     import spark.implicits._
+    // diameter 29, one edge per input partition: propagation runs over the
+    // whole chain, and one round cannot settle it, so the reliable run
+    // below writes several generations (one checkpoint per round)
+    val edges = (0L until 29L).map(i => (i, i + 1))
+    def chain = spark.sparkContext.parallelize(edges, edges.length).toDF("id1", "id2")
+    intercept[IllegalStateException](Dedup.connectedComponents(chain, maxIter = 1))
     val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toFile
     spark.sparkContext.setCheckpointDir(dir.toString)
     try {
-      // diameter 29 -> several generations, each reliably checkpointed
-      val chain = (0L until 29L).map(i => (i, i + 1)).toDF("id1", "id2")
       val labels = Dedup.connectedComponents(chain)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(labels.size == 30 && labels.values.forall(_ == 0L), labels.toString)
