@@ -53,10 +53,8 @@ object SpanSkewProbe {
       .select(col("doc_id"),
         posexplode(Dedup.shingles(col("text"), k)).as(Seq("p0", "sp")))
       .select(col("doc_id"), (col("p0") + 1).cast("long").as("p"),
-        md5(col("sp")).as("m5"))
-      .select(col("doc_id"), col("p"),
-        conv(substring(col("m5"), 1, 15), 16, 10).cast("long").as("h"),
-        conv(substring(col("m5"), 18, 15), 16, 10).cast("long").as("h2"))
+        TextFunctions.hash60(col("sp")).as("h"),
+        TextFunctions.hash60lo(col("sp")).as("h2"))
 
     def windowCovered: DataFrame = {
       val bySpan = org.apache.spark.sql.expressions.Window.partitionBy("h", "h2")

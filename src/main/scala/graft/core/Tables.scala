@@ -1,6 +1,7 @@
 package graft.core
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.execution.datasources.LogicalRelation
 
 /** Loaders for the driver-provided parquet tables (TESTDATA.md).
   *
@@ -13,23 +14,28 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Schema memo per parquet path — METADATA only, never data. Each
-    * `spark.read.parquet(path)` infers the schema by listing the path
-    * and reading a footer on the DRIVER; a bench/verify run constructs
-    * hundreds of single-table frames over the same ten files, so the
-    * repeated inference is pure single-threaded driver overhead (guide
-    * §5/§7.3). The memo hands `DataFrameReader.schema` the known
-    * StructType, which skips inference entirely; execution still reads
-    * every row from parquet. One entry per path, holding the file's
-    * `mtime:size` stamp with its schema: a fixture regenerated in place
-    * within one JVM (test/regen flows) gets a fresh inference that
-    * replaces the stale entry instead of adding one. One stat call per
-    * frame construction — still zero footer reads when warm.
+  /** Relation memo per parquet path — METADATA only, never data. Each
+    * `spark.read.parquet(path)` lists the path, builds a file index and
+    * infers the schema from a footer on the DRIVER; a bench/verify run
+    * constructs hundreds of single-table frames over the same ten files,
+    * so that is pure single-threaded driver overhead (13-23 ms a frame,
+    * against 1-2 ms for a frame over an already-resolved relation). One
+    * entry per path: the file's `mtime:size` stamp and the resolved file
+    * relation. The session that resolved the entry gets the same relation
+    * back with fresh attribute ids (`newInstance`, what a catalog table
+    * lookup does), so two frames of one table self-join like two reads.
+    * Another session resolves its own relation with the memoized schema
+    * (no footer read) and replaces the entry. A fixture regenerated in
+    * place within one JVM (test/regen flows) changes the stamp and gets a
+    * fresh inference, which replaces the stale entry instead of adding
+    * one. One stat call per frame construction. Execution still reads
+    * every row from parquet. The entry keeps its session reachable until
+    * another session replaces it.
     */
-  private val schemaCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, org.apache.spark.sql.types.StructType)]()
+  private val relations = new java.util.concurrent.ConcurrentHashMap[
+    String, (String, LogicalRelation)]()
 
-  private[graft] def schemaMemoSize: Int = schemaCache.size
+  private[graft] def memoSize: Int = relations.size
 
   /** Timestamp normalization across driver testdata generations: the
     * events table has shipped as TIMESTAMP(NANOS) (read as long under
@@ -46,10 +52,23 @@ object Tables {
     val path = s"$dir/$name.parquet"
     val f = new java.io.File(path)
     val stamp = s"${f.lastModified}:${f.length}"
-    val (_, schema) = schemaCache.compute(path, (_, memo) =>
-      if (memo != null && memo._1 == stamp) memo
-      else (stamp, spark.read.parquet(path).schema))
-    val df = spark.read.schema(schema).parquet(path)
+    var resolved: Option[DataFrame] = None // a frame of a fresh entry is used as is
+    val (_, relation) = relations.compute(path, (_, memo) =>
+      if (memo != null && memo._1 == stamp &&
+        (memo._2.relation.sqlContext.sparkSession eq spark)) memo
+      else {
+        val schema =
+          if (memo != null && memo._1 == stamp) memo._2.schema
+          else spark.read.parquet(path).schema
+        val df = spark.read.schema(schema).parquet(path)
+        resolved = Some(df)
+        GraftSqlBridge.analyzed(df) match {
+          case r: LogicalRelation => (stamp, r)
+          case other => throw new IllegalStateException(
+            s"$path resolved to ${other.nodeName}, not a file relation")
+        }
+      })
+    val df = resolved.getOrElse(GraftSqlBridge.ofRows(spark, relation.newInstance()))
     val withTs =
       if (df.schema.exists(f => f.name == "ts" && f.dataType == LongType))
         df.withColumn("ts", org.apache.spark.sql.functions.expr("timestamp_micros(ts div 1000)"))

@@ -68,10 +68,7 @@ object MinHash {
         j += 1
       }
       md.digest(digest, 0, 16)
-      var prefix = 0L
-      var b = 0
-      while (b < 8) { prefix = (prefix << 8) | (digest(b) & 0xffL); b += 1 }
-      val h = (prefix >>> 4) % baseMod // first 15 hex digits of the md5
+      val h = TextKernels.prefix60(digest, low = false) % baseMod
       var k = 0
       while (k < numPerms) {
         val v = (h * (2L * k + 1) + 98765L * k + 12345L) % prime

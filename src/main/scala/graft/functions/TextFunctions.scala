@@ -7,10 +7,11 @@ import org.apache.spark.sql.functions._
   * training-data-pipeline surface: language-ID, quality scoring, token
   * counting, fingerprinting).
   *
-  * Everything here is composed from codegen'd built-ins (split, transform,
-  * filter, aggregate, regexp) — no UDFs — so whole-stage codegen keeps these
-  * fused with scans at 100 TB, and every function has an exact ANSI-SQL
-  * mirror for the DuckDB oracle.
+  * Everything here is composed from built-ins (split, transform, filter,
+  * aggregate, regexp) or is a native Catalyst expression with generated
+  * code — no UDFs — so whole-stage codegen keeps these fused with scans at
+  * 100 TB, and every function has an exact ANSI-SQL mirror for the DuckDB
+  * oracle.
   */
 object TextFunctions {
 
@@ -29,10 +30,7 @@ object TextFunctions {
     * dedup together.
     */
   def nfc(text: Column): Column =
-    org.apache.spark.sql.GraftSqlBridge.column(
-      graft.functions.NfcNormalizeExpr(
-        org.apache.spark.sql.GraftSqlBridge.expression(text),
-        java.text.Normalizer.Form.NFC))
+    kernel(NfcNormalizeExpr(_, java.text.Normalizer.Form.NFC), text)
 
   /** Jaro-Winkler similarity (native expression, stays in codegen) —
     * byte-level, bit-identical to DuckDB's builtin; see [[JaroWinkler]].
@@ -59,10 +57,11 @@ object TextFunctions {
   def fingerprint(text: Column): Column = md5(normalized(text))
 
   /** Deterministic 60-bit integer hash of a string, identical in DuckDB:
-    * first 15 hex chars of md5 parsed base-16.
+    * first 15 hex chars of md5 parsed base-16
+    * (`conv(substring(md5(s), 1, 15), 16, 10)`), from the digest's bits
+    * by a native expression ([[TextKernels.hash60]]).
     */
-  def hash60(s: Column): Column =
-    conv(substring(md5(s), 1, 15), 16, 10).cast("long")
+  def hash60(s: Column): Column = kernel(Hash60Expr(_, low = false), s)
 
   /** The LOW 60 bits of the same md5 (last 15 hex chars): pairing it with
     * `hash60` gives a 120-bit identity from ONE digest — used where a
@@ -70,8 +69,25 @@ object TextFunctions {
     * so a 60-bit collision must not silently merge distinct content.
     * Equally DuckDB-replayable (substr(md5, 18, 15)).
     */
-  def hash60lo(s: Column): Column =
-    conv(substring(md5(s), 18, 15), 16, 10).cast("long")
+  def hash60lo(s: Column): Column = kernel(Hash60Expr(_, low = true), s)
+
+  /** The 62-bit k-gram hashes of a per-token hash array `ht` (each
+    * element `hash60 mod 2^30`): the engine side of
+    * `TrainingShared.gramHash62`, whose SQL the DuckDB oracles replay.
+    * Empty when `ht` has fewer than `k` elements. See
+    * [[TextKernels.gramHashes]].
+    */
+  def gramHashes(ht: Column, k: Int): Column = kernel(GramHashesExpr(_, k), ht)
+
+  /** `(mx, sgl)` of a bigint array: its longest run of equal values and
+    * its number of values that occur once ([[TextKernels.sortedRunStats]]).
+    */
+  def sortedRunStats(arr: Column): Column = kernel(SortedRunStatsExpr(_), arr)
+
+  private def kernel(f: org.apache.spark.sql.catalyst.expressions.Expression =>
+      org.apache.spark.sql.catalyst.expressions.Expression, c: Column): Column =
+    org.apache.spark.sql.GraftSqlBridge.column(
+      f(org.apache.spark.sql.GraftSqlBridge.expression(c)))
 
   /** Fraction of tokens found in `words` (stopword ratio and friends). */
   def tokenRatio(text: Column, words: Seq[String]): Column = {

@@ -5,6 +5,7 @@ import org.apache.spark.{GraftCheckpointBridge, HashPartitioner, Partitioner}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.plans.logical.Statistics
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.functions.{MinHashExpr, ShinglesExpr, TextFunctions}
@@ -125,23 +126,20 @@ object Dedup {
   }
 
   /** 60-bit SimHash over word tokens (each occurrence votes +-1 per bit).
-    * Written as one SQL expression so shift amounts can be lambda variables
-    * (the Scala `shiftright` helper only takes literal counts) and so the
-    * DuckDB oracle can mirror it verbatim.
+    * Shift amounts are lambda variables, so the shifts are called by name
+    * (the Scala `shiftright` helper only takes literal counts); the DuckDB
+    * oracle mirrors the same fold.
     */
-  def simhash60(textCol: String): Column = expr(
-    s"""aggregate(
-          zip_with(
-            transform(sequence(0, 59), j -> IF(
-              aggregate(
-                transform(split(lower($textCol), ' '),
-                  t -> cast(conv(substr(md5(t), 1, 15), 16, 10) as bigint)),
-                cast(0 as bigint),
-                (acc, h) -> acc + (shiftright(h, j) % 2) * 2 - 1) > 0,
-              cast(1 as bigint), cast(0 as bigint))),
-            sequence(0, 59),
-            (bit, j) -> shiftleft(bit, j)),
-          cast(0 as bigint), (acc, x) -> acc + x)""")
+  def simhash60(textCol: String): Column = {
+    val hashes = transform(TextFunctions.tokens(col(textCol)), TextFunctions.hash60(_))
+    val bits = transform(sequence(lit(0), lit(59)), j =>
+      when(aggregate(hashes, lit(0L),
+        (acc, h) => acc + (call_function("shiftright", h, j) % 2) * 2 - 1) > 0, 1L)
+        .otherwise(0L))
+    aggregate(
+      zip_with(bits, sequence(lit(0), lit(59)), (bit, j) => call_function("shiftleft", bit, j)),
+      lit(0L), (acc, x) => acc + x)
+  }
 
   /** Hamming distance between two simhashes (near-dup test at radius k). */
   def hammingDist(a: Column, b: Column): Column =
@@ -283,9 +281,28 @@ object Dedup {
           .leftOuterJoin(rootLabel)
           .map { case (root, (id, label)) => InternalRow(id, label.getOrElse(root)) }
       }
-    GraftSqlBridge.internalFrame(rows.sparkSession, labels, StructType(Seq(
+    val schema = StructType(Seq(
       StructField("id", idType, nullable = false),
-      StructField("label", idType, nullable = false))))
+      StructField("label", idType, nullable = false)))
+    GraftSqlBridge.internalFrame(rows.sparkSession, labels, schema,
+      Some(labelStats(rows, schema, idsPerRow = if (groups) 1 else 2)))
+  }
+
+  /** The planner's size of a labels frame, from its input's estimate:
+    * one label per id, and a row names at most `idsPerRow` ids, so the
+    * labels have at most `idsPerRow` rows per input row; bytes scale by
+    * the row widths. Without it the labels frame (an RDD) would count as
+    * too large to broadcast, and joining it back would shuffle both sides.
+    */
+  private def labelStats(rows: DataFrame, schema: StructType, idsPerRow: Int): Statistics = {
+    import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils.getSizePerRow
+    import org.apache.spark.sql.catalyst.types.DataTypeUtils.toAttributes
+    val in = rows.queryExecution.optimizedPlan.stats
+    val inWidth = getSizePerRow(toAttributes(rows.schema))
+    val outWidth = getSizePerRow(toAttributes(schema))
+    Statistics(
+      sizeInBytes = (in.sizeInBytes * idsPerRow * outWidth / inWidth).max(1),
+      rowCount = in.rowCount.map(_ * idsPerRow))
   }
 
   /** Min-label propagation with pointer jumping over the undirected graph
@@ -542,10 +559,8 @@ object Dedup {
       .select(col(idCol),
         posexplode(shingles(col(textCol), k)).as(Seq("p0", "sp")))
       .select(col(idCol), (col("p0") + 1).cast("long").as("p"),
-        md5(col("sp")).as("m5")) // one digest; both halves derive from it
-      .select(col(idCol), col("p"),
-        conv(substring(col("m5"), 1, 15), 16, 10).cast("long").as("h"),
-        conv(substring(col("m5"), 18, 15), 16, 10).cast("long").as("h2"))
+        TextFunctions.hash60(col("sp")).as("h"),
+        TextFunctions.hash60lo(col("sp")).as("h2"))
     val occ = occStorage.map(occ0.persist).getOrElse(occ0)
     // two-phase partial aggregate: a hot span crosses the wire as ONE row
     // per map task, whatever its corpus frequency

@@ -43,6 +43,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectOptimizerRule(_ => RectContainsToRange)
     ext.injectOptimizerRule(_ => WindowTopKToTopKPerKey)
     ext.injectOptimizerRule(_ => CountDistinctToHll)
+    ext.injectOptimizerRule(_ => PercentileToExact)
     ext.injectPlannerStrategy(_ => new TopKStrategy)
     ext.injectPlannerStrategy(_ => new PrefixScanStrategy)
   }

@@ -510,10 +510,8 @@ private[queries] object TrainingA {
     "q107_decontaminate" -> ((s, d) => {
       val docs = t(s, d, "documents")
       def sh(df: DataFrame) = tokenHashes(df, 3)
-        // sequence(1, 0) DESCENDS in Spark (q77 lesson) — gate short docs
         .select(col("doc_id"),
-          explode(array_distinct(expr(s"""transform(
-            sequence(1, size(ht) - 2), i -> ${gramHash62("i-1", 3)})""")))
+          explode(array_distinct(TextFunctions.gramHashes(col("ht"), 3)))
             .as("sh"))
       val bench = sh(docs.where(col("source") === "src0"))
         .select("sh").distinct().withColumn("hit", lit(1L))
@@ -1204,8 +1202,7 @@ private[queries] object TrainingA {
       // heavy-hitter reports materialize display strings at scale.
       val grams = tokenHashes(t(s, d, "documents"), 2)
         .select(col("doc_id"), col("source"),
-          posexplode(expr(s"""transform(sequence(1, size(ht) - 1),
-            i -> ${gramHash62("i-1", 2)})""")).as(Seq("i0", "g")))
+          posexplode(TextFunctions.gramHashes(col("ht"), 2)).as(Seq("i0", "g")))
         .select(col("doc_id"), col("source"), (col("i0") + 1).as("i"),
           col("g"))
         .persist() // exact counts + sketch + heavy re-probe read it
@@ -1440,8 +1437,7 @@ private[queries] object TrainingA {
       // hashed gram identity (gramHash62): the anti-join probes 62-bit
       // BIGINTs instead of gram strings — same q107 posture
       def grams(df: DataFrame, n: Int) = tokenHashes(df, n)
-        .select(explode(array_distinct(expr(s"""transform(
-          sequence(1, size(ht) - ${n - 1}), i -> ${gramHash62("i-1", n)})""")))
+        .select(explode(array_distinct(TextFunctions.gramHashes(col("ht"), n)))
           .as("g"))
       def novelty(n: Int): DataFrame = {
         // test is distinct'd (its cardinality IS the denominator) and
@@ -1597,8 +1593,7 @@ private[queries] object TrainingA {
       // hashed shingle identity (gramHash62) — same posture as q107
       def sh(df: DataFrame) = tokenHashes(df, 3)
         .select(col("doc_id"), col("source"),
-          explode(array_distinct(expr(s"""transform(
-            sequence(1, size(ht) - 2), i -> ${gramHash62("i-1", 3)})""")))
+          explode(array_distinct(TextFunctions.gramHashes(col("ht"), 3)))
             .as("sh"))
       val benches = sh(docs.where(col("source").isin("src0", "src1")))
         .select(col("source").as("bench"), col("sh")).distinct()
@@ -1791,8 +1786,8 @@ private[queries] object TrainingA {
       graft.plans.TopKPerKey(
           t(s, d, "documents").where(col("n_chars") > 0)
             .select(col("doc_id"), col("lang"),
-              expr("cast(conv(substring(md5(text), 1, 15), 16, 10) as bigint)" +
-                " div n_chars").as("pri")),
+              call_function("div", TextFunctions.hash60(col("text")), col("n_chars"))
+                .as("pri")),
           Seq("lang"), Seq(asc("pri"), asc("doc_id")), 10)
         .select(col("lang"), col("doc_id"), col("pri"))
     }),

@@ -352,38 +352,22 @@ private[queries] object TrainingB {
     "q201_repetition_rules" -> ((s, d) => {
       // Per-doc gram-repetition stats computed ENTIRELY map-side (the
       // q83 sorted-runs trick, upgraded with gramHash62): sort each
-      // doc's 62-bit gram hashes and fold the runs — max run length =
+      // doc's 62-bit gram hashes and count the runs — max run length =
       // top-gram count, occurrences in runs >1 = duplicated-gram mass.
       // No (doc, gram) rows ever exist, no explode shuffle, no per-gram
-      // md5; the only exchange left is whatever reads the output.
-      // runStats folds (prev, cur, mx, sgl=singleton runs) over the
-      // sorted array; empty arrays yield (mx 0, sgl 0).
-      def sortedGrams(k: Int): String =
-        s"""array_sort(transform(sequence(1, size(ht) - ${k - 1}),
-            i -> ${gramHash62("i-1", k)}))"""
-      def runStats(arr: String): String = {
-        val one = "CAST(1 AS BIGINT)"
-        s"""aggregate($arr,
-          named_struct('prev', CAST(-1 AS BIGINT), 'cur', CAST(0 AS BIGINT),
-            'mx', CAST(0 AS BIGINT), 'sgl', CAST(0 AS BIGINT)),
-          (st, x) -> IF(x = st.prev,
-            named_struct('prev', x, 'cur', st.cur + $one, 'mx', st.mx,
-              'sgl', st.sgl),
-            named_struct('prev', x, 'cur', $one,
-              'mx', greatest(st.mx, st.cur),
-              'sgl', st.sgl + IF(st.cur = 1, $one, CAST(0 AS BIGINT)))),
-          st -> named_struct('mx', greatest(st.mx, st.cur),
-            'sgl', st.sgl + IF(st.cur = 1, $one, CAST(0 AS BIGINT))))"""
-      }
+      // md5; the only exchange left is whatever reads the output. Both
+      // steps are native kernels (gramHashes, sortedRunStats).
+      val ht = col("ht")
+      def runStats(k: Int) =
+        TextFunctions.sortedRunStats(TextFunctions.gramHashes(ht, k))
+      val n5 = greatest(size(ht) - 4, lit(0)).cast("long")
       tokenHashes(t(s, d, "documents"), 2)
         .select(col("doc_id"),
-          (size(col("ht")) - 1).cast("long").as("n_bigrams"),
-          expr(s"${runStats(sortedGrams(2))}.mx").as("top_bigram_c"),
-          greatest(size(col("ht")) - 4, lit(0)).cast("long").as("n_5grams"),
-          expr(s"""CASE WHEN size(ht) >= 5 THEN
-              CAST(size(ht) - 4 AS BIGINT)
-                - ${runStats(sortedGrams(5))}.sgl
-            ELSE CAST(0 AS BIGINT) END""").as("dup_5gram_occ"))
+          (size(ht) - 1).cast("long").as("n_bigrams"),
+          runStats(2).getField("mx").as("top_bigram_c"),
+          n5.as("n_5grams"),
+          // a doc of fewer than 5 tokens has no 5-gram and no singleton run
+          (n5 - runStats(5).getField("sgl")).as("dup_5gram_occ"))
         .withColumn("top_bigram_frac_e6",
           expr("(top_bigram_c * 1000000) div n_bigrams"))
         .withColumn("dup_5gram_frac_e6",
@@ -551,19 +535,14 @@ private[queries] object TrainingB {
         .agg(count(lit(1)).as("n_tot"))
       val biTrain = train
         .where(size(col("ht")) >= 2)
-        .select(explode(expr(
-          s"transform(sequence(1, size(ht) - 1), i -> ${gramHash62("i-1", 2)})"))
-          .as("g"))
+        .select(explode(TextFunctions.gramHashes(col("ht"), 2)).as("g"))
         .groupBy("g").agg(count(lit(1)).as("c12"))
       val probe = toks(docs.where(col("source") === "src0"))
         .where(size(col("ht")) >= 2)
-        .select(col("doc_id"), explode(expr(s"""transform(
-            sequence(1, size(ht) - 1),
-            i -> named_struct('g', ${gramHash62("i-1", 2)},
-                              'h1', ht[i-1], 'h2', ht[i]))"""))
-          .as("bg"))
-        .select(col("doc_id"), col("bg.g").as("g"), col("bg.h1").as("h1"),
-          col("bg.h2").as("h2"))
+        .select(col("doc_id"), posexplode(TextFunctions.gramHashes(col("ht"), 2))
+          .as(Seq("i0", "g")), col("ht"))
+        .select(col("doc_id"), col("g"), element_at(col("ht"), col("i0") + 1).as("h1"),
+          element_at(col("ht"), col("i0") + 2).as("h2"))
         .groupBy("doc_id", "g", "h1", "h2").agg(count(lit(1)).as("occ"))
       probe
         .join(biTrain, Seq("g"), "left")

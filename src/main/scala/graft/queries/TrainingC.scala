@@ -633,19 +633,17 @@ private[queries] object TrainingC {
       // BIGINTs, never gram strings — the q107/q272 posture
       def hts(c: String) = transform(TextFunctions.tokens(col(c)),
         tk => pmod(TextFunctions.hash60(tk), lit(1073741824L)))
-      def gramsExpr(n: Int) =
-        s"transform(sequence(1, size(ht) - ${n - 1}), i -> ${gramHash62("i-1", n)})"
       def prec(n: Int): DataFrame = {
         val cand = pairs
           .where(size(TextFunctions.tokens(col("text"))) >= n)
           .select(col("source"), col("doc_id"), hts("text").as("ht"))
           .select(col("source"), col("doc_id"),
-            explode(expr(gramsExpr(n))).as("g"))
+            explode(TextFunctions.gramHashes(col("ht"), n)).as("g"))
           .groupBy("source", "doc_id", "g").agg(count(lit(1)).as("c_cand"))
         val ref = pairs
           .where(size(TextFunctions.tokens(col("ref_text"))) >= n)
           .select(col("doc_id"), hts("ref_text").as("ht"))
-          .select(col("doc_id"), explode(expr(gramsExpr(n))).as("g"))
+          .select(col("doc_id"), explode(TextFunctions.gramHashes(col("ht"), n)).as("g"))
           .groupBy("doc_id", "g").agg(count(lit(1)).as("c_ref"))
         cand.join(ref, Seq("doc_id", "g"), "left")
           .groupBy("source")

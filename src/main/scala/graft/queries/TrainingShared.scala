@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Tables
-import graft.functions.TextFunctions
+import graft.functions.{TextFunctions, TextKernels}
 import graft.operators.{Dedup, Similarity}
 
 /** Shared builders for the Training* query files: table access, the
@@ -71,20 +71,21 @@ private[queries] object TrainingShared {
           sequence(lit(1), size(col("hs")) - (wWin - 1)),
           i => array_min(slice(col("hs"), i, lit(wWin)))))).as("fp"))
   }
-  val WinnowP = 2147483647L // 2^31 - 1
-  val WinnowB = 1000003L
-  val WinnowP2 = 2147483629L // the next 31-bit prime down
+  val WinnowP = TextKernels.GramP // 2^31 - 1
+  val WinnowB = TextKernels.GramB
+  val WinnowP2 = TextKernels.GramP2 // the next 31-bit prime down
 
   /** 62-bit polynomial k-gram hash expr over a per-token hash array
     * `ht` (hash60 mod 2^30 — ONE md5 per token): two Horner chains mod
     * distinct 31-bit primes packed into one BIGINT (intermediates
     * ≤ ~2^52, the pack ≤ ~2^62 — exact in both engines). `i0` is the
-    * first token index of the gram — `"i-1"` for Spark's 0-based SQL
-    * arrays, `"i"` for DuckDB's 1-based lists — so the same builder
-    * emits both sides. Collision odds over 62 bits at 10^8 distinct
-    * grams are ~10^-3 per corpus: the standard hashed-shingle identity
-    * for dedup/contamination work at scale, replacing per-gram md5 AND
-    * gram-string materialization/shuffle.
+    * first token index of the gram in SQL (`"i"` over DuckDB's 1-based
+    * lists). Collision odds over 62 bits at 10^8 distinct grams are
+    * ~10^-3 per corpus: the standard hashed-shingle identity for
+    * dedup/contamination work at scale, replacing per-gram md5 AND
+    * gram-string materialization/shuffle. The engine computes the same
+    * values with the native `TextFunctions.gramHashes`; this SQL form is
+    * for the DuckDB oracles.
     */
   def gramHash62(i0: String, k: Int, arr: String = "ht"): String = {
     def chain(p: Long) = (1 until k).foldLeft(s"$arr[$i0]")((acc, j) =>

@@ -52,12 +52,15 @@ object GraftSqlBridge {
 
   /** A batch DataFrame over already-computed internal rows (no job runs
     * until an action reads it) — for operators that compute on RDDs.
+    * `originStats` gives the planner a size for it (an RDD has none, so
+    * without it the frame is assumed too large to broadcast).
     */
   def internalFrame(spark: SparkSession,
       rdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
-      schema: types.StructType): DataFrame =
-    spark.asInstanceOf[classic.SparkSession]
-      .internalCreateDataFrame(rdd, schema, isStreaming = false)
+      schema: types.StructType,
+      originStats: Option[catalyst.plans.logical.Statistics] = None): DataFrame =
+    ofRows(spark, execution.LogicalRDD(catalyst.types.DataTypeUtils.toAttributes(schema), rdd)(
+      spark.asInstanceOf[classic.SparkSession], originStats))
 
   /** Re-root a computed frame as a STREAMING DataFrame — the V1 streaming
     * `Source.getBatch` contract (the engine checks `isStreaming` on what a

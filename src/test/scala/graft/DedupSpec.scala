@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import graft.operators.Dedup
 
@@ -112,6 +113,27 @@ class DedupSpec extends SparkSpec {
     // unrelated docs keep themselves
     assert(out(4L) == (4L, true))
     assert(out(5L) == (5L, true))
+  }
+
+  test("dedupNearDupes broadcasts its labels to the join, same rows without broadcast") {
+    def run(): (Set[Row], String) = {
+      val q = Dedup.dedupNearDupes(docs(), "doc_id", "text")
+        .select("doc_id", "rep_id", "is_kept")
+      val rows = q.collect().toSet
+      (rows, q.queryExecution.executedPlan.toString)
+    }
+    val (rows, plan) = run()
+    assert(plan.contains("BroadcastHashJoin"), plan)
+    assert(!plan.contains("Exchange hashpartitioning"), plan)
+    assert(!plan.contains("SortMergeJoin"), plan)
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "-1")
+    try {
+      val (unbroadcast, plain) = run()
+      assert(!plain.contains("BroadcastHashJoin"), plain)
+      assert(unbroadcast == rows)
+    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
   test("connectedComponents: chain, star and singleton edges resolve to min id") {
