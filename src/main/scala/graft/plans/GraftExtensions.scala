@@ -41,8 +41,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         cs(1).eval().asInstanceOf[Number].intValue))
 
     ext.injectOptimizerRule(_ => RectContainsToRange)
-    ext.injectOptimizerRule(_ => WindowTopKToTopKPerKey)
-    ext.injectOptimizerRule(_ => CountDistinctToHll)
     ext.injectOptimizerRule(_ => PercentileToExact)
     ext.injectPlannerStrategy(_ => new TopKStrategy)
     ext.injectPlannerStrategy(_ => new PrefixScanStrategy)

@@ -301,9 +301,10 @@ object Analysis {
     // spread over 8 sub-keys, the other side replicated 8x. Result must
     // equal the plain join (which IS the oracle). NOTE: full-side salting
     // is the DEMO of the technique, not the production choice — the
-    // repo's own skew rung (tools/gen_skew.py + graft.SkewBench) measured
-    // it 4× WORSE than the plain join when build ≈ probe, because the
-    // salt× replication shuffle swamps the straggler it saves. For real
+    // repo's own skew rung (BENCH_SCALE.md, "Round 10 — skew-stress
+    // rung") measured it 4× WORSE than the plain join when build ≈
+    // probe, because the salt× replication shuffle swamps the straggler
+    // it saves. For real
     // big-big skew use SkewJoin.hotKeySplitJoin (q546): cold slice plain,
     // hot slice broadcast, nothing replicated.
     "q100_salted_join" -> ((s, d) => {

@@ -927,27 +927,10 @@ object TxTable {
     val staged = adds0.map(n => stats0.get(n).map(_.rows).getOrElse(1L)).sum
     val (adds, stats) =
       if (staged == 0L) {
-        // delete the staged files AND any partition subdirectories the
-        // stage created for them — a replica receiving many cancelled /
-        // layout-only syncs must not accumulate empty col=value/ dirs.
-        // The delete itself is the emptiness test: a concurrent stage may
-        // create a file in a directory at any moment, and a directory that
-        // is not empty (or already gone) ends the climb.
-        val root = Paths.get(dir)
-        adds0.foreach { n =>
-          val p = Paths.get(dir, n)
-          Files.deleteIfExists(p)
-          var parent = p.getParent
-          try {
-            while (parent != null && parent != root) {
-              Files.delete(parent)
-              parent = parent.getParent
-            }
-          } catch {
-            case _: java.nio.file.DirectoryNotEmptyException |
-                _: java.nio.file.NoSuchFileException =>
-          }
-        }
+        // Spark's partitioned writer stages no file for zero rows, so the
+        // only empty file a stage leaves sits directly under `dir` and no
+        // col=value/ directory is created for an empty apply
+        adds0.foreach(n => Files.deleteIfExists(Paths.get(dir, n)))
         (Seq.empty[String], Map.empty[String, TxStats.FileStats])
       } else (adds0, stats0)
     publish(dir, s"sync:$tag", adds, removes,

@@ -2,6 +2,8 @@ package graft
 
 import java.sql.Date
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, Row, SaveMode}
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
@@ -29,7 +31,6 @@ class PartitionedTxSpec extends SparkSpec {
 
   /** (k, region, day, v): region string (one null), day date, k long. */
   private def sample(): DataFrame = {
-    import scala.jdk.CollectionConverters._
     val schema = StructType(Seq(
       StructField("k", LongType, nullable = false),
       StructField("region", StringType, nullable = true),
@@ -314,9 +315,21 @@ class PartitionedTxSpec extends SparkSpec {
     graft.sources.TxSync.replicate(spark, src, dst, Seq("k"))
     val live = TxTable.activeFiles(dst)
     assert(live.nonEmpty && live.forall(_.startsWith("day=")), live)
+    // the empty apply stages no file into a partition directory, so it
+    // neither creates nor removes a directory under dst
+    def dirs(): Set[String] = {
+      val root = java.nio.file.Paths.get(dst)
+      val walk = java.nio.file.Files.walk(root)
+      try walk.iterator().asScala
+        .filter(java.nio.file.Files.isDirectory(_))
+        .map(root.relativize(_).toString).toSet
+      finally walk.close()
+    }
+    val dirsBefore = dirs()
     TxTable.compact(spark, src, targetFiles = 1) // layout-only: empty apply
     assert(graft.sources.TxSync.replicate(spark, src, dst, Seq("k")) == 1)
     assert(TxTable.activeFiles(dst) == live)
+    assert(dirs() == dirsBefore)
     live.foreach { f =>
       val p = java.nio.file.Paths.get(dst, f)
       assert(java.nio.file.Files.isRegularFile(p), f)

@@ -103,7 +103,8 @@ class SkewJoinSpec extends SparkSpec {
     val pb = salted.queryExecution.executedPlan.toString
     // salted replicates the ENTIRE build side salt× (the explode Generate)
     // — the shuffle volume that measured 4× WORSE than plain when
-    // build ≈ probe on the sf10 fixture (tools/gen_skew.py + SkewBench);
+    // build ≈ probe on the sf10 fixture (BENCH_SCALE.md, "Round 10 —
+    // skew-stress rung");
     // the split join never replicates: hot rides a broadcast, cold is a
     // plain shuffle join with the straggler keys removed
     assert(pb.contains("Generate"), pb)

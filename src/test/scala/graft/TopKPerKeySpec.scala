@@ -15,19 +15,28 @@ class TopKPerKeySpec extends SparkSpec {
     spark.read.parquet(s"$sf/orders.parquet")
   }
 
+  /** 3 keys x 40 rows, unique (v, id) per key for a total order. */
+  private def sample() = {
+    import spark.implicits._
+    (0 until 120).map(i => (i % 3, (i * 7919) % 120, i.toLong))
+      .toDF("k", "v", "id")
+  }
+
   test("matches window row_number <= k on a total order") {
-    val k = 3
-    val custom = TopKPerKey(orders(), Seq("o_custkey"),
-        Seq(desc("o_totalprice"), asc("o_orderkey")), k)
-      .select("o_custkey", "o_orderkey")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val w = Window.partitionBy("o_custkey").orderBy(desc("o_totalprice"), asc("o_orderkey"))
-    val windowed = orders()
-      .withColumn("rn", row_number().over(w)).where(col("rn") <= k)
-      .select("o_custkey", "o_orderkey")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(custom.nonEmpty)
-    assert(custom == windowed)
+    // (input, key, total order, k); k = 1 is the argmax form
+    val byPrice = Seq(desc("o_totalprice"), asc("o_orderkey"))
+    val byV = Seq(desc("v"), asc("id"))
+    val cases = Seq((orders(), "o_custkey", byPrice, 3),
+      (orders(), "o_custkey", byPrice, 1),
+      (sample(), "k", byV, 3), (sample(), "k", byV, 1))
+    for ((df, key, order, k) <- cases) {
+      val custom = TopKPerKey(df, Seq(key), order, k).collect().toSet
+      val w = Window.partitionBy(key).orderBy(order: _*)
+      val windowed = df.withColumn("rn", row_number().over(w))
+        .where(col("rn") <= k).drop("rn").collect().toSet
+      assert(custom.nonEmpty)
+      assert(custom == windowed, s"$key, k = $k")
+    }
   }
 
   test("k larger than group size keeps everything") {

@@ -47,15 +47,12 @@ HOLD = "--hold-density" in sys.argv
 # queries that never open them.
 DOCS_ONLY = "--docs-only" in sys.argv
 # --events-only: write events.parquet and nothing else — the storage-layer
-# scale rungs (SkipBench studies 4/5: partitioned connector reads, the
+# scale rungs (BENCH_SCALE.md, round 14: partitioned connector reads, the
 # zero-read DELETE) read only events, and a full sf100 fixture would cost
 # ~15 GB for tables those studies never touch.
 EVENTS_ONLY = "--events-only" in sys.argv
-# --keep-stopwords (only with --hold-density): see the HOLD branch below.
-KEEPSW = "--keep-stopwords" if "--keep-stopwords" in sys.argv else ""
 sys.argv = [a for a in sys.argv
-            if a not in ("--hold-density", "--docs-only", "--keep-stopwords",
-                         "--events-only")]
+            if a not in ("--hold-density", "--docs-only", "--events-only")]
 
 import duckdb
 
@@ -108,18 +105,7 @@ if HOLD:
     # lengthens every token, so copying the source's n_chars would break
     # any n_chars-vs-text consistency check); the span/pair families this
     # mode serves never read n_chars, but the column should not lie.
-    #
-    # --keep-stopwords: suffix every token EXCEPT a fixed set of common
-    # English stopwords. Plain hold-density suffixes stopwords too, so
-    # the q53 quality gate (stopword ratio > 0.001) rejects EVERY doc and
-    # any composition that includes the gate (ChainBench's full
-    # curate -> exciseKept) keeps nothing. Preserving stopwords keeps the
-    # gate alive while cross-replica shingle sharing stays negligible
-    # (only runs of >=3 consecutive stopwords collide); within-replica
-    # dedup/span structure is preserved exactly as in plain hold-density.
-    tx = ("t -> CASE WHEN t IN ('the','a','of','and','to','in','is','it')"
-          " THEN t ELSE t || '_' || r END"
-          if "--keep-stopwords" in KEEPSW else "t -> t || '_' || r")
+    tx = "t -> t || '_' || r"
     copy("documents", f"""
       SELECT doc_id + r * {DOC_N} AS doc_id,
              array_to_string(
