@@ -385,12 +385,7 @@ object Bench {
       val ok = try { qs(name)(spark, sfDir).count(); true }
         catch { case _: Throwable => false }
       val dt = (System.nanoTime() - t0) / 1e9
-      spark.catalog.clearCache() // free any persist() a query made (untimed)
-      // RDD-level storage (lineage-cut generations, localCheckpoints) is
-      // NOT in the CacheManager — release it so no query's blocks leak
-      // into the next query's timing.
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      GraftSession.release(spark) // untimed
       name -> (if (ok) Some(dt) else None)
     }
     val all = (1 to passes).map(_ => onePass())

@@ -28,9 +28,7 @@ object Explain {
       val plan = df.queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)
       Files.writeString(Paths.get(s"$outDir/${name}_$suffix.txt"), plan)
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      GraftSession.release(spark)
       System.err.println(s"[explain] $name -> $outDir/${name}_$suffix.txt")
     }
     spark.stop()

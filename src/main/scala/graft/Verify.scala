@@ -52,12 +52,7 @@ object Verify {
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
         }
         finally {
-          spark.catalog.clearCache() // free any persist() a query made
-          // RDD-level storage (lineage-cut generations, localCheckpoints)
-          // is NOT in the CacheManager — release it explicitly so no
-          // query's working set leaks into the next one's run.
-          spark.sparkContext.getPersistentRDDs.values
-            .foreach(_.unpersist(blocking = false))
+          GraftSession.release(spark)
           System.err.println(
             f"[verify] $name ${(System.nanoTime() - t0) / 1e9}%.2fs")
         }

@@ -56,6 +56,17 @@ object GraftSession {
       // site config can't silently turn the engine's skew story off.
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
 
+  /** Free what a finished query left cached: `persist()`ed frames in the
+    * CacheManager and RDD-level storage (lineage-cut generations,
+    * localCheckpoints), which the CacheManager does not track — so no
+    * query's blocks leak into the next one's run.
+    */
+  def release(spark: SparkSession): Unit = {
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values
+      .foreach(_.unpersist(blocking = false))
+  }
+
   def local(): SparkSession = {
     val s = builder().getOrCreate()
     s.sparkContext.setLogLevel("WARN")

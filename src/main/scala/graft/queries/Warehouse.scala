@@ -1066,14 +1066,14 @@ object Warehouse {
     // Zone-map data skipping made PHYSICAL (the engine-level successor
     // of q452's simulated audit): ingest lineitem into a TxTable in
     // four contiguous key-range appends — the arrival-order layout a
-    // real ingest produces — then read through `readWhere`, which
-    // evaluates the predicate against the recorded per-file min/max
-    // sidecars driver-side and scans ONLY files that can match (here:
-    // 1 of 4; TxStatsSpec pins the pruning soundness property). At
-    // 100 TB this is the difference between scanning the table and
-    // scanning the slice — O(files) metadata, zero data IO, before any
-    // task launches. The oracle replays the filter over the raw
-    // parquet, so a mis-pruned file breaks the hash.
+    // real ingest produces — then read through `readWhere`, whose
+    // predicate GraftFileIndex evaluates at planning time against the
+    // recorded per-file min/max sidecars, scanning ONLY files that can
+    // match (here: 1 of 4; TxStatsSpec pins the pruning soundness
+    // property). At 100 TB this is the difference between scanning the
+    // table and scanning the slice — O(files) metadata, zero data IO,
+    // before any task launches. The oracle replays the filter over the
+    // raw parquet, so a mis-pruned file breaks the hash.
     "q549_stats_skipping" -> ((s, d) => {
       val dir = s"/root/repo/target/tmp/txtable_q549_sf${d.hashCode.abs}"
       def del(p: java.io.File): Unit = {

@@ -75,7 +75,12 @@ final class GraftDataSource extends RelationProvider
       // computed; consumers are incremental appliers, not scan-heavy
       val from = parameters.get("startingVersion").map(_.toLong).getOrElse(0L) - 1
       ComputedRelation(sqlContext, TxTable.readChanges(spark, dir, from, asOf))
-    } else GraftFileIndex.relation(spark, dir, asOf)
+    } else {
+      val snap = TxTable.snapshot(dir, asOf)
+      if (snap.version < 0)
+        throw new IllegalArgumentException(s"no TxTable at $dir")
+      GraftFileIndex.relation(spark, snap, snap.files)
+    }
   }
 
   // ---- batch write ----

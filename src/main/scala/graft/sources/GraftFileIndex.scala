@@ -1,21 +1,24 @@
 package graft.sources
 
 import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference,
-  BoundReference, Expression, Literal, Predicate}
+  BoundReference, Expression, Predicate}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.execution.datasources.{FileIndex,
   HadoopFsRelation, PartitionDirectory}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types._
 
-/** Catalyst-integrated file listing for a [[TxTable]] snapshot — the seam
-  * that turns the table's zone-map / Bloom sidecars into CONNECTOR-level
-  * data skipping (the architecture Delta's `TahoeFileIndex` uses on the
-  * same published design, Armbrust et al., VLDB 2020; the reference's
-  * pipelines read Delta tables through exactly this path,
+/** Catalyst-integrated file listing for a [[TxTable]] snapshot — the one
+  * way the table turns data files into a scan: [[TxTable.read]],
+  * [[TxTable.readWhere]], the DML rewrites, the change feed and the
+  * `format("graft")` connector all plan through it. It turns the table's
+  * zone-map / Bloom sidecars into planning-time data skipping (the
+  * architecture Delta's `TahoeFileIndex` uses on the same published
+  * design, Armbrust et al., VLDB 2020; the reference's pipelines read
+  * Delta tables through exactly this path,
   * `gps-analytics/src/pipeline/tz_offset.scala:32-70`).
   *
   * Spark's `FileSourceStrategy` hands `listFiles` the query's partition
@@ -24,10 +27,10 @@ import org.apache.spark.sql.types._
   *  - **partition filters** are evaluated against each hive directory's
   *    typed values (recovered from the `col=value/` path segments the
   *    table's own writer produced) — classic static partition pruning;
-  *  - **data filters** are evaluated against [[TxTable.fileStats]]
-  *    per file — and since a partitioned snapshot's stats are synthesized
-  *    with `lo == hi` for partition columns, mixed predicates prune
-  *    through the same sound walker.
+  *  - **data filters** are evaluated against the snapshot's zone maps
+  *    per file ([[TxStats.prune]]), which are parsed only when a query
+  *    hands the index a data filter — a plain snapshot read never
+  *    touches the sidecars.
   *
   * Either way a plain `spark.read.format("graft").load(dir).where(p)` —
   * or the same query in pure SQL over a `USING graft` table — scans only
@@ -38,26 +41,30 @@ import org.apache.spark.sql.types._
   * Fail-open like every stats path: files without stats are kept, and
   * Spark re-applies the full predicate to every surviving row.
   *
-  * The snapshot (file list + stats + schema + layout) is pinned at
-  * construction — the connector's read is the same immutable-snapshot
-  * read as [[TxTable.read]]; concurrent commits never tear it.
+  * The index lists `names`, a subset of the pinned snapshot `snap` (all
+  * of its files for a read, the touched ones for a rewrite), so
+  * concurrent commits never tear a scan.
   */
-final class GraftFileIndex(spark: SparkSession, dir: String,
-    asOf: Option[Long]) extends FileIndex {
+final class GraftFileIndex private[sources] (snap: TxTable.Snapshot,
+    names: Seq[String]) extends FileIndex {
 
-  private val names: Seq[String] = TxTable.activeFiles(dir, asOf)
-  private val stats: Map[String, TxStats.FileStats] =
-    TxTable.fileStats(dir, asOf)
-  private val pcols: Seq[String] = TxTable.partitionColsAt(dir, asOf)
-  private val partFields: Seq[StructField] = {
-    val schema = TxTable.schemaAt(dir, asOf).getOrElse(new StructType())
-    pcols.map(c => schema(c))
-  }
+  /** Read-side schema: files written before a column evolved into the
+    * table read it as null, so every column is nullable whatever the
+    * writes declared.
+    */
+  private val schema: StructType =
+    org.apache.spark.sql.GraftSqlBridge.asNullable(snap.schema)
+  private val pcols: Seq[String] = snap.pcols
+  private val partFields: Seq[StructField] = pcols.map(c => schema(c))
   private val statuses: Map[String, FileStatus] = names.map { n =>
-    val f = new java.io.File(dir, n)
+    val f = new java.io.File(snap.dir, n)
     n -> new FileStatus(f.length, false, 1, 128L * 1024 * 1024,
       f.lastModified, new Path(f.toURI))
   }.toMap
+
+  /** The columns the data files store: the schema minus partition columns. */
+  private[sources] def dataSchema: StructType =
+    StructType(schema.filterNot(f => pcols.contains(f.name)))
 
   /** One hive directory's typed partition values, in scan (internal)
     * form: UTF8String / int days / numerics / null.
@@ -95,7 +102,7 @@ final class GraftFileIndex(spark: SparkSession, dir: String,
   @volatile var lastPrune: Option[(Int, Int)] = None
 
   override def rootPaths: Seq[Path] =
-    Seq(new Path(new java.io.File(dir).toURI))
+    Seq(new Path(new java.io.File(snap.dir).toURI))
 
   override def partitionSchema: StructType = StructType(partFields)
 
@@ -115,10 +122,12 @@ final class GraftFileIndex(spark: SparkSession, dir: String,
         bound.initialize(0)
         groups.filter { case (values, _) => bound.eval(values) }
       }
-    val cond = dataFilters.reduceOption(And).getOrElse(Literal(true))
+    val keep: Seq[String] => Seq[String] = dataFilters.reduceOption(And) match {
+      case None => identity // no data filter: the zone maps stay unparsed
+      case Some(cond) => fs => TxStats.prune(cond, snap.stats, fs)._1
+    }
     val dirs = keptGroups.map { case (values, fs) =>
-      val (kept, _) = TxStats.prune(cond, stats, fs)
-      PartitionDirectory(values, kept.map(statuses(_)).toArray)
+      PartitionDirectory(values, keep(fs).map(statuses(_)).toArray)
     }
     val keptN = dirs.map(_.files.size).sum
     lastPrune = Some((keptN, names.size - keptN))
@@ -126,7 +135,7 @@ final class GraftFileIndex(spark: SparkSession, dir: String,
   }
 
   override def inputFiles: Array[String] =
-    names.map(n => new java.io.File(dir, n).getPath).toArray
+    names.map(n => new java.io.File(snap.dir, n).getPath).toArray
 
   override def refresh(): Unit = ()
 
@@ -135,43 +144,14 @@ final class GraftFileIndex(spark: SparkSession, dir: String,
 
 object GraftFileIndex {
 
-  /** Read-side nullability: files written before a column evolved into
-    * the schema read it as null, so the scan schema must be nullable
-    * whatever the writes declared — the same `asNullable` normalization
-    * `spark.read.schema(...)` applies, re-stated here because this
-    * relation is constructed directly.
+  /** `files` of the snapshot as a `HadoopFsRelation`: the data schema
+    * from the committed schema minus partition columns (data files do not
+    * store them), the partition schema carried by the file index.
     */
-  private def nullable(dt: DataType): DataType = dt match {
-    case s: StructType => StructType(s.fields.map(f =>
-      f.copy(dataType = nullable(f.dataType), nullable = true)))
-    case a: ArrayType =>
-      a.copy(elementType = nullable(a.elementType), containsNull = true)
-    case m: MapType =>
-      m.copy(valueType = nullable(m.valueType), valueContainsNull = true)
-    case other => other
-  }
-
-  /** The snapshot as a `HadoopFsRelation`: data schema from the committed
-    * schema minus partition columns (data files do not store them), the
-    * partition schema carried by the file index.
-    */
-  def relation(spark: SparkSession, dir: String,
-      asOf: Option[Long]): HadoopFsRelation = {
-    val schema = TxTable.schemaAt(dir, asOf).getOrElse(
-      throw new IllegalArgumentException(s"no TxTable at $dir"))
-    val pcols = TxTable.partitionColsAt(dir, asOf)
-    val dataSchema = nullable(StructType(
-      schema.filterNot(f => pcols.contains(f.name)))).asInstanceOf[StructType]
-    val index = new GraftFileIndex(spark, dir, asOf)
-    HadoopFsRelation(index, index.partitionSchema, dataSchema, None,
+  private[sources] def relation(spark: SparkSession, snap: TxTable.Snapshot,
+      files: Seq[String]): HadoopFsRelation = {
+    val index = new GraftFileIndex(snap, files)
+    HadoopFsRelation(index, index.partitionSchema, index.dataSchema, None,
       new ParquetFileFormat(), Map.empty)(spark)
   }
-
-  /** The snapshot as a DataFrame (partition columns re-attached by the
-    * scan; column order is data-then-partition, Spark's file-source
-    * convention — [[TxTable.read]] projects back to committed order).
-    */
-  def frame(spark: SparkSession, dir: String, asOf: Option[Long]): DataFrame =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .baseRelationToDataFrame(relation(spark, dir, asOf))
 }

@@ -27,7 +27,8 @@ import graft.functions.FileBloom
   *
   * Design rules, in order:
   *  - **Advisory, fail-open.** Stats only ever REMOVE files from a
-  *    scan; [[TxTable.readWhere]] always applies the full predicate to
+  *    scan: every TxTable read plans through [[GraftFileIndex]], which
+  *    prunes in `listFiles`, and Spark applies the full predicate to
   *    whatever survives. A file with no stats (older commit, crashed
   *    sidecar write, unsupported column type) is simply read. Wrong
   *    results are therefore impossible by construction; stats quality
@@ -585,8 +586,14 @@ object TxStats {
             cs.hi.exists(x => cmp(x, v, dt).contains(0)))
         binCmp(fs, l, r)(neq, neq)
       case Not(inner) => canMatch(inner, fs) // ¬¬e
+      // the optimizer's form of `b = false`
+      case a: AttributeReference if a.dataType == BooleanType =>
+        canMatch(EqualTo(a, Literal(false)), fs)
       case _ => true
     }
+    // the optimizer's form of `b = true`
+    case a: AttributeReference if a.dataType == BooleanType =>
+      canMatch(EqualTo(a, Literal(true)), fs)
     case Literal(b: Boolean, BooleanType) => b
     case Literal(null, _) => false // WHERE NULL keeps nothing
     case IsNull(a) => attrOf(a).flatMap(fs.cols.get) match {

@@ -44,23 +44,9 @@ object TxSync {
     val base = TxTable.currentVersion(dstDir)
     if (base < 0) // empty target: the first window's inserts are the state
       return TxTable.merge(spark, dstDir, inserts, keys, opTag = Some(tag))
-    val affectedKeys = changes.select(keys.map(col): _*).distinct()
-    // bare file NAME (URI-independent) mapped back to the log's relative
-    // path — a partitioned replica keys files by col=value/ paths
-    val baseOf = TxTable.activeFiles(dstDir, Some(base))
-      .map(f => f.split('/').last -> f).toMap
-    val snap = TxTable.read(spark, dstDir, Some(base)).withColumn("__name",
-      element_at(split(input_file_name(), "/"), -1))
-    val touchedBases = snap
-      .join(broadcast(affectedKeys), keys, "left_semi")
-      .select("__name").distinct()
-      .collect().map(_.getString(0)).toSeq.sorted
-    val touched = touchedBases.map(baseOf).sorted
-    val kept =
-      if (touched.isEmpty)
-        TxTable.read(spark, dstDir, Some(base)).where(lit(false))
-      else snap.where(col("__name").isin(touchedBases: _*)).drop("__name")
-        .join(affectedKeys, keys, "left_anti")
+    val (touched, kept) = TxTable.carryOver(spark,
+      TxTable.snapshot(dstDir, Some(base)),
+      changes.select(keys.map(col): _*).distinct(), keys)
     TxTable.publishForSync(dstDir, kept.unionByName(inserts), touched,
       base, tag)
   }

@@ -45,8 +45,10 @@ import scala.jdk.CollectionConverters._
   *  - **Data skipping.** Every write records per-file min/max/nullCount
   *    zone maps, computed by the write tasks as they write each file
   *    ([[TxStats.WriteStats]]; an atomic `<v>.stats.tsv` sidecar next to
-  *    the commit); [[readWhere]] evaluates the predicate against them
-  *    driver-side and scans only files that can match. Advisory and
+  *    the commit). Every read is one scan over [[GraftFileIndex]], so
+  *    [[readWhere]] (and any filter over [[read]] or `format("graft")`)
+  *    has its predicate evaluated against them at planning time, in
+  *    `listFiles`, and scans only files that can match. Advisory and
   *    fail-open: a file without stats is always read, and the full
   *    predicate is re-applied to whatever survives — pruning can only
   *    ever be a performance win, never a correctness risk.
@@ -150,8 +152,10 @@ object TxTable {
   private def checkpointPath(dir: String, v: Long): Path =
     logDir(dir).resolve(f"$v%020d.checkpoint.json")
 
-  /** Latest checkpoint at or before `top`, if any: (version, files). */
-  private def latestCheckpoint(dir: String, top: Long): Option[(Long, Seq[String])] = {
+  /** Latest checkpoint at or before `top`, if any: an entry whose adds
+    * are the full live file list at its version.
+    */
+  private def latestCheckpoint(dir: String, top: Long): Option[Commit] = {
     val ld = logDir(dir)
     if (!Files.isDirectory(ld)) return None
     val vs = Files.list(ld).iterator().asScala
@@ -159,28 +163,55 @@ object TxTable {
       .filter(_.endsWith(".checkpoint.json"))
       .map(_.stripSuffix(".checkpoint.json").toLong)
       .filter(_ <= top).toSeq
-    vs.sorted.lastOption.map { v =>
-      val c = parse(Files.readString(checkpointPath(dir, v)))
-      (v, c.adds)
-    }
+    vs.sorted.lastOption.map(v => parse(Files.readString(checkpointPath(dir, v))))
   }
 
-  /** Live file names at `asOf` (default latest): replay adds minus
-    * removes in version order, starting from the newest checkpoint at or
-    * before `asOf`.
+  /** Live file names at version `top` and the entry that describes that
+    * version (its schema and layout): replay adds minus removes in version
+    * order, starting from the newest checkpoint at or before `top`.
     */
-  def activeFiles(dir: String, asOf: Option[Long] = None): Seq[String] = {
-    val top = asOf.getOrElse(currentVersion(dir))
-    val (from, seed) = latestCheckpoint(dir, top)
-      .map { case (v, fs) => (v + 1, fs) }.getOrElse((0L, Seq.empty[String]))
+  private def replay(dir: String, top: Long): (Seq[String], Option[Commit]) = {
+    val ckpt = latestCheckpoint(dir, top)
     val live = collection.mutable.LinkedHashSet.empty[String]
-    live ++= seed
-    (from to top).foreach { v =>
+    ckpt.foreach(live ++= _.adds)
+    var last = ckpt
+    (ckpt.map(_.version + 1).getOrElse(0L) to top).foreach { v =>
       val c = parse(Files.readString(entryPath(dir, v)))
       c.removes.foreach(live.remove); live ++= c.adds
+      last = Some(c)
     }
-    live.toSeq
+    (live.toSeq, last)
   }
+
+  /** Live file names at `asOf` (default latest). */
+  def activeFiles(dir: String, asOf: Option[Long] = None): Seq[String] =
+    replay(dir, asOf.getOrElse(currentVersion(dir)))._1
+
+  /** One resolved snapshot: a version with its live files, committed
+    * schema and partition columns, pinned together so a read never pairs
+    * one version's files with another's schema or layout. Every scan of
+    * the table is built from one ([[scan]]). The zone maps parse on first
+    * use only: [[GraftFileIndex]] asks for them when a query hands it a
+    * data filter, DML when it prunes or carries Bloom columns over.
+    */
+  private[sources] final case class Snapshot(dir: String, version: Long,
+      files: Seq[String], schema: StructType, pcols: Seq[String]) {
+    lazy val stats: Map[String, TxStats.FileStats] = zoneMaps(this)
+  }
+
+  /** The snapshot at `asOf` (default latest), its version resolved once.
+    * An absent table is version -1 with no files and an empty schema.
+    */
+  private[sources] def snapshot(dir: String, asOf: Option[Long] = None): Snapshot = {
+    val v = asOf.getOrElse(currentVersion(dir))
+    val (files, c) = replay(dir, v)
+    Snapshot(dir, v, files, c.flatMap(schemaOf).getOrElse(new StructType()),
+      c.map(_.partitionBy).getOrElse(Nil))
+  }
+
+  private def schemaOf(c: Commit): Option[StructType] =
+    Some(c.schemaJson).filter(_.nonEmpty)
+      .map(DataType.fromJson(_).asInstanceOf[StructType])
 
   /** The commit at `asOf` (default latest; capped at the latest), if any.
     * Every commit carries the table's schema and partitioning, so this one
@@ -193,9 +224,7 @@ object TxTable {
 
   /** Committed schema at `asOf` (default latest), if any commit exists. */
   def schemaAt(dir: String, asOf: Option[Long] = None): Option[StructType] =
-    commitAt(dir, asOf).filter(_.schemaJson.nonEmpty).map(c =>
-      org.apache.spark.sql.types.DataType.fromJson(c.schemaJson)
-        .asInstanceOf[StructType])
+    commitAt(dir, asOf).flatMap(schemaOf)
 
   /** The table's partition columns at `asOf` (empty = unpartitioned):
     * the commit's own list; an overwrite may change it (it replaces the
@@ -256,25 +285,22 @@ object TxTable {
     * snapshot still carries the committed schema.
     */
   def read(spark: SparkSession, dir: String, asOf: Option[Long] = None): DataFrame = {
-    val pcols = partitionColsAt(dir, asOf)
-    if (pcols.nonEmpty) {
-      // partitioned: the file-source relation re-attaches partition values
-      // from the directory names (data files do not store them); project
-      // back to the committed column order
-      val schema = schemaAt(dir, asOf).getOrElse(new StructType())
-      return GraftFileIndex.frame(spark, dir, asOf)
-        .select(schema.fieldNames.map(col).toIndexedSeq: _*)
-    }
-    val files = activeFiles(dir, asOf)
-    val schema = schemaAt(dir, asOf)
-    if (files.nonEmpty)
-      schema.map(s => spark.read.schema(s))
-        .getOrElse(spark.read)
-        .parquet(files.map(f => s"$dir/$f"): _*)
-    else
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        schema.getOrElse(new StructType()))
+    val s = snapshot(dir, asOf)
+    scan(spark, s, s.files)
+  }
+
+  /** The one way the table turns data files into a scan: `files` of `s`
+    * through a [[GraftFileIndex]] pinned to `s`, in committed column
+    * order. The file-source relation re-attaches partition values from the
+    * directory names (data files do not store them) after the data
+    * columns; a partitioned scan projects back.
+    */
+  private[sources] def scan(spark: SparkSession, s: Snapshot,
+      files: Seq[String]): DataFrame = {
+    val df = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .baseRelationToDataFrame(GraftFileIndex.relation(spark, s, files))
+    if (s.pcols.isEmpty) df
+    else df.select(s.schema.fieldNames.map(col).toIndexedSeq: _*)
   }
 
   private def statsPath(dir: String, v: Long): Path =
@@ -290,97 +316,81 @@ object TxTable {
     * the sidecars after the newest checkpoint at or before `asOf`.
     * Never data IO.
     */
-  def fileStats(dir: String, asOf: Option[Long] = None): Map[String, TxStats.FileStats] = {
-    val ld = logDir(dir)
+  def fileStats(dir: String, asOf: Option[Long] = None): Map[String, TxStats.FileStats] =
+    snapshot(dir, asOf).stats
+
+  private def zoneMaps(s: Snapshot): Map[String, TxStats.FileStats] = {
+    val ld = logDir(s.dir)
     if (!Files.isDirectory(ld)) return Map.empty
-    val top = asOf.getOrElse(currentVersion(dir))
     def versionsOf(suffix: String): Seq[Long] = Files.list(ld).iterator().asScala
       .map(_.getFileName.toString)
       .filter(n => n.endsWith(suffix) &&
         n.stripSuffix(suffix).forall(_.isDigit))
       .map(_.stripSuffix(suffix).toLong)
-      .filter(_ <= top).toSeq.sorted
+      .filter(_ <= s.version).toSeq.sorted
     val ckptV = versionsOf(".stats.ckpt.tsv").lastOption
     val seed = ckptV
-      .map(v => TxStats.parse(Files.readString(statsCkptPath(dir, v))))
+      .map(v => TxStats.parse(Files.readString(statsCkptPath(s.dir, v))))
       .getOrElse(Map.empty[String, TxStats.FileStats])
     val stored = versionsOf(".stats.tsv")
       .filter(v => ckptV.forall(_ < v))
       .foldLeft(seed) { (m, v) =>
-        m ++ TxStats.parse(Files.readString(statsPath(dir, v)))
+        m ++ TxStats.parse(Files.readString(statsPath(s.dir, v)))
       }
     // partitioned table: each live file's partition values (from its
     // path) become per-file zone maps with lo == hi — partition pruning
     // is thereby ordinary stats pruning, sound for ANY predicate shape
     // the walker understands, including mixed partition+data conditions
-    val pcols = partitionColsAt(dir, asOf)
-    if (pcols.isEmpty) return stored
-    schemaAt(dir, asOf) match {
-      case None => stored
-      case Some(schema) =>
-        val fields = pcols.map(c => schema(c))
-        stored ++ activeFiles(dir, asOf).map { f =>
-          val base = stored.getOrElse(f,
-            TxStats.FileStats(Long.MaxValue, Map.empty))
-          val synth = fields.zip(partRaw(f, pcols)).map { case (fd, raw) =>
-            val tag = partTag(fd.dataType)
-            fd.name -> (raw match {
-              case None => // hive null partition: all rows null here
-                TxStats.ColStats(tag, base.rows, None, None)
-              case Some(r) => partNorm(r, fd.dataType) match {
-                case s: String =>
-                  // the same truncation soundness rule stored stats use
-                  val (lo, hi) = TxStats.strBounds(s, s)
-                  TxStats.ColStats(tag, 0L, lo, hi)
-                case v =>
-                  TxStats.ColStats(tag, 0L, Some(v), Some(v))
-              }
-            })
-          }
-          f -> base.copy(cols = base.cols ++ synth)
-        }.toMap
+    if (s.pcols.isEmpty) stored
+    else {
+      val fields = s.pcols.map(c => s.schema(c))
+      stored ++ s.files.map { f =>
+        val base = stored.getOrElse(f,
+          TxStats.FileStats(Long.MaxValue, Map.empty))
+        val synth = fields.zip(partRaw(f, s.pcols)).map { case (fd, raw) =>
+          val tag = partTag(fd.dataType)
+          fd.name -> (raw match {
+            case None => // hive null partition: all rows null here
+              TxStats.ColStats(tag, base.rows, None, None)
+            case Some(r) => partNorm(r, fd.dataType) match {
+              case str: String =>
+                // the same truncation soundness rule stored stats use
+                val (lo, hi) = TxStats.strBounds(str, str)
+                TxStats.ColStats(tag, 0L, lo, hi)
+              case v =>
+                TxStats.ColStats(tag, 0L, Some(v), Some(v))
+            }
+          })
+        }
+        f -> base.copy(cols = base.cols ++ synth)
+      }.toMap
     }
   }
 
   /** Split the snapshot's live files into (kept, skipped) under
     * `predicate` using the recorded zone maps. Observability seam for
-    * specs and benchmarks; [[readWhere]] is the consuming read path.
+    * specs, benchmarks and DML; a scan prunes the same way at planning
+    * time in [[GraftFileIndex]].
     */
   def pruneFiles(spark: SparkSession, dir: String, predicate: org.apache.spark.sql.Column,
-      asOf: Option[Long] = None): (Seq[String], Seq[String]) = {
-    val files = activeFiles(dir, asOf)
-    schemaAt(dir, asOf) match {
-      case None => (files, Nil)
-      case Some(schema) =>
-        val cond = TxStats.resolve(spark, schema, predicate)
-        TxStats.prune(cond, fileStats(dir, asOf), files)
-    }
-  }
+      asOf: Option[Long] = None): (Seq[String], Seq[String]) =
+    prune(spark, snapshot(dir, asOf), predicate)
+
+  private def prune(spark: SparkSession, s: Snapshot,
+      predicate: org.apache.spark.sql.Column): (Seq[String], Seq[String]) =
+    if (s.files.isEmpty) (Nil, Nil)
+    else TxStats.prune(TxStats.resolve(spark, s.schema, predicate), s.stats, s.files)
 
   /** Snapshot read that SKIPS files whose zone maps prove they cannot
-    * contain a matching row, then applies the full predicate to the
-    * survivors. Semantically identical to `read(...).where(predicate)`;
-    * at 100 TB it is the difference between scanning the table and
-    * scanning the slice the query touches.
+    * contain a matching row: `read(...).where(predicate)`, whose data
+    * filters reach [[GraftFileIndex]]'s `listFiles` at planning time
+    * (partition values and zone maps), and Spark applies the full
+    * predicate to the survivors. At 100 TB it is the difference between
+    * scanning the table and scanning the slice the query touches.
     */
   def readWhere(spark: SparkSession, dir: String, predicate: org.apache.spark.sql.Column,
-      asOf: Option[Long] = None): DataFrame = {
-    if (partitionColsAt(dir, asOf).nonEmpty)
-      // the relation prunes in listFiles (partition values + zone maps)
-      // and re-attaches partition columns; Spark re-applies the predicate
-      return read(spark, dir, asOf).where(predicate)
-    val (kept, _) = pruneFiles(spark, dir, predicate, asOf)
-    val schema = schemaAt(dir, asOf)
-    val base =
-      if (kept.nonEmpty)
-        schema.map(s => spark.read.schema(s)).getOrElse(spark.read)
-          .parquet(kept.map(f => s"$dir/$f"): _*)
-      else
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          schema.getOrElse(new StructType()))
-    base.where(predicate)
-  }
+      asOf: Option[Long] = None): DataFrame =
+    read(spark, dir, asOf).where(predicate)
 
   /** Parquet whose timestamps are written as TIMESTAMP(MICROS), not
     * Spark's INT96 default, set on the write job's own Hadoop conf (never
@@ -436,10 +446,8 @@ object TxTable {
   /** Bloom columns of the files a rewrite replaces: a rewritten row keeps
     * the point-lookup index its file had.
     */
-  private def bloomsOf(dir: String, base: Long, files: Seq[String]): Seq[String] = {
-    val stats = fileStats(dir, Some(base))
-    files.flatMap(f => stats.get(f).toSeq.flatMap(_.blooms.keys)).distinct.sorted
-  }
+  private def bloomsOf(s: Snapshot, files: Seq[String]): Seq[String] =
+    files.flatMap(f => s.stats.get(f).toSeq.flatMap(_.blooms.keys)).distinct.sorted
 
   /** Publish a commit. Appends (`basedOn = None`) are order-independent:
     * they claim the next free version, retrying on collision. Semantic
@@ -491,21 +499,20 @@ object TxTable {
         // best-effort bounded-replay checkpoint; a crash before this
         // write only means readers replay from the previous checkpoint
         if (v > 0 && v % CheckpointEvery == 0) {
-          val live = activeFiles(dir, Some(v))
+          val snap = snapshot(dir, Some(v))
           val ct = logDir(dir).resolve(s".ckpt-${java.util.UUID.randomUUID()}")
-          Files.writeString(ct, render(Commit(v, "checkpoint", live, Nil,
-            schemaAt(dir, Some(v)).map(_.json).getOrElse(""),
-            partitionColsAt(dir, Some(v)))))
+          Files.writeString(ct, render(Commit(v, "checkpoint", snap.files, Nil,
+            snap.schema.json, snap.pcols)))
           try Files.move(ct, checkpointPath(dir, v),
             StandardCopyOption.ATOMIC_MOVE)
           catch { case _: java.nio.file.FileAlreadyExistsException =>
             Files.delete(ct) }
           // consolidated zone-map checkpoint on the same cadence, live
           // files only (bounds stats replay AND sheds dead entries)
-          val liveSet = live.toSet
+          val liveSet = snap.files.toSet
           val sct = logDir(dir).resolve(s".sckpt-${java.util.UUID.randomUUID()}")
           Files.writeString(sct, TxStats.render(
-            fileStats(dir, Some(v)).filter(kv => liveSet(kv._1))))
+            snap.stats.filter(kv => liveSet(kv._1))))
           try Files.move(sct, statsCkptPath(dir, v),
             StandardCopyOption.ATOMIC_MOVE)
           catch { case _: java.nio.file.FileAlreadyExistsException =>
@@ -644,9 +651,8 @@ object TxTable {
       expectedVersion: Option[Long] = None): Long = {
     val base = currentVersion(dir)
     requireVersion(dir, expectedVersion, base, "compact")
-    val pcols = partitionColsAt(dir, Some(base))
-    val before = activeFiles(dir, Some(base))
-    val snap = read(spark, dir, Some(base))
+    val s = snapshot(dir, Some(base))
+    val snap = scan(spark, s, s.files)
     val arranged =
       if (zorderBy.isEmpty) snap.coalesce(math.max(targetFiles, 1))
       else snap
@@ -657,41 +663,11 @@ object TxTable {
     // a partitioned snapshot re-stages through the partitioned writer —
     // the layout survives OPTIMIZE; targetFiles bounds the write
     // parallelism, per-directory files follow from it
-    val blooms = if (bloomFor.nonEmpty) bloomFor else bloomsOf(dir, base, before)
-    val (names, stats) = stage(arranged, dir, pcols, blooms)
+    val blooms = if (bloomFor.nonEmpty) bloomFor else bloomsOf(s, s.files)
+    val (names, stats) = stage(arranged, dir, s.pcols, blooms)
     publish(dir, if (zorderBy.isEmpty) "compact" else "zorder",
-      names, before, snap.schema.json, basedOn = Some(base), stats = stats,
-      partitionBy = pcols)
-  }
-
-  /** Snapshot slice of specific live files with partition columns
-    * re-attached (typed, cast from each file's path values) — the read
-    * the DML rewrites and the CDF diff run on a partitioned table. One
-    * plain schema-pinned scan when unpartitioned; one scan per touched
-    * partition DIRECTORY unioned otherwise — O(touched directories)
-    * plan nodes, which the callers' file pruning already bounds.
-    */
-  private def readFilesAs(spark: SparkSession, dir: String,
-      files: Seq[String], schema: StructType,
-      pcols: Seq[String]): DataFrame = {
-    if (files.isEmpty)
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    if (pcols.isEmpty)
-      return spark.read.schema(schema).parquet(files.map(f => s"$dir/$f"): _*)
-    val dataSchema = StructType(
-      schema.filterNot(f => pcols.contains(f.name)))
-    files.groupBy(f => f.take(f.lastIndexOf('/') + 1)).toSeq.sortBy(_._1)
-      .map { case (_, fs) =>
-        val raws = partRaw(fs.head, pcols)
-        val base = spark.read.schema(dataSchema)
-          .parquet(fs.map(f => s"$dir/$f"): _*)
-        pcols.zip(raws).foldLeft(base) { case (df, (c, raw)) =>
-          // hive path values cast exactly from their string form
-          df.withColumn(c, raw.map(lit(_)).getOrElse(lit(null))
-            .cast(schema(c).dataType))
-        }.select(schema.fieldNames.map(col).toIndexedSeq: _*)
-      }.reduce(_.unionByName(_))
+      names, s.files, snap.schema.json, basedOn = Some(base), stats = stats,
+      partitionBy = s.pcols)
   }
 
   /** DELETE WHERE: copy-on-write removal of rows matching `predicate`,
@@ -710,10 +686,10 @@ object TxTable {
     val base = currentVersion(dir)
     requireVersion(dir, expectedVersion, base, "delete")
     if (base < 0) return base
-    val (touched, _) = pruneFiles(spark, dir, predicate, Some(base))
+    val s = snapshot(dir, Some(base))
+    val cond = TxStats.resolve(spark, s.schema, predicate)
+    val (touched, _) = TxStats.prune(cond, s.stats, s.files)
     if (touched.isEmpty) return base
-    val schema = schemaAt(dir, Some(base)).getOrElse(new StructType())
-    val pcols = partitionColsAt(dir, Some(base))
     // ZERO-READ DROP: a file whose stats prove EVERY row matches the
     // delete predicate ([[TxStats.mustMatchAll]] — e.g. a whole dropped
     // partition's lo==hi value, or an expired retention range entirely
@@ -721,15 +697,12 @@ object TxTable {
     // 100 TB this makes partition drops and retention sweeps
     // metadata-only; only boundary files are rewritten. Fail-open as
     // ever: stats-less or straddling files take the copy-on-write path.
-    val cond = TxStats.resolve(spark, schema, predicate)
-    val allStats = fileStats(dir, Some(base))
     val rewrite = touched.filterNot(f =>
-      allStats.get(f).exists(TxStats.mustMatchAll(cond, _)))
-    val kept = readFilesAs(spark, dir, rewrite, schema, pcols)
-      .where(!coalesce(predicate, lit(false)))
-    val (names, stats) = stage(kept, dir, pcols, bloomsOf(dir, base, rewrite))
-    publish(dir, "delete", names, touched, schema.json,
-      basedOn = Some(base), stats = stats, partitionBy = pcols)
+      s.stats.get(f).exists(TxStats.mustMatchAll(cond, _)))
+    val kept = scan(spark, s, rewrite).where(!coalesce(predicate, lit(false)))
+    val (names, stats) = stage(kept, dir, s.pcols, bloomsOf(s, rewrite))
+    publish(dir, "delete", names, touched, s.schema.json,
+      basedOn = Some(base), stats = stats, partitionBy = s.pcols)
   }
 
   /** UPDATE SET ... WHERE: copy-on-write in-place edit of matching rows,
@@ -746,16 +719,16 @@ object TxTable {
     val base = currentVersion(dir)
     requireVersion(dir, expectedVersion, base, "update")
     if (base < 0) return base
-    val (touched, _) = pruneFiles(spark, dir, predicate, Some(base))
+    val s = snapshot(dir, Some(base))
+    val (touched, _) = prune(spark, s, predicate)
     if (touched.isEmpty) return base
-    val schema = schemaAt(dir, Some(base)).getOrElse(new StructType())
-    val pcols = partitionColsAt(dir, Some(base))
+    val schema = s.schema
     val unknown = set.keySet.diff(schema.fieldNames.toSet)
     require(unknown.isEmpty, s"UPDATE of unknown column(s): $unknown")
     val hit = coalesce(predicate, lit(false))
     // SET on a partition column is legal: the rewrite re-stages through
     // the partitioned writer, so moved rows land in their new directory
-    val updated = readFilesAs(spark, dir, touched, schema, pcols)
+    val updated = scan(spark, s, touched)
       .withColumns(set.map { case (c, e) =>
         c -> when(hit, e.cast(schema(c).dataType)).otherwise(col(c))
       })
@@ -763,9 +736,9 @@ object TxTable {
     require(updated.schema.fields.map(f => (f.name, f.dataType)).sameElements(
       schema.fields.map(f => (f.name, f.dataType))),
       "UPDATE must preserve column types")
-    val (names, stats) = stage(updated, dir, pcols, bloomsOf(dir, base, touched))
+    val (names, stats) = stage(updated, dir, s.pcols, bloomsOf(s, touched))
     publish(dir, "update", names, touched, schema.json,
-      basedOn = Some(base), stats = stats, partitionBy = pcols)
+      basedOn = Some(base), stats = stats, partitionBy = s.pcols)
   }
 
   /** MERGE (upsert): rows of `source` replace same-key rows, new keys
@@ -785,28 +758,36 @@ object TxTable {
         evolve(dir, source.schema).json, basedOn = Some(base),
         stats = stats0)
     }
-    val pcols = partitionColsAt(dir, Some(base))
-    // bare file NAME (the URI-independent token) mapped back to the log's
-    // relative path; basenames are UUID-token-unique across the table
-    val baseOf = activeFiles(dir, Some(base))
-      .map(f => f.split('/').last -> f).toMap
-    val snap = read(spark, dir, Some(base)).withColumn("__name",
-      element_at(split(input_file_name(), "/"), -1))
-    val srcKeys = source.select(keys.map(col): _*).distinct()
-    val touchedBases = snap
-      .join(broadcast(srcKeys), keys, "left_semi")
-      .select("__name").distinct()
-      .collect().map(_.getString(0)).toSeq.sorted
-    val touched = touchedBases.map(baseOf).sorted
-    val kept =
-      if (touched.isEmpty) read(spark, dir).where(lit(false)) // pure insert
-      else snap.where(col("__name").isin(touchedBases: _*)).drop("__name")
-        .join(srcKeys, keys, "left_anti")
-    val newData = kept.unionByName(source)
-    val (names, stats) = stage(newData, dir, pcols, bloomsOf(dir, base, touched))
+    val s = snapshot(dir, Some(base))
+    val (touched, kept) = carryOver(spark, s,
+      source.select(keys.map(col): _*).distinct(), keys)
+    val (names, stats) = stage(kept.unionByName(source), dir, s.pcols,
+      bloomsOf(s, touched))
     publish(dir, op, names, touched,
       evolve(dir, source.schema).json, basedOn = Some(base), stats = stats,
-      partitionBy = pcols)
+      partitionBy = s.pcols)
+  }
+
+  /** The copy-on-write half of a keyed upsert (MERGE and the sync apply):
+    * the files of `s` holding a row whose `keys` appear in `keyRows`, and
+    * the rows of those files whose keys do not. One semi-join over the
+    * snapshot tagged with `input_file_name()` finds the files; the
+    * carried rows are an anti-join over a scan of just those files.
+    */
+  private[sources] def carryOver(spark: SparkSession, s: Snapshot,
+      keyRows: DataFrame, keys: Seq[String]): (Seq[String], DataFrame) = {
+    // bare file NAME (the URI-independent token) mapped back to the log's
+    // relative path; basenames are UUID-token-unique across the table
+    val baseOf = s.files.map(f => f.split('/').last -> f).toMap
+    val touched = scan(spark, s, s.files)
+      .withColumn("__name", element_at(split(input_file_name(), "/"), -1))
+      .join(broadcast(keyRows), keys, "left_semi")
+      .select("__name").distinct()
+      .collect().map(r => baseOf(r.getString(0))).toSeq.sorted
+    val kept =
+      if (touched.isEmpty) scan(spark, s, Nil) // pure insert
+      else scan(spark, s, touched).join(keyRows, keys, "left_anti")
+    (touched, kept)
   }
 
   /** Change data feed: NET row-level changes committed in versions
@@ -844,24 +825,13 @@ object TxTable {
     val parts = commits.filterNot(c => layoutOnly(c.op)).flatMap { c =>
       if (c.adds.isEmpty && c.removes.isEmpty) None
       else {
-        val schema = Option(c.schemaJson).filter(_.nonEmpty)
-          .map(j => org.apache.spark.sql.types.DataType.fromJson(j)
-            .asInstanceOf[StructType])
-        // partitioned files re-attach partition values per path. Adds
-        // carry the commit's own layout; removes were live at v-1, so
+        val schema = schemaOf(c).getOrElse(new StructType())
+        // Adds carry the commit's own layout; removes were live at v-1, so
         // they carry the PREVIOUS layout (an overwrite may differ).
-        def rd(files: Seq[String], pcols: Seq[String]): DataFrame =
-          if (files.isEmpty)
-            spark.createDataFrame(
-              spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-              schema.getOrElse(new StructType()))
-          else if (pcols.nonEmpty)
-            readFilesAs(spark, dir, files, schema.getOrElse(sys.error(
-              s"partitioned commit ${c.version} lacks a schema")), pcols)
-          else schema.map(s => spark.read.schema(s)).getOrElse(spark.read)
-            .parquet(files.map(f => s"$dir/$f"): _*)
-        val added = rd(c.adds, c.partitionBy)
-        val removed = rd(c.removes,
+        def rd(v: Long, files: Seq[String], pcols: Seq[String]): DataFrame =
+          scan(spark, Snapshot(dir, v, files, schema, pcols), files)
+        val added = rd(c.version, c.adds, c.partitionBy)
+        val removed = rd(c.version - 1, c.removes,
           layoutOf.getOrElse(c.version - 1, Nil))
         // Net diff in ONE pass: the textbook `added EXCEPT ALL removed` /
         // `removed EXCEPT ALL added` pair costs two full
@@ -897,10 +867,11 @@ object TxTable {
       }
     }
     if (parts.isEmpty) {
-      val base = schemaAt(dir, Some(top)).getOrElse(new StructType())
-        .add("_change_type", "string").add("_commit_version", "long")
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], base)
+      val schema = allCommits.lastOption.flatMap(schemaOf)
+        .getOrElse(new StructType())
+      scan(spark, Snapshot(dir, top, Nil, schema, Nil), Nil)
+        .withColumn("_change_type", lit(null).cast(StringType))
+        .withColumn("_commit_version", lit(null).cast(LongType))
     } else parts.reduce(_.unionByName(_, allowMissingColumns = true))
   }
 

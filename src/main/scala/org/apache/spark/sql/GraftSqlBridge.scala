@@ -50,6 +50,12 @@ object GraftSqlBridge {
     finally prev.foreach(sc.conf.set(key, _))
   }
 
+  /** `schema` with every field, array element and map value nullable —
+    * the read-side normalization Spark's own file sources apply to a
+    * user-specified schema.
+    */
+  def asNullable(schema: types.StructType): types.StructType = schema.asNullable
+
   /** A batch DataFrame over already-computed internal rows (no job runs
     * until an action reads it) — for operators that compute on RDDs.
     * `originStats` gives the planner a size for it (an RDD has none, so

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.{AnalysisException, DataFrame, SaveMode}
-import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 import graft.sources.TxTable
 
@@ -29,23 +28,6 @@ class GraftConnectorSpec extends SparkSpec {
     (lo until hi).map(i => (i, s"name-$i", i * 10.0)).toDF("k", "s", "v")
       .repartition(1)
   }
-
-  /** Every file scan in the executed plan, descending through AQE roots
-    * AND materialized query stages (leaf nodes that `collect` won't
-    * traverse).
-    */
-  private def fileScans(p: org.apache.spark.sql.execution.SparkPlan)
-      : Seq[FileSourceScanExec] = p match {
-    case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-      fileScans(a.executedPlan)
-    case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-      fileScans(q.plan)
-    case s: FileSourceScanExec => Seq(s)
-    case other => other.children.flatMap(fileScans)
-  }
-
-  private def fileScans(df: DataFrame): Seq[FileSourceScanExec] =
-    fileScans(df.queryExecution.executedPlan)
 
   /** numFiles of the (single) file scan after executing `df`. */
   private def scannedFiles(df: DataFrame): Long = {

@@ -5,10 +5,11 @@ import java.sql.Date
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Row, SaveMode}
-import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.sources.TxTable
+import org.apache.spark.sql.util.QueryExecutionListener
+import graft.sources.{GraftFileIndex, TxTable}
 
 /** Hive-partitioned TxTables: layout on disk, value re-attachment (typed,
   * including null partitions), static partition pruning AND synthesized
@@ -44,20 +45,9 @@ class PartitionedTxSpec extends SparkSpec {
       .repartition(2)
   }
 
-  private def fileScans(p: org.apache.spark.sql.execution.SparkPlan)
-      : Seq[FileSourceScanExec] = p match {
-    case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-      fileScans(a.executedPlan)
-    case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-      fileScans(q.plan)
-    case s: FileSourceScanExec => Seq(s)
-    case other => other.children.flatMap(fileScans)
-  }
-
   private def scannedFiles(df: DataFrame): Long = {
     df.collect()
-    fileScans(df.queryExecution.executedPlan)
-      .map(_.metrics("numFiles").value).sum
+    fileScans(df).map(_.metrics("numFiles").value).sum
   }
 
   test("roundtrip: partition values re-attached, typed, null partition kept") {
@@ -282,6 +272,74 @@ class PartitionedTxSpec extends SparkSpec {
     assert(byV((0L, "insert")) == 60)
     // net diff at v1: 5 identical rows cancel, 55 deletes
     assert(byV((1L, "delete")) == 55 && !byV.contains((1L, "insert")))
+  }
+
+  test("a DML rewrite over three partition directories plans one scan") {
+    val dir = freshDir("dml_onescan")
+    val df = sample().where(col("region").isNotNull)
+    TxTable.append(df, dir, partitionBy = Seq("region"))
+    val before = TxTable.activeFiles(dir)
+    assert(before.map(f => f.take(f.indexOf('/'))).distinct.size == 3, before)
+    // the rewrite runs as the staging write's one "save" execution
+    val saves = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution,
+          durationNs: Long): Unit = if (funcName == "save") saves.add(qe)
+      override def onFailure(funcName: String, qe: QueryExecution,
+          exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      TxTable.update(spark, dir, col("k") >= 0L, Map("v" -> (col("v") + 1.0)))
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    assert(saves.size == 1)
+    val scans = fileScans(saves.peek().executedPlan)
+    assert(scans.size == 1, s"${scans.size} scans")
+    assert(scans.head.relation.location.isInstanceOf[GraftFileIndex])
+    assert(scans.head.metrics("numFiles").value == before.size)
+    assert(TxTable.read(spark, dir).orderBy("k").collect().toSeq ==
+      df.withColumn("v", col("v") + 1.0).orderBy("k").collect().toSeq)
+  }
+
+  test("reads racing re-partitioning overwrites each see one committed version") {
+    val dir = freshDir("race")
+    val s = spark
+    import s.implicits._
+    def rows(n: Int): DataFrame =
+      (0 until n).map(i => (i.toLong, i % 3, i % 2)).toDF("k", "p", "q")
+    // overwrite i commits 10 + i rows, alternating the p and q layouts (a
+    // table cannot be overwritten back to unpartitioned: an overwrite
+    // without partitionBy inherits the layout)
+    val overwrites = 24
+    TxTable.overwrite(rows(10), dir, partitionBy = Seq("p"))
+    val committed = (0 to overwrites).map(i => 10L + i).toSet
+    val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val reads = new java.util.concurrent.atomic.AtomicInteger()
+    val writing = new java.util.concurrent.atomic.AtomicBoolean(true)
+    val writer = new Thread(() => {
+      try (1 to overwrites).foreach { i =>
+        TxTable.overwrite(rows(10 + i), dir,
+          partitionBy = Seq(if (i % 2 == 0) "p" else "q"))
+      } catch { case t: Throwable => errs.add(t) }
+      finally writing.set(false)
+    })
+    def reader(count: () => Long): Thread = new Thread(() => {
+      while (writing.get()) {
+        try {
+          val n = count()
+          reads.incrementAndGet()
+          if (!committed(n)) errs.add(new AssertionError(s"read $n rows"))
+        } catch { case t: Throwable => errs.add(t) }
+      }
+    })
+    val readers = Seq(
+      reader(() => TxTable.read(spark, dir).count()),
+      reader(() => spark.read.format("graft").load(dir).count()))
+    writer.start(); readers.foreach(_.start())
+    writer.join(); readers.foreach(_.join())
+    assert(errs.isEmpty, errs.asScala.take(3).mkString("; "))
+    assert(reads.get() > 0)
   }
 
   test("TxSync replicates a partitioned source into a partitioned replica") {

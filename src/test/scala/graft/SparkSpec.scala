@@ -2,7 +2,9 @@ package graft
 
 import graft.core.GraftSession
 import scala.jdk.CollectionConverters._
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,6 +13,20 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
+
+  /** Every file scan in the executed plan, descending through AQE roots
+    * AND materialized query stages (leaf nodes that `collect` won't
+    * traverse).
+    */
+  protected def fileScans(p: SparkPlan): Seq[FileSourceScanExec] = p match {
+    case a: AdaptiveSparkPlanExec => fileScans(a.executedPlan)
+    case q: QueryStageExec => fileScans(q.plan)
+    case s: FileSourceScanExec => Seq(s)
+    case other => other.children.flatMap(fileScans)
+  }
+
+  protected def fileScans(df: DataFrame): Seq[FileSourceScanExec] =
+    fileScans(df.queryExecution.executedPlan)
 
   /** Properties of every Spark job `body` starts (seen by a listener
     * keyed by a fresh job group).

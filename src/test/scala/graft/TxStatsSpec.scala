@@ -346,9 +346,31 @@ class TxStatsSpec extends SparkSpec {
         assert(n == 0, s"UNSOUND: $p skipped $f which has $n matching rows")
       }
       val expect = snap.where(p).collect().map(_.toString).sorted.toSeq
-      val got = TxTable.readWhere(spark, dir, p).collect()
-        .map(_.toString).sorted.toSeq
+      val scan = TxTable.readWhere(spark, dir, p)
+      val got = scan.collect().map(_.toString).sorted.toSeq
       assert(got == expect, s"$p: readWhere diverged")
+      // the planning-time pruning loses nothing against pruneFiles (a
+      // filter the optimizer proves empty plans no scan at all)
+      val scanned = fileScans(scan).map(_.metrics("numFiles").value).sum
+      assert(scanned == kept.size,
+        s"$p: readWhere scanned $scanned files, pruneFiles keeps ${kept.size}")
+    }
+  }
+
+  test("plain snapshot reads never parse the zone-map sidecars; a filtered read does") {
+    val dir = freshDir("lazy")
+    buildTable(dir)
+    val n = TxTable.read(spark, dir).count()
+    // sidecars that fail to parse: only a read handed a data filter may notice
+    val log = java.nio.file.Paths.get(dir, "_txlog")
+    log.toFile.listFiles.filter(_.getName.endsWith(".stats.tsv")).foreach { f =>
+      java.nio.file.Files.writeString(f.toPath, "F\tpoison\tnot-a-count\n")
+    }
+    assert(TxTable.read(spark, dir).count() == n)
+    assert(spark.read.format("graft").load(dir).count() == n)
+    assert(TxTable.readChanges(spark, dir, -1L).count() == n)
+    intercept[NumberFormatException] {
+      TxTable.readWhere(spark, dir, col("k") === 2L).collect()
     }
   }
 
