@@ -13,8 +13,8 @@ import org.apache.spark.sql.functions._
   * exactly-once per row for actions that scan the data once). The metrics
   * surface on the returned [[Observation]] after the FIRST action on the
   * returned frame; gate on them before publishing the output (write to
-  * staging → check → promote, the pattern `BatchSink`'s markers make
-  * atomic).
+  * staging → check → promote; a TxTable commit is the atomic promote,
+  * as in `BatchSink`).
   *
   * The metric set mirrors q213 minus distinct-uniqueness (observe requires
   * accumulator-style aggregates — no countDistinct; at scale the HLL

@@ -33,7 +33,8 @@ import org.apache.spark.sql.functions._
 object TxSync {
 
   /** Apply one version's change-set (rows + `_change_type`) to the
-    * target as a single commit tagged `v<N>`.
+    * target as a single keyed upsert tagged `sync:v<N>`: every changed key
+    * leaves the target, the inserts go in.
     */
   private def applyChanges(spark: SparkSession, dstDir: String,
       changes: DataFrame, keys: Seq[String], tag: String): Long = {
@@ -41,14 +42,8 @@ object TxSync {
       c == "_change_type" || c == "_commit_version")
     val inserts = changes.where(col("_change_type") === "insert")
       .select(cols.map(col).toIndexedSeq: _*)
-    val base = TxTable.currentVersion(dstDir)
-    if (base < 0) // empty target: the first window's inserts are the state
-      return TxTable.merge(spark, dstDir, inserts, keys, opTag = Some(tag))
-    val (touched, kept) = TxTable.carryOver(spark,
-      TxTable.snapshot(dstDir, Some(base)),
-      changes.select(keys.map(col): _*).distinct(), keys)
-    TxTable.publishForSync(dstDir, kept.unionByName(inserts), touched,
-      base, tag)
+    TxTable.upsert(spark, TxTable.snapshot(dstDir), keys, changes, inserts,
+      s"sync:$tag")
   }
 
   /** Bring `dstDir` up to the source's current version: find the last

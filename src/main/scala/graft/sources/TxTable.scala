@@ -25,10 +25,13 @@ import scala.jdk.CollectionConverters._
   *    the commit publishes by HARD-LINKING the version's JSON into
   *    `_txlog/` — `link(2)` is the POSIX atomic create-if-absent (a
   *    rename would silently replace a concurrent winner's entry), so
-  *    exactly ONE writer wins a version (optimistic concurrency; appends
-  *    retry on collision, semantic writers raise). A crash before
-  *    publish leaves only orphaned data files, invisible to every
-  *    reader; `vacuum` reclaims them.
+  *    exactly ONE writer wins a version (optimistic concurrency). Every
+  *    writer derives its commit from one snapshot and publishes at
+  *    exactly the next version; a semantic writer that loses it raises,
+  *    an append takes the new snapshot and, if the layout is unchanged,
+  *    re-derives its schema and retries with the same staged files. A
+  *    crash before publish leaves only orphaned data files, invisible to
+  *    every reader; `vacuum` reclaims them.
   *  - **Snapshot isolation + time travel.** Readers replay the log to
   *    the requested version (default: latest) and read exactly that
   *    file set — concurrent commits never tear a read.
@@ -70,10 +73,10 @@ import scala.jdk.CollectionConverters._
   *
   * Scale shape: the log is O(commits) driver-side JSON (the list-replay
   * is trivial next to any data pass; a checkpointed log is the known
-  * extension); all data movement is distributed parquet IO. Atomic-move
-  * publish needs a filesystem with atomic rename (POSIX, HDFS); S3-class
-  * stores need a coordination service, exactly as the published design
-  * notes.
+  * extension); all data movement is distributed parquet IO. Publish needs
+  * an atomic create-if-absent (`link(2)` on POSIX; HDFS's exclusive
+  * create); S3-class stores need a coordination service, exactly as the
+  * published design notes.
   */
 object TxTable {
 
@@ -85,16 +88,26 @@ object TxTable {
   private def entryPath(dir: String, v: Long): Path =
     logDir(dir).resolve(f"$v%020d.json")
 
-  /** Latest committed version, or -1 for an empty/absent log. */
-  def currentVersion(dir: String): Long = {
+  /** Versions `v` of the `_txlog/` files named `<v><suffix>`, ascending
+    * (none for an absent log). The listing is closed before it returns: a
+    * directory handle left open per call runs a busy writer out of file
+    * descriptors.
+    */
+  private def logVersions(dir: String, suffix: String): Seq[Long] = {
     val ld = logDir(dir)
-    if (!Files.isDirectory(ld)) -1L
-    else Files.list(ld).iterator().asScala
-      .map(_.getFileName.toString)
-      .filter(n => n.endsWith(".json") && !n.endsWith(".checkpoint.json"))
-      .map(_.stripSuffix(".json").toLong)
-      .foldLeft(-1L)(math.max)
+    if (!Files.isDirectory(ld)) Nil
+    else {
+      val listing = Files.list(ld)
+      try listing.iterator().asScala.map(_.getFileName.toString)
+        .filter(n => n.endsWith(suffix) && n.stripSuffix(suffix).forall(_.isDigit))
+        .map(_.stripSuffix(suffix).toLong).toSeq.sorted
+      finally listing.close()
+    }
   }
+
+  /** Latest committed version, or -1 for an empty/absent log. */
+  def currentVersion(dir: String): Long =
+    logVersions(dir, ".json").lastOption.getOrElse(-1L)
 
   // hand-rolled JSON (the Verify.scala convention — no extra deps);
   // fields are file names (no control chars) and a schema JSON blob
@@ -155,16 +168,9 @@ object TxTable {
   /** Latest checkpoint at or before `top`, if any: an entry whose adds
     * are the full live file list at its version.
     */
-  private def latestCheckpoint(dir: String, top: Long): Option[Commit] = {
-    val ld = logDir(dir)
-    if (!Files.isDirectory(ld)) return None
-    val vs = Files.list(ld).iterator().asScala
-      .map(_.getFileName.toString)
-      .filter(_.endsWith(".checkpoint.json"))
-      .map(_.stripSuffix(".checkpoint.json").toLong)
-      .filter(_ <= top).toSeq
-    vs.sorted.lastOption.map(v => parse(Files.readString(checkpointPath(dir, v))))
-  }
+  private def latestCheckpoint(dir: String, top: Long): Option[Commit] =
+    logVersions(dir, ".checkpoint.json").filter(_ <= top).lastOption
+      .map(v => parse(Files.readString(checkpointPath(dir, v))))
 
   /** Live file names at version `top` and the entry that describes that
     * version (its schema and layout): replay adds minus removes in version
@@ -183,14 +189,12 @@ object TxTable {
     (live.toSeq, last)
   }
 
-  /** Live file names at `asOf` (default latest). */
-  def activeFiles(dir: String, asOf: Option[Long] = None): Seq[String] =
-    replay(dir, asOf.getOrElse(currentVersion(dir)))._1
 
   /** One resolved snapshot: a version with its live files, committed
     * schema and partition columns, pinned together so a read never pairs
     * one version's files with another's schema or layout. Every scan of
-    * the table is built from one ([[scan]]). The zone maps parse on first
+    * the table is built from one ([[scan]]), and every writer derives its
+    * commit from one ([[commit]]). The zone maps parse on first
     * use only: [[GraftFileIndex]] asks for them when a query hands it a
     * data filter, DML when it prunes or carries Bloom columns over.
     */
@@ -213,25 +217,20 @@ object TxTable {
     Some(c.schemaJson).filter(_.nonEmpty)
       .map(DataType.fromJson(_).asInstanceOf[StructType])
 
-  /** The commit at `asOf` (default latest; capped at the latest), if any.
-    * Every commit carries the table's schema and partitioning, so this one
-    * entry answers both without replaying the log.
-    */
-  private def commitAt(dir: String, asOf: Option[Long]): Option[Commit] = {
-    val v = math.min(asOf.getOrElse(Long.MaxValue), currentVersion(dir))
-    if (v < 0) None else Some(parse(Files.readString(entryPath(dir, v))))
-  }
+  /** Live file names at `asOf` (default latest). */
+  def activeFiles(dir: String, asOf: Option[Long] = None): Seq[String] =
+    snapshot(dir, asOf).files
 
   /** Committed schema at `asOf` (default latest), if any commit exists. */
   def schemaAt(dir: String, asOf: Option[Long] = None): Option[StructType] =
-    commitAt(dir, asOf).flatMap(schemaOf)
+    Some(snapshot(dir, asOf)).filter(_.version >= 0).map(_.schema)
 
   /** The table's partition columns at `asOf` (empty = unpartitioned):
     * the commit's own list; an overwrite may change it (it replaces the
     * file set wholly), an append may not.
     */
   def partitionColsAt(dir: String, asOf: Option[Long] = None): Seq[String] =
-    commitAt(dir, asOf).map(_.partitionBy).getOrElse(Nil)
+    snapshot(dir, asOf).pcols
 
   /** Partition column types that path-encode with EXACT recoverable
     * bounds (the hive layout's value-in-the-directory-name contract).
@@ -320,14 +319,8 @@ object TxTable {
     snapshot(dir, asOf).stats
 
   private def zoneMaps(s: Snapshot): Map[String, TxStats.FileStats] = {
-    val ld = logDir(s.dir)
-    if (!Files.isDirectory(ld)) return Map.empty
-    def versionsOf(suffix: String): Seq[Long] = Files.list(ld).iterator().asScala
-      .map(_.getFileName.toString)
-      .filter(n => n.endsWith(suffix) &&
-        n.stripSuffix(suffix).forall(_.isDigit))
-      .map(_.stripSuffix(suffix).toLong)
-      .filter(_ <= s.version).toSeq.sorted
+    def versionsOf(suffix: String): Seq[Long] =
+      logVersions(s.dir, suffix).filter(_ <= s.version)
     val ckptV = versionsOf(".stats.ckpt.tsv").lastOption
     val seed = ckptV
       .map(v => TxStats.parse(Files.readString(statsCkptPath(s.dir, v))))
@@ -417,8 +410,8 @@ object TxTable {
     * columns are not in the data files; their per-file stats are
     * synthesized from the path at read time ([[fileStats]]).
     */
-  private def stage(df: DataFrame, dir: String, partitionBy: Seq[String] = Nil,
-      bloomFor: Seq[String] = Nil): (Seq[String], Map[String, TxStats.FileStats]) = {
+  private def stage(df: DataFrame, dir: String, partitionBy: Seq[String],
+      bloomFor: Seq[String]): (Seq[String], Map[String, TxStats.FileStats]) = {
     val token = java.util.UUID.randomUUID().toString.take(12)
     val tmp = Paths.get(dir, s"_staging-$token")
     val tracker = new TxStats.WriteStats(
@@ -449,97 +442,121 @@ object TxTable {
   private def bloomsOf(s: Snapshot, files: Seq[String]): Seq[String] =
     files.flatMap(f => s.stats.get(f).toSeq.flatMap(_.blooms.keys)).distinct.sorted
 
-  /** Publish a commit. Appends (`basedOn = None`) are order-independent:
-    * they claim the next free version, retrying on collision. Semantic
-    * commits (overwrite/merge/compact) pass the snapshot version their
-    * content was derived from — the commit must land at EXACTLY
-    * basedOn + 1, else another writer changed the table under them and
-    * the derived file set is stale: raise, caller re-derives.
-    */
-  private def publish(dir: String, op: String, adds: Seq[String],
-      removes: Seq[String], schemaJson: String,
-      basedOn: Option[Long],
-      stats: Map[String, TxStats.FileStats] = Map.empty,
-      partitionBy: Seq[String] = Nil): Long = {
+  /** Claim version `c.version` with `c`: true if this writer won it. */
+  private def publish(dir: String, c: Commit): Boolean = {
     Files.createDirectories(logDir(dir))
-    var attempts = 0
-    while (true) {
-      val v = basedOn.map(_ + 1).getOrElse(currentVersion(dir) + 1)
-      val tmp = logDir(dir).resolve(s".tmp-${java.util.UUID.randomUUID()}")
-      Files.writeString(tmp,
-        render(Commit(v, op, adds, removes, schemaJson, partitionBy)))
-      // atomic CREATE-IF-ABSENT must be a hard link, not a rename: POSIX
-      // rename(2) (what Files.move(ATOMIC_MOVE) compiles to) silently
-      // REPLACES an existing target, so two writers racing to the same
-      // version would clobber each other's commit — link(2) fails with
-      // EEXIST instead, which is the loser's signal to retry (found by
-      // the concurrent-appender stress test: 10 of 48 commits lost under
-      // the rename scheme)
-      val landed =
-        try {
-          Files.createLink(entryPath(dir, v), tmp)
-          Files.delete(tmp)
-          true
-        } catch {
-          case _: java.nio.file.FileAlreadyExistsException =>
-            Files.delete(tmp)
-            false
-        }
-      if (landed) {
-        // zone-map sidecar AFTER the commit wins its version (a commit
-        // without stats is merely unprunable — fail-open by design, so
-        // a crash in this window cannot affect correctness)
-        if (stats.nonEmpty) {
-          val st = logDir(dir).resolve(s".stats-${java.util.UUID.randomUUID()}")
-          Files.writeString(st, TxStats.render(stats))
-          try Files.move(st, statsPath(dir, v), StandardCopyOption.ATOMIC_MOVE)
-          catch { case _: java.nio.file.FileAlreadyExistsException =>
-            Files.delete(st) }
-        }
-        // best-effort bounded-replay checkpoint; a crash before this
-        // write only means readers replay from the previous checkpoint
-        if (v > 0 && v % CheckpointEvery == 0) {
-          val snap = snapshot(dir, Some(v))
-          val ct = logDir(dir).resolve(s".ckpt-${java.util.UUID.randomUUID()}")
-          Files.writeString(ct, render(Commit(v, "checkpoint", snap.files, Nil,
-            snap.schema.json, snap.pcols)))
-          try Files.move(ct, checkpointPath(dir, v),
-            StandardCopyOption.ATOMIC_MOVE)
-          catch { case _: java.nio.file.FileAlreadyExistsException =>
-            Files.delete(ct) }
-          // consolidated zone-map checkpoint on the same cadence, live
-          // files only (bounds stats replay AND sheds dead entries)
-          val liveSet = snap.files.toSet
-          val sct = logDir(dir).resolve(s".sckpt-${java.util.UUID.randomUUID()}")
-          Files.writeString(sct, TxStats.render(
-            snap.stats.filter(kv => liveSet(kv._1))))
-          try Files.move(sct, statsCkptPath(dir, v),
-            StandardCopyOption.ATOMIC_MOVE)
-          catch { case _: java.nio.file.FileAlreadyExistsException =>
-            Files.delete(sct) }
-        }
-        return v
-      }
-      if (basedOn.isDefined)
-        throw new java.util.ConcurrentModificationException(
-          s"TxTable $dir: version $v committed concurrently; " +
-            s"re-validate and retry the $op")
-      attempts += 1
-      if (attempts > 100) sys.error(s"TxTable $dir: publish starved")
-    }
-    -1L // unreachable
+    val tmp = logDir(dir).resolve(s".tmp-${java.util.UUID.randomUUID()}")
+    Files.writeString(tmp, render(c))
+    // atomic CREATE-IF-ABSENT must be a hard link, not a rename: POSIX
+    // rename(2) (what Files.move(ATOMIC_MOVE) compiles to) silently
+    // REPLACES an existing target, so two writers racing to the same
+    // version would clobber each other's commit — link(2) fails with
+    // EEXIST instead, which is the loser's signal (found by the
+    // concurrent-appender stress test: 10 of 48 commits lost under the
+    // rename scheme)
+    try { Files.createLink(entryPath(dir, c.version), tmp); true }
+    catch { case _: java.nio.file.FileAlreadyExistsException => false }
+    finally Files.delete(tmp)
   }
 
-  /** Raise unless the table still sits at the version the caller derived
-    * its write from — the CAS guard every semantic writer runs.
+  /** The sidecars of a published version `v`: its zone maps, and at
+    * every [[CheckpointEvery]] the file-list and zone-map checkpoints.
     */
-  private def requireVersion(dir: String, expected: Option[Long],
-      base: Long, op: String): Unit =
-    expected.filter(_ != base).foreach { e =>
-      throw new java.util.ConcurrentModificationException(
-        s"TxTable $dir: $op expected version $e but table is at $base; " +
-          "re-derive and retry")
+  private def record(dir: String, v: Long,
+      stats: Map[String, TxStats.FileStats]): Unit = {
+    // zone-map sidecar AFTER the commit wins its version (a commit
+    // without stats is merely unprunable — fail-open by design, so
+    // a crash in this window cannot affect correctness)
+    if (stats.nonEmpty) {
+      val st = logDir(dir).resolve(s".stats-${java.util.UUID.randomUUID()}")
+      Files.writeString(st, TxStats.render(stats))
+      try Files.move(st, statsPath(dir, v), StandardCopyOption.ATOMIC_MOVE)
+      catch { case _: java.nio.file.FileAlreadyExistsException =>
+        Files.delete(st) }
     }
+    // best-effort bounded-replay checkpoint; a crash before this
+    // write only means readers replay from the previous checkpoint
+    if (v > 0 && v % CheckpointEvery == 0) {
+      val snap = snapshot(dir, Some(v))
+      val ct = logDir(dir).resolve(s".ckpt-${java.util.UUID.randomUUID()}")
+      Files.writeString(ct, render(Commit(v, "checkpoint", snap.files, Nil,
+        snap.schema.json, snap.pcols)))
+      try Files.move(ct, checkpointPath(dir, v),
+        StandardCopyOption.ATOMIC_MOVE)
+      catch { case _: java.nio.file.FileAlreadyExistsException =>
+        Files.delete(ct) }
+      // consolidated zone-map checkpoint on the same cadence, live
+      // files only (bounds stats replay AND sheds dead entries)
+      val liveSet = snap.files.toSet
+      val sct = logDir(dir).resolve(s".sckpt-${java.util.UUID.randomUUID()}")
+      Files.writeString(sct, TxStats.render(
+        snap.stats.filter(kv => liveSet(kv._1))))
+      try Files.move(sct, statsCkptPath(dir, v),
+        StandardCopyOption.ATOMIC_MOVE)
+      catch { case _: java.nio.file.FileAlreadyExistsException =>
+        Files.delete(sct) }
+    }
+  }
+
+  /** The snapshot a writer derives its whole commit from, taken once.
+    * `expected` is the optimistic-concurrency guard: raise unless the
+    * table still sits at that version.
+    */
+  private def pinned(dir: String, expected: Option[Long], op: String): Snapshot = {
+    val s = snapshot(dir)
+    expected.filter(_ != s.version).foreach { e =>
+      throw new java.util.ConcurrentModificationException(
+        s"TxTable $dir: $op expected version $e but table is at " +
+          s"${s.version}; re-derive and retry")
+    }
+    s
+  }
+
+  /** The one commit path every writer ends in. Stages `data` in layout
+    * `pcols`, drops the zero-row staged files (an empty write commits its
+    * schema and no data file) and publishes at exactly `s.version + 1`,
+    * removing `removes` (files of `s`) under the schema `schemaFor(s)`.
+    *
+    * A semantic writer that loses that version raises: the table changed
+    * under the snapshot its file set was derived from. An append
+    * (`rebase`) is order-independent instead: it takes the new snapshot
+    * and, if the layout is still `pcols`, re-derives the schema from it
+    * (so a column another writer added survives, and a clashing type
+    * raises) and publishes the same staged files one version later; if
+    * the table was re-partitioned, it raises. A commit that raises
+    * deletes its staged files.
+    */
+  private def commit(s: Snapshot, op: String, data: DataFrame,
+      removes: Seq[String], pcols: Seq[String], bloomFor: Seq[String],
+      rebase: Boolean = false)(schemaFor: Snapshot => StructType): Long = {
+    val schema = schemaFor(s) // a refused schema fails before any data moves
+    Files.createDirectories(Paths.get(s.dir))
+    val (staged, stats0) = stage(data, s.dir, pcols, bloomFor)
+    // the row counts are in the zone maps the stage just collected
+    val (empty, adds) = staged.partition(n => stats0.get(n).exists(_.rows == 0L))
+    val stats = stats0 -- empty
+    def drop(files: Seq[String]): Unit =
+      files.foreach(n => Files.deleteIfExists(Paths.get(s.dir, n)))
+    drop(empty)
+    def conflict(why: String) = new java.util.ConcurrentModificationException(
+      s"TxTable ${s.dir}: $why; re-derive and retry the $op")
+    @annotation.tailrec
+    def from(at: Snapshot, schema: StructType, attempts: Int): Long = {
+      val v = at.version + 1
+      if (publish(s.dir, Commit(v, op, adds, removes, schema.json, pcols))) v
+      else if (!rebase) throw conflict(s"version $v committed concurrently")
+      else if (attempts >= 100) sys.error(s"TxTable ${s.dir}: publish starved")
+      else {
+        val next = snapshot(s.dir)
+        if (next.pcols != pcols) throw conflict(
+          s"re-partitioned by ${next.pcols.mkString(",")} concurrently")
+        from(next, schemaFor(next), attempts + 1)
+      }
+    }
+    val v = try from(s, schema, 0) catch { case e: Throwable => drop(adds); throw e }
+    record(s.dir, v, stats)
+    v
+  }
 
   /** Additive schema evolution: the committed snapshot schema is the
     * existing fields (order kept) plus any NEW fields of the write, so a
@@ -548,47 +565,41 @@ object TxTable {
     * field with a different type is refused — that is a rewrite, not an
     * evolution.
     */
-  private def evolve(dir: String, incoming: StructType): StructType =
-    schemaAt(dir, None) match {
-      case None => incoming
-      case Some(old) =>
-        val byName = incoming.fields.map(f => f.name -> f).toMap
-        old.fields.foreach { f =>
-          byName.get(f.name).filter(_.dataType != f.dataType).foreach { g =>
-            throw new IllegalArgumentException(
-              s"TxTable $dir: column ${f.name} type change " +
-                s"${f.dataType.simpleString} -> ${g.dataType.simpleString} " +
-                "is not additive evolution")
-          }
-        }
-        val oldNames = old.fieldNames.toSet
-        StructType(old.fields ++ incoming.fields.filterNot(f =>
-          oldNames(f.name)))
+  private def evolve(s: Snapshot, incoming: StructType): StructType = {
+    val byName = incoming.fields.map(f => f.name -> f).toMap
+    s.schema.fields.foreach { f =>
+      byName.get(f.name).filter(_.dataType != f.dataType).foreach { g =>
+        throw new IllegalArgumentException(
+          s"TxTable ${s.dir}: column ${f.name} type change " +
+            s"${f.dataType.simpleString} -> ${g.dataType.simpleString} " +
+            "is not additive evolution")
+      }
     }
+    val oldNames = s.schema.fieldNames.toSet
+    StructType(s.schema.fields ++ incoming.fields.filterNot(f =>
+      oldNames(f.name)))
+  }
 
-  /** Validate + resolve the partitioning a write runs under: inherit the
-    * table's, or establish it on first commit. An append can never change
-    * the layout; a write naming partition columns checks they exist with
-    * a path-codable type.
+  /** The partitioning a write of `df` over `s` runs under: inherit the
+    * table's, or establish it on first commit. Only an overwrite
+    * (`allowChange`) may change the layout; every partition column must
+    * exist in the write with a path-codable type.
     */
-  private def resolvePartitioning(dir: String, df: DataFrame,
-      requested: Seq[String], op: String, allowChange: Boolean): Seq[String] = {
-    val existing =
-      if (currentVersion(dir) < 0) Nil else partitionColsAt(dir, None)
+  private def resolvePartitioning(s: Snapshot, df: DataFrame,
+      requested: Seq[String], allowChange: Boolean): Seq[String] = {
     val pcols =
-      if (allowChange) { if (requested.nonEmpty) requested else existing }
-      else if (currentVersion(dir) < 0) requested
+      if (s.version < 0 || (allowChange && requested.nonEmpty)) requested
       else {
-        require(requested.isEmpty || requested == existing,
-          s"TxTable $dir: $op partitionBy ${requested.mkString(",")} does " +
-            s"not match the table's layout ${existing.mkString(",")} — " +
+        require(allowChange || requested.isEmpty || requested == s.pcols,
+          s"TxTable ${s.dir}: append partitionBy ${requested.mkString(",")} " +
+            s"does not match the table's layout ${s.pcols.mkString(",")} — " +
             "only overwrite may re-partition a table")
-        existing
+        s.pcols
       }
     pcols.foreach { c =>
       val f = df.schema.fields.find(_.name == c).getOrElse(
         throw new IllegalArgumentException(
-          s"TxTable $dir: partition column $c is not in the write schema"))
+          s"TxTable ${s.dir}: partition column $c is not in the write schema"))
       partTag(f.dataType) // validates the type
     }
     pcols
@@ -606,13 +617,10 @@ object TxTable {
     */
   def append(df: DataFrame, dir: String, bloomFor: Seq[String] = Nil,
       opTag: Option[String] = None, partitionBy: Seq[String] = Nil): Long = {
-    Files.createDirectories(Paths.get(dir))
-    val pcols = resolvePartitioning(dir, df, partitionBy, "append",
-      allowChange = false)
-    val schema = evolve(dir, df.schema)
-    val (names, stats) = stage(df, dir, pcols, bloomFor)
-    publish(dir, "append" + opTag.map(":" + _).getOrElse(""), names, Nil,
-      schema.json, basedOn = None, stats = stats, partitionBy = pcols)
+    val s = snapshot(dir)
+    commit(s, "append" + opTag.map(":" + _).getOrElse(""), df, Nil,
+      resolvePartitioning(s, df, partitionBy, allowChange = false), bloomFor,
+      rebase = true)(evolve(_, df.schema))
   }
 
   /** Atomic full overwrite (snapshot replace). `expectedVersion` is the
@@ -625,15 +633,10 @@ object TxTable {
   def overwrite(df: DataFrame, dir: String,
       expectedVersion: Option[Long] = None,
       partitionBy: Seq[String] = Nil): Long = {
-    Files.createDirectories(Paths.get(dir))
-    val base = currentVersion(dir)
-    requireVersion(dir, expectedVersion, base, "overwrite")
-    val pcols = resolvePartitioning(dir, df, partitionBy, "overwrite",
-      allowChange = true)
-    val (names, stats) = stage(df, dir, pcols)
-    publish(dir, "overwrite", names, activeFiles(dir, Some(base)),
-      df.schema.json, basedOn = Some(base), stats = stats,
-      partitionBy = pcols)
+    val s = pinned(dir, expectedVersion, "overwrite")
+    commit(s, "overwrite", df, s.files,
+      resolvePartitioning(s, df, partitionBy, allowChange = true), Nil)(
+      _ => df.schema)
   }
 
   /** OPTIMIZE: rewrite the live file set into `targetFiles` files in one
@@ -649,9 +652,7 @@ object TxTable {
   def compact(spark: SparkSession, dir: String, targetFiles: Int = 1,
       zorderBy: Seq[String] = Nil, bloomFor: Seq[String] = Nil,
       expectedVersion: Option[Long] = None): Long = {
-    val base = currentVersion(dir)
-    requireVersion(dir, expectedVersion, base, "compact")
-    val s = snapshot(dir, Some(base))
+    val s = pinned(dir, expectedVersion, "compact")
     val snap = scan(spark, s, s.files)
     val arranged =
       if (zorderBy.isEmpty) snap.coalesce(math.max(targetFiles, 1))
@@ -664,10 +665,8 @@ object TxTable {
     // the layout survives OPTIMIZE; targetFiles bounds the write
     // parallelism, per-directory files follow from it
     val blooms = if (bloomFor.nonEmpty) bloomFor else bloomsOf(s, s.files)
-    val (names, stats) = stage(arranged, dir, s.pcols, blooms)
-    publish(dir, if (zorderBy.isEmpty) "compact" else "zorder",
-      names, s.files, snap.schema.json, basedOn = Some(base), stats = stats,
-      partitionBy = s.pcols)
+    commit(s, if (zorderBy.isEmpty) "compact" else "zorder", arranged,
+      s.files, s.pcols, blooms)(_ => snap.schema)
   }
 
   /** DELETE WHERE: copy-on-write removal of rows matching `predicate`,
@@ -683,13 +682,11 @@ object TxTable {
   def delete(spark: SparkSession, dir: String,
       predicate: org.apache.spark.sql.Column,
       expectedVersion: Option[Long] = None): Long = {
-    val base = currentVersion(dir)
-    requireVersion(dir, expectedVersion, base, "delete")
-    if (base < 0) return base
-    val s = snapshot(dir, Some(base))
+    val s = pinned(dir, expectedVersion, "delete")
+    if (s.files.isEmpty) return s.version
     val cond = TxStats.resolve(spark, s.schema, predicate)
     val (touched, _) = TxStats.prune(cond, s.stats, s.files)
-    if (touched.isEmpty) return base
+    if (touched.isEmpty) return s.version
     // ZERO-READ DROP: a file whose stats prove EVERY row matches the
     // delete predicate ([[TxStats.mustMatchAll]] — e.g. a whole dropped
     // partition's lo==hi value, or an expired retention range entirely
@@ -700,9 +697,7 @@ object TxTable {
     val rewrite = touched.filterNot(f =>
       s.stats.get(f).exists(TxStats.mustMatchAll(cond, _)))
     val kept = scan(spark, s, rewrite).where(!coalesce(predicate, lit(false)))
-    val (names, stats) = stage(kept, dir, s.pcols, bloomsOf(s, rewrite))
-    publish(dir, "delete", names, touched, s.schema.json,
-      basedOn = Some(base), stats = stats, partitionBy = s.pcols)
+    commit(s, "delete", kept, touched, s.pcols, bloomsOf(s, rewrite))(_.schema)
   }
 
   /** UPDATE SET ... WHERE: copy-on-write in-place edit of matching rows,
@@ -716,12 +711,9 @@ object TxTable {
       predicate: org.apache.spark.sql.Column,
       set: Map[String, org.apache.spark.sql.Column],
       expectedVersion: Option[Long] = None): Long = {
-    val base = currentVersion(dir)
-    requireVersion(dir, expectedVersion, base, "update")
-    if (base < 0) return base
-    val s = snapshot(dir, Some(base))
+    val s = pinned(dir, expectedVersion, "update")
     val (touched, _) = prune(spark, s, predicate)
-    if (touched.isEmpty) return base
+    if (touched.isEmpty) return s.version
     val schema = s.schema
     val unknown = set.keySet.diff(schema.fieldNames.toSet)
     require(unknown.isEmpty, s"UPDATE of unknown column(s): $unknown")
@@ -736,9 +728,7 @@ object TxTable {
     require(updated.schema.fields.map(f => (f.name, f.dataType)).sameElements(
       schema.fields.map(f => (f.name, f.dataType))),
       "UPDATE must preserve column types")
-    val (names, stats) = stage(updated, dir, s.pcols, bloomsOf(s, touched))
-    publish(dir, "update", names, touched, schema.json,
-      basedOn = Some(base), stats = stats, partitionBy = s.pcols)
+    commit(s, "update", updated, touched, s.pcols, bloomsOf(s, touched))(_.schema)
   }
 
   /** MERGE (upsert): rows of `source` replace same-key rows, new keys
@@ -748,46 +738,36 @@ object TxTable {
   def merge(spark: SparkSession, dir: String, source: DataFrame,
       keys: Seq[String], expectedVersion: Option[Long] = None,
       opTag: Option[String] = None): Long = {
-    Files.createDirectories(Paths.get(dir))
-    val base = currentVersion(dir)
     val op = "merge" + opTag.map(":" + _).getOrElse("")
-    requireVersion(dir, expectedVersion, base, op)
-    if (base < 0) { // first commit: MERGE into an empty table is an insert
-      val (names0, stats0) = stage(source, dir)
-      return publish(dir, op, names0, Nil,
-        evolve(dir, source.schema).json, basedOn = Some(base),
-        stats = stats0)
-    }
-    val s = snapshot(dir, Some(base))
-    val (touched, kept) = carryOver(spark, s,
-      source.select(keys.map(col): _*).distinct(), keys)
-    val (names, stats) = stage(kept.unionByName(source), dir, s.pcols,
-      bloomsOf(s, touched))
-    publish(dir, op, names, touched,
-      evolve(dir, source.schema).json, basedOn = Some(base), stats = stats,
-      partitionBy = s.pcols)
+    upsert(spark, pinned(dir, expectedVersion, op), keys, source, source, op)
   }
 
-  /** The copy-on-write half of a keyed upsert (MERGE and the sync apply):
-    * the files of `s` holding a row whose `keys` appear in `keyRows`, and
-    * the rows of those files whose keys do not. One semi-join over the
-    * snapshot tagged with `input_file_name()` finds the files; the
-    * carried rows are an anti-join over a scan of just those files.
+  /** The keyed upsert MERGE and the sync apply share: in one commit over
+    * `s`, rows whose `keys` appear in `keyRows` leave the table and
+    * `rows` go in. Copy-on-write with file pruning: one semi-join over the
+    * snapshot tagged with `input_file_name()` finds the files holding a
+    * key; their other rows carry over through an anti-join over a scan of
+    * just those files, and every other file stays untouched. An empty
+    * snapshot has no such files, so its upsert stages `rows` alone.
     */
-  private[sources] def carryOver(spark: SparkSession, s: Snapshot,
-      keyRows: DataFrame, keys: Seq[String]): (Seq[String], DataFrame) = {
+  private[sources] def upsert(spark: SparkSession, s: Snapshot,
+      keys: Seq[String], keyRows: DataFrame, rows: DataFrame, op: String): Long = {
+    val keySet = keyRows.select(keys.map(col): _*).distinct()
     // bare file NAME (the URI-independent token) mapped back to the log's
     // relative path; basenames are UUID-token-unique across the table
     val baseOf = s.files.map(f => f.split('/').last -> f).toMap
-    val touched = scan(spark, s, s.files)
-      .withColumn("__name", element_at(split(input_file_name(), "/"), -1))
-      .join(broadcast(keyRows), keys, "left_semi")
-      .select("__name").distinct()
-      .collect().map(r => baseOf(r.getString(0))).toSeq.sorted
-    val kept =
-      if (touched.isEmpty) scan(spark, s, Nil) // pure insert
-      else scan(spark, s, touched).join(keyRows, keys, "left_anti")
-    (touched, kept)
+    val touched =
+      if (s.files.isEmpty) Nil
+      else scan(spark, s, s.files)
+        .withColumn("__name", element_at(split(input_file_name(), "/"), -1))
+        .join(broadcast(keySet), keys, "left_semi")
+        .select("__name").distinct()
+        .collect().map(r => baseOf(r.getString(0))).toSeq.sorted
+    val data =
+      if (s.version < 0) rows
+      else if (touched.isEmpty) scan(spark, s, Nil).unionByName(rows) // pure insert
+      else scan(spark, s, touched).join(keySet, keys, "left_anti").unionByName(rows)
+    commit(s, op, data, touched, s.pcols, bloomsOf(s, touched))(evolve(_, rows.schema))
   }
 
   /** Change data feed: NET row-level changes committed in versions
@@ -798,10 +778,11 @@ object TxTable {
     * delete+insert pair — net-diff semantics, no preimage tracking) and
     * `_commit_version`.
     *
-    * Derivation is per commit from the log's add/remove file lists:
-    * rows of added files `EXCEPT ALL` rows of removed files are the
-    * inserts, the reverse are the deletes — copy-on-write carry-over
-    * rows (rewritten unchanged by MERGE) cancel out, so the feed is the
+    * Derivation is per commit from the log's add/remove file lists: one
+    * signed count per distinct row (+1 per copy in an added file, −1 per
+    * copy in a removed one) — a positive net is an insert of that
+    * multiplicity, a negative one a delete, zero a copy-on-write
+    * carry-over row (rewritten unchanged by MERGE), so the feed is the
     * minimal delta. Layout-only commits (compact / zorder) produce no
     * changes by construction. Invariant (spec-pinned): applying the
     * feed commit by commit — the net-diff feed is ORDERED; an
@@ -810,9 +791,9 @@ object TxTable {
     * `snapshot(to)` exactly.
     *
     * Scale shape: each version's diff reads ONLY that commit's
-    * added/removed files — O(delta), never O(table); the `exceptAll` is
-    * one shuffle over the touched slice. Pure appends and overwrites
-    * skip the diff entirely (one side is empty).
+    * added/removed files — O(delta), never O(table); the signed count is
+    * one aggregate shuffle over the touched slice. One-sided commits
+    * (pure appends, pure drops) skip it and only scan.
     */
   def readChanges(spark: SparkSession, dir: String, fromVersion: Long,
       toVersion: Option[Long] = None): DataFrame = {
@@ -873,40 +854,6 @@ object TxTable {
         .withColumn("_change_type", lit(null).cast(StringType))
         .withColumn("_commit_version", lit(null).cast(LongType))
     } else parts.reduce(_.unionByName(_, allowMissingColumns = true))
-  }
-
-  /** Publish a replication apply (TxSync's seam): `newData` replaces
-    * the `removes` files in one commit whose op carries the sync tag
-    * (`sync:<tag>`) — the idempotence marker the replicator's
-    * high-water-mark scan reads back. An empty apply (layout-only or
-    * fully-cancelled source commit) stages nothing but still records
-    * the tag.
-    */
-  private[sources] def publishForSync(dir: String, newData: DataFrame,
-      removes: Seq[String], basedOn: Long, tag: String): Long = {
-    Files.createDirectories(Paths.get(dir))
-    // the replica keeps its OWN layout; the apply re-stages through it
-    val pcols = partitionColsAt(dir, Some(basedOn))
-    // Stage FIRST and decide emptiness from the staged row counts (free —
-    // they are in the zone maps the stage just collected): the old
-    // `newData.isEmpty` pre-check was a separate action that recomputed
-    // the apply's whole delta lineage before the write action ran it
-    // again (guide §1.2: don't compute things twice). A fully-cancelled
-    // or layout-only apply stages only empty files — dropped here, so the
-    // published commit is adds-free exactly as before.
-    val (adds0, stats0) = stage(newData, dir, pcols)
-    val staged = adds0.map(n => stats0.get(n).map(_.rows).getOrElse(1L)).sum
-    val (adds, stats) =
-      if (staged == 0L) {
-        // Spark's partitioned writer stages no file for zero rows, so the
-        // only empty file a stage leaves sits directly under `dir` and no
-        // col=value/ directory is created for an empty apply
-        adds0.foreach(n => Files.deleteIfExists(Paths.get(dir, n)))
-        (Seq.empty[String], Map.empty[String, TxStats.FileStats])
-      } else (adds0, stats0)
-    publish(dir, s"sync:$tag", adds, removes,
-      evolve(dir, newData.schema).json, basedOn = Some(basedOn),
-      stats = stats, partitionBy = pcols)
   }
 
   /** True if some commit carries `opTag` (idempotence lookup for sinks). */

@@ -1,41 +1,25 @@
 package graft.streaming
 
-import java.io.File
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Exactly-once `foreachBatch` sink: idempotent per-micro-batch MERGE into
-  * a keyed parquet store.
+  * a keyed `TxTable`.
   *
   * Structured Streaming's `foreachBatch` gives at-least-once delivery — on
   * recovery a batch can be REPLAYED with the same `batchId`, and the sink
-  * itself must make the replay a no-op. This implements the standard
-  * recipe: a durable commit marker per batchId, checked before any write;
-  * the data swap happens before the marker so a crash between the two
-  * replays the batch onto already-merged data, which the key-upsert makes
-  * idempotent too (upserting the same rows twice is a fixpoint).
-  *
-  * The store is a plain parquet dir swapped whole (write-temp → rename) —
-  * the engine's standing Delta stand-in (SURVEY §2 S7); on a real 100-TB
-  * deployment the swap becomes a transactional-table MERGE (q128's shape)
-  * and the marker rides the table's own log. Batch rows win over stored
-  * rows; a batch must carry one row per key (checked) so last-writer-wins
-  * is well defined.
+  * itself must make the replay a no-op. Here the batchId rides the
+  * commit's op tag, so the COMMIT IS THE MARKER: no separate marker file
+  * and no directory swap. A replayed batchId finds its tag in the log and
+  * no-ops; a crash after staging but before publish leaves invisible
+  * orphans (vacuum reclaims); a new batchId carrying rows already stored
+  * is absorbed, since upserting the same rows twice is a fixpoint. The
+  * file-pruned MERGE keeps the rewrite proportional to touched files at
+  * any table size. Batch rows win over stored rows; a batch must carry
+  * one row per key (checked) so last-writer-wins is well defined.
   */
 object BatchSink {
 
-  /** The transactional form of `upsertBatch`: MERGE each micro-batch into
-    * a `TxTable`, the batchId riding the commit's op tag — so the COMMIT
-    * IS THE MARKER and exactly-once needs no separate marker file or
-    * directory swap. Recovery cases collapse to the table's own ACID
-    * story: a crash after staging but before publish leaves invisible
-    * orphans (vacuum reclaims); a replayed batchId finds its tag in the
-    * log and no-ops; the file-pruned MERGE keeps the rewrite proportional
-    * to touched files at any table size. This is the "marker rides the
-    * table's own log" production path the parquet-swap `upsertBatch`
-    * stands in for.
-    */
   def upsertBatchTx(batch: DataFrame, batchId: Long, dir: String,
       key: String): Unit = {
     val tag = s"batch=$batchId"
@@ -48,38 +32,5 @@ object BatchSink {
         b.sparkSession, dir, b, Seq(key), opTag = Some(tag))
       ()
     } finally { b.unpersist(); () }
-  }
-
-  def upsertBatch(batch: DataFrame, batchId: Long, path: String,
-      key: String): Unit = {
-    val dir = new File(path)
-    dir.mkdirs()
-    val marker = new File(dir, s"_commits/$batchId")
-    if (marker.exists()) return // replayed batch: already committed
-    val spark = batch.sparkSession
-    val b = batch.persist()
-    require(b.groupBy(key).count().where(col("count") > 1).isEmpty,
-      s"batch $batchId carries duplicate keys — last-writer-wins undefined")
-    val dataDir = new File(dir, "data")
-    val merged =
-      if (dataDir.exists()) {
-        val cur = spark.read.parquet(dataDir.getPath)
-        cur.join(b.select(col(key)), Seq(key), "left_anti").unionByName(b)
-      } else b
-    val tmp = new File(dir, s"data_tmp_$batchId")
-    merged.write.mode("overwrite").parquet(tmp.getPath)
-    b.unpersist()
-    // swap THEN mark: a crash in between replays onto merged data, which
-    // the anti-join upsert absorbs (fixpoint)
-    if (dataDir.exists()) {
-      def rm(f: File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(dataDir)
-    }
-    require(tmp.renameTo(dataDir), s"atomic swap failed for batch $batchId")
-    marker.getParentFile.mkdirs()
-    marker.createNewFile()
-    ()
   }
 }

@@ -316,13 +316,44 @@ class PartitionedTxSpec extends SparkSpec {
     val committed = (0 to overwrites).map(i => 10L + i).toSet
     val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
     val reads = new java.util.concurrent.atomic.AtomicInteger()
+    val appends = new java.util.concurrent.atomic.AtomicInteger()
     val writing = new java.util.concurrent.atomic.AtomicBoolean(true)
+    // an overwrite that loses its version to an append raises; it
+    // re-derives and retries, as the CAS contract asks of its caller
+    @annotation.tailrec
+    def overwrite(i: Int, attempts: Int = 1): Unit = {
+      val landed =
+        try {
+          TxTable.overwrite(rows(10 + i), dir,
+            partitionBy = Seq(if (i % 2 == 0) "p" else "q"))
+          true
+        } catch {
+          case _: java.util.ConcurrentModificationException if attempts < 50 => false
+        }
+      if (!landed) overwrite(i, attempts + 1)
+    }
     val writer = new Thread(() => {
-      try (1 to overwrites).foreach { i =>
-        TxTable.overwrite(rows(10 + i), dir,
-          partitionBy = Seq(if (i % 2 == 0) "p" else "q"))
-      } catch { case t: Throwable => errs.add(t) }
+      try (1 to overwrites).foreach(overwrite(_))
+      catch { case t: Throwable => errs.add(t) }
       finally writing.set(false)
+    })
+    // appended rows carry k < 0, so the readers count overwrite rows only;
+    // an append that loses its version to a re-partitioning must raise,
+    // never commit files in the layout it staged under. Paced, so the
+    // overwrites (slower to stage) are not starved of versions.
+    val appender = new Thread(() => {
+      var i = 0L
+      while (writing.get()) {
+        i += 1
+        Thread.sleep(100)
+        try {
+          TxTable.append(Seq((-2 * i, 0, 0), (-2 * i - 1, 1, 1)).toDF("k", "p", "q"), dir)
+          appends.incrementAndGet()
+        } catch {
+          case _: java.util.ConcurrentModificationException =>
+          case t: Throwable => errs.add(t)
+        }
+      }
     })
     def reader(count: () => Long): Thread = new Thread(() => {
       while (writing.get()) {
@@ -334,12 +365,19 @@ class PartitionedTxSpec extends SparkSpec {
       }
     })
     val readers = Seq(
-      reader(() => TxTable.read(spark, dir).count()),
-      reader(() => spark.read.format("graft").load(dir).count()))
-    writer.start(); readers.foreach(_.start())
-    writer.join(); readers.foreach(_.join())
+      reader(() => TxTable.read(spark, dir).where(col("k") >= 0L).count()),
+      reader(() => spark.read.format("graft").load(dir)
+        .where(col("k") >= 0L).count()))
+    writer.start(); appender.start(); readers.foreach(_.start())
+    writer.join(); appender.join(); readers.foreach(_.join())
+    // every version the race produced reads, in its own layout
+    (0L to TxTable.currentVersion(dir)).foreach { v =>
+      try TxTable.read(spark, dir, Some(v)).count()
+      catch { case t: Throwable => errs.add(t) }
+    }
     assert(errs.isEmpty, errs.asScala.take(3).mkString("; "))
     assert(reads.get() > 0)
+    assert(TxTable.currentVersion(dir) == overwrites + appends.get())
   }
 
   test("TxSync replicates a partitioned source into a partitioned replica") {

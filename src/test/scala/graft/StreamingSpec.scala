@@ -248,45 +248,6 @@ class StreamingSpec extends SparkSpec {
       .unset("spark.sql.streaming.stateStore.providerClass")
   }
 
-  test("foreachBatch upsert sink: exactly-once under batch replay") {
-    implicit val sq = spark.sqlContext
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_sink").toString
-    val input = MemoryStream[(Long, Long)]
-    val q = input.toDF().toDF("k", "v").writeStream
-      .foreachBatch((df: org.apache.spark.sql.DataFrame, id: Long) =>
-        graft.streaming.BatchSink.upsertBatch(df, id, dir, "k"))
-      .option("checkpointLocation", s"$dir/_chk")
-      .start()
-    try {
-      input.addData((1L, 10L), (2L, 20L))
-      q.processAllAvailable()
-      input.addData((2L, 21L), (3L, 30L)) // key 2 updated, key 3 inserted
-      q.processAllAvailable()
-    } finally q.stop()
-    def state() = spark.read.parquet(s"$dir/data")
-      .as[(Long, Long)].collect().toSet
-    val afterStream = state()
-    assert(afterStream == Set((1L, 10L), (2L, 21L), (3L, 30L)), afterStream)
-
-    // REPLAY batch 1 (same batchId, same rows — the at-least-once case
-    // foreachBatch recovery produces): committed marker makes it a no-op
-    graft.streaming.BatchSink.upsertBatch(
-      Seq((2L, 21L), (3L, 30L)).toDF("k", "v"), 1L, dir, "k")
-    assert(state() == afterStream)
-
-    // a NEW batch id with the same rows is absorbed by the upsert fixpoint
-    graft.streaming.BatchSink.upsertBatch(
-      Seq((2L, 21L), (3L, 30L)).toDF("k", "v"), 2L, dir, "k")
-    assert(state() == afterStream)
-
-    // duplicate keys within one batch are rejected, not silently merged
-    intercept[IllegalArgumentException] {
-      graft.streaming.BatchSink.upsertBatch(
-        Seq((5L, 1L), (5L, 2L)).toDF("k", "v"), 3L, dir, "k")
-    }
-  }
-
   test("foreachBatch TxTable sink: the commit IS the marker (exactly-once)") {
     implicit val sq = spark.sqlContext
     import spark.implicits._
@@ -330,6 +291,13 @@ class StreamingSpec extends SparkSpec {
         Seq((5L, 1L), (5L, 2L)).toDF("k", "v"), 9L, tbl, "k")
     }
     assert(graft.sources.TxTable.currentVersion(tbl) == vAfter)
+
+    // a NEW batch id carrying the same rows is absorbed by the upsert
+    // fixpoint: one more commit, the same state
+    graft.streaming.BatchSink.upsertBatchTx(
+      Seq((2L, 21L), (3L, 30L)).toDF("k", "v"), 2L, tbl, "k")
+    assert(graft.sources.TxTable.currentVersion(tbl) == vAfter + 1)
+    assert(state() == afterStream)
   }
 
   test("streaming exact-dedup: dropDuplicatesWithinWatermark across batches") {

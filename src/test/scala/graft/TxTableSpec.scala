@@ -1,8 +1,32 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.sources.TxTable
+
+/** A commit that lands while a writer stages: `land(from, to)` copies the
+  * files under `from` that `to` lacks (data files first, log last). Called
+  * from a write task, it runs after the writer took its snapshot and
+  * before it publishes.
+  */
+object Squatter {
+  def land(from: String, to: String): Boolean = synchronized {
+    val src = Paths.get(from)
+    val walk = Files.walk(src)
+    val files = try walk.iterator().asScala.filter(Files.isRegularFile(_)).toSeq
+      finally walk.close()
+    files.sortBy(_.toString.contains("_txlog")).foreach { p =>
+      val t = Paths.get(to).resolve(src.relativize(p).toString)
+      if (!Files.exists(t)) {
+        Files.createDirectories(t.getParent)
+        Files.copy(p, t)
+      }
+    }
+    true
+  }
+}
 
 /** ACID contract tests for the log-structured table format: atomic
   * visibility, snapshot isolation / time travel, OPTIMIZE equivalence,
@@ -139,6 +163,109 @@ class TxTableSpec extends SparkSpec {
     // with the current version the same overwrite goes through
     TxTable.overwrite(df(9L -> "z"), dir, expectedVersion = Some(2L))
     assert(slurp(dir) == Set(9L -> "z"))
+  }
+
+  /** `df` whose write copies `from`'s newer commit into `to` mid-stage. */
+  private def squatWhileStaging(df: DataFrame, from: String, to: String): DataFrame = {
+    val squat = udf((f: String, t: String) => Squatter.land(f, t))
+      .asNondeterministic()
+    df.where(squat(lit(from), lit(to)))
+  }
+
+  /** A copy of `dir` with `change` committed to it: the squatter's commit. */
+  private def squatter(dir: String, tag: String)(change: String => Unit): String = {
+    val from = freshDir(tag)
+    Squatter.land(dir, from)
+    change(from)
+    from
+  }
+
+  test("an append that loses its version to a re-partitioning raises, publishes nothing") {
+    val s = spark
+    import s.implicits._
+    val dir = freshDir("squat_layout")
+    def rows(k0: Long) = (k0 until k0 + 6L).map(k => (k, (k % 3).toInt, (k % 2).toInt))
+      .toDF("k", "p", "q")
+    TxTable.append(rows(0L), dir, partitionBy = Seq("p"))
+    val from = squatter(dir, "squat_layout_from")(
+      TxTable.overwrite(rows(100L), _, partitionBy = Seq("q")))
+    intercept[java.util.ConcurrentModificationException] {
+      TxTable.append(squatWhileStaging(rows(10L), from, dir), dir)
+    }
+    assert(TxTable.currentVersion(dir) == 1L)
+    assert(TxTable.partitionColsAt(dir) == Seq("q"))
+    assert(TxTable.read(spark, dir).select("k").as[Long].collect().toSet ==
+      (100L until 106L).toSet)
+    // its staged files are gone: only committed files remain on disk
+    assert(TxTable.vacuum(dir, retainFrom = 0L) == 0L)
+  }
+
+  test("an append that loses its version keeps the column the winner added") {
+    val s = spark
+    import s.implicits._
+    val dir = freshDir("squat_column")
+    TxTable.append(Seq((1L, "a")).toDF("k", "v"), dir)
+    val from = squatter(dir, "squat_column_from")(
+      TxTable.append(Seq((2L, "b", 20L)).toDF("k", "v", "x"), _))
+    val v = TxTable.append(
+      squatWhileStaging(Seq((3L, "c", 3.5)).toDF("k", "v", "y"), from, dir), dir)
+    assert(v == 2L)
+    val back = TxTable.read(spark, dir)
+    assert(back.columns.toSeq == Seq("k", "v", "x", "y"))
+    assert(back.orderBy("k").collect().toSeq.map(r =>
+      (r.getLong(0), Option(r.get(2)), Option(r.get(3)))) ==
+      Seq((1L, None, None), (2L, Some(20L), None), (3L, None, Some(3.5))))
+  }
+
+  test("an append whose column a concurrent commit added with another type raises") {
+    val s = spark
+    import s.implicits._
+    val dir = freshDir("squat_clash")
+    TxTable.append(Seq((1L, "a")).toDF("k", "v"), dir)
+    val from = squatter(dir, "squat_clash_from")(
+      TxTable.append(Seq((2L, "b", "s")).toDF("k", "v", "x"), _))
+    intercept[IllegalArgumentException] {
+      TxTable.append(
+        squatWhileStaging(Seq((3L, "c", 7)).toDF("k", "v", "x"), from, dir), dir)
+    }
+    assert(TxTable.currentVersion(dir) == 1L)
+    assert(TxTable.schemaAt(dir).get("x").dataType ==
+      org.apache.spark.sql.types.StringType)
+    assert(TxTable.vacuum(dir, retainFrom = 0L) == 0L)
+  }
+
+  test("an empty write commits its schema and no data file") {
+    val empty = df(1L -> "a").where(lit(false))
+    def assertEmptyCommit(dir: String): Unit = {
+      val h = TxTable.history(spark, dir).collect()
+      assert(h.length == 1 && h(0).getLong(2) == 0L, h.toSeq)
+      val back = TxTable.read(spark, dir, Some(0L))
+      assert(back.columns.toSeq == Seq("k", "v") && back.count() == 0L)
+      assert(!Files.walk(Paths.get(dir)).iterator().asScala
+        .exists(_.toString.endsWith(".parquet")))
+    }
+    val appended = freshDir("empty_append")
+    TxTable.append(empty, appended)
+    assertEmptyCommit(appended)
+    val merged = freshDir("empty_merge")
+    TxTable.merge(spark, merged, empty, Seq("k"))
+    assertEmptyCommit(merged)
+  }
+
+  test("one commit path: TxTable stages and publishes at one call site each") {
+    val src = Paths.get("src/main/scala/graft/sources/TxTable.scala")
+    assert(Files.isRegularFile(src))
+    val code = Files.readString(src)
+    def callSites(name: String): Int =
+      s"""(?<!def )\\b$name\\(""".r.findAllMatchIn(code).size
+    assert(callSites("stage") == 1, "stage through the commit helper")
+    assert(callSites("publish") == 1, "publish through the commit helper")
+    val walk = Files.walk(Paths.get("src"))
+    val stray = try walk.iterator().asScala
+      .filter(p => p.toString.endsWith(".scala"))
+      .filter(p => Files.readString(p).contains("publish" + "ForSync")).toSeq
+      finally walk.close()
+    assert(stray.isEmpty, stray)
   }
 
   test("log checkpoint at the interval: bounded replay, same snapshots") {
