@@ -458,6 +458,7 @@ object TxStats {
   }
 
   private def statToBigDec(v: Any): Option[BigDecimal] = v match {
+    case b: BigDecimal => Some(b) // a normalized decimal literal (list sorting)
     case l: Long => Some(BigDecimal(l))
     case d: Double =>
       if (d.isNaN || d.isInfinite) None
@@ -535,6 +536,80 @@ object TxStats {
   private def mayGe(fs: FileStats, cs: ColStats, v: Any, dt: DataType): Boolean =
     hasNonNull(fs, cs) && cs.hi.forall(h => cmp(h, v, dt).forall(_ >= 0))
 
+  /** The values of an `IN` list or an `INSET` over attribute `name`, in
+    * zone-map space: normalized as [[litOf]] normalizes a literal, nulls
+    * dropped (they make IN NULL, never TRUE), sorted in the coerced type
+    * `dt`'s order. A file's [lo, hi] then finds its values by binary
+    * search, so a large list costs O(log K) per file, not O(K).
+    */
+  private[sources] final class ValueList(val name: String, val vs: Array[Any],
+      val dt: DataType) {
+    def size: Int = vs.length
+
+    /** Index of the first value at or above `lo` (0 if incomparable). */
+    def from(lo: Any): Int =
+      if (vs.isEmpty || cmp(lo, vs(0), dt).isEmpty) 0
+      else {
+        var (a, b) = (0, vs.length)
+        while (a < b) {
+          val m = (a + b) >>> 1
+          if (cmp(lo, vs(m), dt).get <= 0) b = m else a = m + 1
+        }
+        a
+      }
+  }
+
+  /** The [[ValueList]] of each `IN` / `INSET` node of a predicate, built
+    * on first use: [[prune]] tests one predicate against every file.
+    */
+  private[sources] final class ValueLists {
+    private val built = new java.util.IdentityHashMap[Expression, Option[ValueList]]()
+
+    def apply(e: Expression): Option[ValueList] = {
+      if (!built.containsKey(e)) built.put(e, listOf(e))
+      built.get(e)
+    }
+  }
+
+  /** None = not an attribute against literals of one comparable type:
+    * never prune on it.
+    */
+  private def listOf(e: Expression): Option[ValueList] = {
+    val typed: Option[(Expression, Seq[Any], DataType)] = e match {
+      case In(a, vs) => // analysis coerced the list to one type
+        val lits = vs.map(litOf)
+        if (lits.exists(_.isEmpty) || lits.flatten.map(_._2).distinct.size > 1) None
+        else Some((a, lits.flatten.map(_._1),
+          lits.flatten.headOption.fold(a.dataType)(_._2)))
+      case InSet(a, hset) => // Catalyst values of the child's type
+        Some((a, hset.toSeq.map(normLit(_, a.dataType)), a.dataType))
+      case _ => None
+    }
+    for {
+      (a, values, dt) <- typed
+      name <- attrOf(a)
+      vs = values.filter(_ != null).toArray
+      if vs.forall(v => cmp(v, v, dt).isDefined)
+    } yield new ValueList(name,
+      vs.sorted(Ordering.fromLessThan[Any](cmp(_, _, dt).exists(_ < 0))), dt)
+  }
+
+  /** IN over a sorted list: some value within the file's [lo, hi] that
+    * its Bloom filter does not rule out. Binary search to the first value
+    * at or above `lo`, then walk up to `hi`, stopping at the first hit.
+    */
+  private def mayIn(fs: FileStats, cs: ColStats, ks: ValueList): Boolean =
+    hasNonNull(fs, cs) && {
+      var i = cs.lo.fold(0)(ks.from)
+      var hit = false
+      while (!hit && i < ks.size &&
+          cs.hi.forall(h => cmp(h, ks.vs(i), ks.dt).forall(_ >= 0))) {
+        hit = bloomMayContain(fs, ks.name, ks.vs(i), ks.dt)
+        i += 1
+      }
+      hit
+    }
+
   /** One binary comparison, either operand order: apply `fwd` when the
     * attribute is on the left, `rev` when on the right; a null literal
     * makes the comparison NULL (no row passes a null filter).
@@ -557,22 +632,23 @@ object TxStats {
   /** Can a file with stats `fs` contain a row matching `e`? Sound,
     * conservative: anything unrecognized is "maybe" (true).
     */
-  def canMatch(e: Expression, fs: FileStats): Boolean = e match {
-    case And(l, r) => canMatch(l, fs) && canMatch(r, fs)
-    case Or(l, r) => canMatch(l, fs) || canMatch(r, fs)
+  def canMatch(e: Expression, fs: FileStats,
+      lists: ValueLists = new ValueLists): Boolean = e match {
+    case And(l, r) => canMatch(l, fs, lists) && canMatch(r, fs, lists)
+    case Or(l, r) => canMatch(l, fs, lists) || canMatch(r, fs, lists)
     case Not(child) => child match {
-      case IsNull(a) => canMatch(IsNotNull(a), fs)
-      case IsNotNull(a) => canMatch(IsNull(a), fs)
+      case IsNull(a) => canMatch(IsNotNull(a), fs, lists)
+      case IsNotNull(a) => canMatch(IsNull(a), fs, lists)
       // comparison complements (a row MATCHES Not(cmp) only when cmp is
       // FALSE, never NULL — so null rows are excluded, like any filter):
       // NOT(a > v) ⇔ a <= v, etc.; NOT(a = v) can only be ruled out when
       // the file is constant at v (lo == hi == v). These are what make a
       // whole-partition or retention-range DELETE provably total on a
       // file — the zero-read drop path.
-      case GreaterThan(l, r) => canMatch(LessThanOrEqual(l, r), fs)
-      case GreaterThanOrEqual(l, r) => canMatch(LessThan(l, r), fs)
-      case LessThan(l, r) => canMatch(GreaterThanOrEqual(l, r), fs)
-      case LessThanOrEqual(l, r) => canMatch(GreaterThan(l, r), fs)
+      case GreaterThan(l, r) => canMatch(LessThanOrEqual(l, r), fs, lists)
+      case GreaterThanOrEqual(l, r) => canMatch(LessThan(l, r), fs, lists)
+      case LessThan(l, r) => canMatch(GreaterThanOrEqual(l, r), fs, lists)
+      case LessThanOrEqual(l, r) => canMatch(GreaterThan(l, r), fs, lists)
       case EqualTo(l, r) =>
         // a string lo of exactly StringPrefixCap chars may be a TRUNCATED
         // longer minimum — it cannot prove the file constant at v
@@ -585,15 +661,15 @@ object TxStats {
             cs.lo.exists(x => exactLo(x) && cmp(x, v, dt).contains(0)) &&
             cs.hi.exists(x => cmp(x, v, dt).contains(0)))
         binCmp(fs, l, r)(neq, neq)
-      case Not(inner) => canMatch(inner, fs) // ¬¬e
+      case Not(inner) => canMatch(inner, fs, lists) // ¬¬e
       // the optimizer's form of `b = false`
       case a: AttributeReference if a.dataType == BooleanType =>
-        canMatch(EqualTo(a, Literal(false)), fs)
+        canMatch(EqualTo(a, Literal(false)), fs, lists)
       case _ => true
     }
     // the optimizer's form of `b = true`
     case a: AttributeReference if a.dataType == BooleanType =>
-      canMatch(EqualTo(a, Literal(true)), fs)
+      canMatch(EqualTo(a, Literal(true)), fs, lists)
     case Literal(b: Boolean, BooleanType) => b
     case Literal(null, _) => false // WHERE NULL keeps nothing
     case IsNull(a) => attrOf(a).flatMap(fs.cols.get) match {
@@ -631,17 +707,12 @@ object TxStats {
     case GreaterThanOrEqual(l, r) =>
       binCmp(fs, l, r)((_, cs, v, dt) => mayGe(fs, cs, v, dt),
         (_, cs, v, dt) => mayLe(fs, cs, v, dt))
-    case In(a, vs) if vs.forall(v => litOf(v).isDefined) =>
-      attrOf(a) match {
+    case In(_, _) | InSet(_, _) =>
+      lists(e) match {
         case None => true
-        case Some(name) => fs.cols.get(name) match {
+        case Some(ks) => fs.cols.get(ks.name) match {
           case None => true
-          case Some(cs) =>
-            // null list entries contribute NULL (never TRUE) to IN
-            vs.flatMap(litOf).exists { case (v, dt) =>
-              v != null && mayEq(fs, cs, v, dt) &&
-                bloomMayContain(fs, name, v, dt)
-            }
+          case Some(cs) => mayIn(fs, cs, ks)
         }
       }
     case StartsWith(l, r) =>
@@ -673,8 +744,10 @@ object TxStats {
     * predicate from [[resolve]]). Files without stats are always kept.
     */
   def prune(cond: Expression, stats: Map[String, FileStats],
-      files: Seq[String]): (Seq[String], Seq[String]) =
-    files.partition(f => stats.get(f).forall(canMatch(cond, _)))
+      files: Seq[String]): (Seq[String], Seq[String]) = {
+    val lists = new ValueLists
+    files.partition(f => stats.get(f).forall(canMatch(cond, _, lists)))
+  }
 
   /** Sound "EVERY row of this file satisfies `e` — TRUE, never null" test,
     * the dual of [[canMatch]]: DELETE's zero-read drop removes a file from
@@ -690,7 +763,8 @@ object TxStats {
     * from below; equality additionally needs `lo` exact (length under the
     * cap), and `hi` is only ever stored exact.
     */
-  def mustMatchAll(e: Expression, fs: FileStats): Boolean = {
+  def mustMatchAll(e: Expression, fs: FileStats,
+      lists: ValueLists = new ValueLists): Boolean = {
     def exactLo(x: Any): Boolean = x match {
       case s: String => s.length < StringPrefixCap
       case _ => true
@@ -705,8 +779,8 @@ object TxStats {
               (if (isFwd) fwd(cs, v, dt) else rev(cs, v, dt)))
         }.getOrElse(false)
     e match {
-      case And(l, r) => mustMatchAll(l, fs) && mustMatchAll(r, fs)
-      case Or(l, r) => mustMatchAll(l, fs) || mustMatchAll(r, fs)
+      case And(l, r) => mustMatchAll(l, fs, lists) && mustMatchAll(r, fs, lists)
+      case Or(l, r) => mustMatchAll(l, fs, lists) || mustMatchAll(r, fs, lists)
       case Literal(b: Boolean, BooleanType) => b
       case IsNull(a) =>
         attrOf(a).flatMap(fs.cols.get).exists(_.nulls == fs.rows)
@@ -733,15 +807,16 @@ object TxStats {
         bin(l, r)(
           (cs, v, dt) => cs.lo.exists(x => cmp(x, v, dt).exists(_ >= 0)),
           (cs, v, dt) => cs.hi.exists(x => cmp(x, v, dt).exists(_ <= 0)))
-      case In(a, vs) if vs.forall(v => litOf(v).isDefined) =>
+      case In(_, _) | InSet(_, _) =>
         // all rows equal ONE constant that the list contains
-        attrOf(a).flatMap(fs.cols.get).exists { cs =>
-          cs.nulls == 0 && cs.lo.exists(exactLo) &&
-            vs.flatMap(litOf).exists { case (v, dt) =>
-              v != null &&
-                cs.lo.exists(x => cmp(x, v, dt).contains(0)) &&
-                cs.hi.exists(x => cmp(x, v, dt).contains(0))
+        lists(e).exists { ks =>
+          fs.cols.get(ks.name).exists { cs =>
+            cs.nulls == 0 && cs.lo.exists { lo =>
+              val i = ks.from(lo)
+              exactLo(lo) && i < ks.size && cmp(lo, ks.vs(i), ks.dt).contains(0) &&
+                cs.hi.exists(x => cmp(x, ks.vs(i), ks.dt).contains(0))
             }
+          }
         }
       case _ => false // unknown shape: never drop on it
     }

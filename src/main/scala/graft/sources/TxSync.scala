@@ -20,9 +20,10 @@ import org.apache.spark.sql.functions._
   *    cron overlap) finds the tag and skips — exactly-once APPLICATION
   *    with no state outside the two logs. The high-water mark IS the
   *    target log.
-  *  - **File-pruned apply.** Each apply rewrites only target files
-  *    containing affected keys (the MERGE pruning pattern: one
-  *    semi-join over `input_file_name`); layout-only source commits
+  *  - **File-pruned apply.** Each apply is MERGE's keyed upsert: the
+  *    changed keys, collected once, pick candidate target files from
+  *    their zone maps and Bloom filters, and only the files a scan finds
+  *    holding a changed key are rewritten; layout-only source commits
   *    (compact/zorder) produce empty feeds and move no data.
   *
   * Keys must be unique per row in both tables (the usual replication

@@ -2,8 +2,10 @@ package graft.sources
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import org.apache.hadoop.mapreduce.Job
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.catalyst.expressions.InSet
 import org.apache.spark.sql.execution.datasources.OutputWriterFactory
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
@@ -37,14 +39,16 @@ import scala.jdk.CollectionConverters._
   *    file set — concurrent commits never tear a read.
   *  - **OPTIMIZE.** `compact` rewrites the live file set into few files
   *    in one commit (adds + removes together), leaving history intact.
-  *  - **MERGE.** Copy-on-write upsert with FILE PRUNING: one semi-join
-  *    over the snapshot tagged with `input_file_name()` finds the files
-  *    that contain matched keys; only those are rewritten (anti-join
-  *    survivors ∪ source), untouched files carry over. At 100 TB the
-  *    rewrite cost is proportional to touched files, not table size —
-  *    the same contract as the reference's Delta MERGE. `delete` /
-  *    `update` complete the DML surface with the same copy-on-write
-  *    shape, file-pruned through the zone maps below.
+  *  - **MERGE.** Copy-on-write upsert with FILE PRUNING, driven by the
+  *    source's key set, collected once: the zone maps and Bloom
+  *    filters below pick the candidate files, one shuffle-free
+  *    scan of the candidates finds the files that hold a key, and only
+  *    those are rewritten (their rows without a source key ∪ source);
+  *    untouched files carry over. At 100 TB the rewrite cost is
+  *    proportional to touched files, not table size — the same contract
+  *    as the reference's Delta MERGE. `delete` / `update` complete the
+  *    DML surface with the same copy-on-write shape, file-pruned through
+  *    the zone maps below.
   *  - **Data skipping.** Every write records per-file min/max/nullCount
   *    zone maps, computed by the write tasks as they write each file
   *    ([[TxStats.WriteStats]]; an atomic `<v>.stats.tsv` sidecar next to
@@ -146,12 +150,12 @@ object TxTable {
       arrOpt("partitionBy").getOrElse(Nil))
   }
 
-  private def readLog(dir: String, asOf: Option[Long]): Seq[Commit] = {
-    val top = asOf.getOrElse(Long.MaxValue)
-    (0L to currentVersion(dir)).takeWhile(_ <= top).map { v =>
+  /** The log entries from version `from` up to `to` (default: latest). */
+  private def readLog(dir: String, from: Long = 0L,
+      to: Long = Long.MaxValue): Seq[Commit] =
+    (from to math.min(to, currentVersion(dir))).map { v =>
       parse(Files.readString(entryPath(dir, v)))
     }
-  }
 
   /** Commit interval for log checkpoints: at every multiple, publish
     * also writes `<v>.checkpoint.json` holding the FULL live file list
@@ -417,7 +421,7 @@ object TxTable {
     val tracker = new TxStats.WriteStats(
       StructType(df.schema.filterNot(f => partitionBy.contains(f.name))),
       bloomFor, partitionBy.size)
-    org.apache.spark.sql.GraftSqlBridge.writeFiles(df, new MicrosParquet,
+    GraftSqlBridge.writeFiles(df, new MicrosParquet,
       tmp.toString, partitionBy, Seq(tracker))
     val parts = Files.walk(tmp).iterator().asScala.toSeq
       .filter(_.getFileName.toString.endsWith(".parquet")).sortBy(_.toString)
@@ -694,8 +698,9 @@ object TxTable {
     // 100 TB this makes partition drops and retention sweeps
     // metadata-only; only boundary files are rewritten. Fail-open as
     // ever: stats-less or straddling files take the copy-on-write path.
+    val lists = new TxStats.ValueLists
     val rewrite = touched.filterNot(f =>
-      s.stats.get(f).exists(TxStats.mustMatchAll(cond, _)))
+      s.stats.get(f).exists(TxStats.mustMatchAll(cond, _, lists)))
     val kept = scan(spark, s, rewrite).where(!coalesce(predicate, lit(false)))
     commit(s, "delete", kept, touched, s.pcols, bloomsOf(s, rewrite))(_.schema)
   }
@@ -744,30 +749,75 @@ object TxTable {
 
   /** The keyed upsert MERGE and the sync apply share: in one commit over
     * `s`, rows whose `keys` appear in `keyRows` leave the table and
-    * `rows` go in. Copy-on-write with file pruning: one semi-join over the
-    * snapshot tagged with `input_file_name()` finds the files holding a
-    * key; their other rows carry over through an anti-join over a scan of
-    * just those files, and every other file stays untouched. An empty
-    * snapshot has no such files, so its upsert stages `rows` alone.
+    * `rows` go in. Copy-on-write with file pruning, driven by one key set:
+    *  - the keys of `keyRows` are collected once, in one job (cast to
+    *    the table's key types; rows with a null key are dropped, since an
+    *    equi-join never matches them) and deduplicated there;
+    *  - one predicate, `key INSET keys` (`key` a struct for composite
+    *    keys), holds them as one hash set; like join equality, it treats
+    *    -0.0 as 0.0 and NaN as NaN;
+    *  - the candidate files are those whose zone maps and Bloom filters
+    *    admit some key of every key column ([[TxStats.prune]]);
+    *  - one scan of the candidates, filtered by the predicate, finds the
+    *    files holding a key, their names deduplicated inside each task and
+    *    again after the collect — no shuffle and no broadcast;
+    *  - those files' other rows carry over (the same predicate, negated)
+    *    with `rows`, and every other file stays untouched.
+    * An empty snapshot has no such files, so its upsert stages `rows`
+    * alone. `keyRows` is evaluated once for the keys, `rows` once by the
+    * write.
     */
   private[sources] def upsert(spark: SparkSession, s: Snapshot,
       keys: Seq[String], keyRows: DataFrame, rows: DataFrame, op: String): Long = {
-    val keySet = keyRows.select(keys.map(col): _*).distinct()
+    val found = if (s.files.isEmpty) Nil else keySet(spark, s, keys, keyRows)
+    def inSet(key: Column, values: Seq[Any]): Column =
+      GraftSqlBridge.column(InSet(GraftSqlBridge.expression(key), values.toSet))
+    val hit =
+      if (keys.size == 1) inSet(col(keys.head), found.map(_.head))
+      else inSet(struct(keys.map(col): _*), found.map(InternalRow.fromSeq))
+    val (candidates, _) =
+      if (found.isEmpty) (Nil, Nil)
+      else prune(spark, s, keys.indices.map(i => inSet(col(keys(i)), found.map(_(i))))
+        .reduce(_ && _))
     // bare file NAME (the URI-independent token) mapped back to the log's
     // relative path; basenames are UUID-token-unique across the table
     val baseOf = s.files.map(f => f.split('/').last -> f).toMap
     val touched =
-      if (s.files.isEmpty) Nil
-      else scan(spark, s, s.files)
-        .withColumn("__name", element_at(split(input_file_name(), "/"), -1))
-        .join(broadcast(keySet), keys, "left_semi")
-        .select("__name").distinct()
-        .collect().map(r => baseOf(r.getString(0))).toSeq.sorted
+      if (candidates.isEmpty) Nil
+      else scan(spark, s, candidates).where(hit)
+        .select(element_at(split(input_file_name(), "/"), -1))
+        .as(Encoders.STRING)
+        .mapPartitions((names: Iterator[String]) => names.toSet.iterator)(Encoders.STRING)
+        .collect().distinct.map(baseOf).toSeq.sorted
     val data =
       if (s.version < 0) rows
       else if (touched.isEmpty) scan(spark, s, Nil).unionByName(rows) // pure insert
-      else scan(spark, s, touched).join(keySet, keys, "left_anti").unionByName(rows)
+      else scan(spark, s, touched).where(!coalesce(hit, lit(false))).unionByName(rows)
     commit(s, op, data, touched, s.pcols, bloomsOf(s, touched))(evolve(_, rows.schema))
+  }
+
+  /** The distinct keys of `keyRows` with no null column, in Catalyst form
+    * (one value per key column) and cast to the key types of `s`: one Spark
+    * job. Floats are canonicalized (-0.0 to 0.0, one NaN), so the dedup and
+    * the key set's hashing see join equality.
+    */
+  private def keySet(spark: SparkSession, s: Snapshot, keys: Seq[String],
+      keyRows: DataFrame): Seq[Seq[Any]] = {
+    val types = scan(spark, s, Nil).select(keys.map(col): _*).schema.map(_.dataType)
+    val toCatalyst = types.map(CatalystTypeConverters.createToCatalystConverter)
+    def canon(v: Any): Any = v match {
+      case d: Double => if (d.isNaN) Double.NaN else if (d == 0.0) 0.0 else d
+      case f: Float => if (f.isNaN) Float.NaN else if (f == 0.0f) 0.0f else f
+      case o => o
+    }
+    // java.util equality is equals(): canonical NaNs are equal there
+    val distinct = new java.util.LinkedHashSet[java.util.List[Any]]()
+    keyRows.select(keys.zip(types).map { case (k, t) => col(k).cast(t) }: _*)
+      .collect().foreach { r =>
+        if (!r.anyNull) distinct.add(java.util.Arrays.asList(
+          types.indices.map(i => canon(toCatalyst(i)(r.get(i)))): _*))
+      }
+    distinct.asScala.map(_.asScala.toSeq).toSeq
   }
 
   /** Change data feed: NET row-level changes committed in versions
@@ -798,7 +848,9 @@ object TxTable {
   def readChanges(spark: SparkSession, dir: String, fromVersion: Long,
       toVersion: Option[Long] = None): DataFrame = {
     val top = math.min(toVersion.getOrElse(Long.MaxValue), currentVersion(dir))
-    val allCommits = readLog(dir, Some(top))
+    // the entries the diff reads: the window and the one before it (the
+    // layout its first removes were written in), never the whole log
+    val allCommits = readLog(dir, math.max(math.min(fromVersion, top), 0L), top)
     val layoutOf: Map[Long, Seq[String]] =
       allCommits.map(c => c.version -> c.partitionBy).toMap
     val commits = allCommits.filter(_.version > fromVersion)
@@ -858,7 +910,7 @@ object TxTable {
 
   /** True if some commit carries `opTag` (idempotence lookup for sinks). */
   def hasCommitTag(dir: String, opTag: String): Boolean =
-    readLog(dir, None).exists(_.op.endsWith(":" + opTag))
+    readLog(dir).exists(_.op.endsWith(":" + opTag))
 
   /** Commit ops in version order — the driver-side view [[TxSync]]'s
     * high-water-mark scan reads (the log IS driver metadata; wrapping it
@@ -866,12 +918,12 @@ object TxTable {
     * replicate call for nothing).
     */
   private[sources] def commitOps(dir: String): Seq[String] =
-    readLog(dir, None).map(_.op)
+    readLog(dir).map(_.op)
 
   /** Commit history as a DataFrame: (version, op, n_adds, n_removes). */
   def history(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    readLog(dir, None)
+    readLog(dir)
       .map(c => (c.version, c.op, c.adds.size.toLong, c.removes.size.toLong))
       .toDF("version", "op", "n_adds", "n_removes")
   }

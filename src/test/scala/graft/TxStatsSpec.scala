@@ -318,6 +318,11 @@ class TxStatsSpec extends SparkSpec {
       col("s").startsWith("xx"), // long-string file: hi unbounded, kept
       col("s").isin("banana", "zebra"),
       col("k").isin(1L, 2L, 3L),
+      // over 10 values the optimizer plans an INSET; the planning-time
+      // prune must keep what pruneFiles keeps for the analyzed IN
+      col("k").isin((0L to 10L): _*),
+      col("k").isin(((1L to 3L) ++ (100L until 1097L)): _*), // 1000 values, none in [10, 11]
+      col("s").isin(("apple" +: (1 to 10).map(i => s"q$i")): _*),
       col("t") >= lit(ts("2021-01-01 00:00:00")),
       col("t") < lit(ts("2020-02-01 00:00:00")),
       col("b") === true,
@@ -357,6 +362,52 @@ class TxStatsSpec extends SparkSpec {
       assert(scanned == kept.size,
         s"$p: readWhere scanned $scanned files, pruneFiles keeps ${kept.size}")
     }
+  }
+
+  test("an INSET prunes and drops files exactly as the IN it came from") {
+    import org.apache.spark.sql.catalyst.expressions.{AttributeReference, In, InSet, Literal}
+    import org.apache.spark.unsafe.types.UTF8String
+    val k = AttributeReference("k", LongType)()
+    val s = AttributeReference("s", StringType)()
+    val d = AttributeReference("d", DateType)()
+    def bloom(keys: String*) = {
+      val words = new Array[Long]((graft.functions.FileBloom.DefaultBits + 63) / 64)
+      keys.foreach(graft.functions.FileBloom.set(words, _, graft.functions.FileBloom.DefaultK))
+      graft.functions.FileBloom.Bloom(graft.functions.FileBloom.DefaultK, words)
+    }
+    val files = Seq(
+      TxStats.FileStats(3, Map("k" -> TxStats.ColStats("l", 0, Some(10L), Some(20L))),
+        Map("k" -> bloom("10", "15", "20"))),
+      TxStats.FileStats(2, Map("k" -> TxStats.ColStats("l", 0, Some(7L), Some(7L)),
+        "s" -> TxStats.ColStats("s", 0, Some("m"), Some("m")),
+        "d" -> TxStats.ColStats("l", 0, Some(18000L), Some(18000L)))),
+      TxStats.FileStats(4, Map("k" -> TxStats.ColStats("l", 1, Some(0L), Some(100L)),
+        "s" -> TxStats.ColStats("s", 0, Some("a"), None))),
+      TxStats.FileStats(1, Map.empty))
+    val lists: Seq[(org.apache.spark.sql.catalyst.expressions.Expression, Seq[Any])] = Seq(
+      k -> Seq(11L, 12L, 13L), // inside file 1's range, all absent from its Bloom
+      k -> Seq(15L, 99L), // file 1's Bloom admits 15
+      k -> Seq(7L), // file 2 is constant at 7
+      k -> (0L until 1000L).filter(_ % 2 == 1), // 500 odd values
+      k -> Seq(-5L, 500L), // outside every range
+      k -> Seq(null, 7L),
+      k -> Seq(),
+      s -> Seq(UTF8String.fromString("m"), UTF8String.fromString("z")),
+      s -> Seq(UTF8String.fromString("0")),
+      d -> Seq(18000, 18001)) // dates are days in Catalyst form
+    lists.foreach { case (a, values) =>
+      val in = In(a, values.map(Literal.create(_, a.dataType)))
+      val inSet = InSet(a, values.toSet)
+      files.foreach { fs =>
+        assert(TxStats.canMatch(inSet, fs) == TxStats.canMatch(in, fs), s"$in on $fs")
+        assert(TxStats.mustMatchAll(inSet, fs) == TxStats.mustMatchAll(in, fs), s"$in on $fs")
+      }
+    }
+    // the Bloom rules out every key inside file 1's range; file 2 is all 7s
+    assert(!TxStats.canMatch(InSet(k, Set(11L, 12L, 13L)), files(0)))
+    assert(TxStats.canMatch(InSet(k, Set(15L, 99L)), files(0)))
+    assert(TxStats.mustMatchAll(InSet(k, Set(3L, 7L, 9L)), files(1)))
+    assert(!TxStats.mustMatchAll(InSet(k, Set(3L, 9L)), files(1)))
   }
 
   test("plain snapshot reads never parse the zone-map sidecars; a filtered read does") {

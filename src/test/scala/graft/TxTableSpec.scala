@@ -3,7 +3,12 @@ package graft
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import graft.sources.TxTable
 
 /** A commit that lands while a writer stages: `land(from, to)` copies the
@@ -110,6 +115,60 @@ class TxTableSpec extends SparkSpec {
     val removedAtMerge = TxTable.history(spark, dir)
       .where(col("version") === 2L).collect()(0).getAs[Long]("n_removes")
     assert(removedAtMerge == 1L, s"pruning failed: removed $removedAtMerge files")
+  }
+
+  test("a MERGE runs 3 jobs, searches its Bloom candidates with no shuffle, reads its source twice") {
+    val s = spark
+    import s.implicits._
+    val dir = freshDir("merge_budget")
+    // four files striped by k % 4: each spans the whole key range, so only
+    // the Bloom filters can tell which files may hold a key
+    (0 until 4).foreach { r =>
+      TxTable.append((0L until 400L).filter(_ % 4 == r).map(k => (k, s"v$k"))
+        .toDF("k", "v").repartition(1), dir, bloomFor = Seq("k"))
+    }
+    val keys = Seq(5L, 10L, 1000L) // files 1 and 2, and a new key
+    val candidates = TxTable.pruneFiles(spark, dir, col("k").isin(keys: _*))._1
+    assert(candidates.size == 2, candidates)
+    // every evaluation of the source passes its rows through an accumulator;
+    // a range (not a local relation) so that evaluating it runs a job
+    val evaluated = spark.sparkContext.longAccumulator("source rows")
+    val tick = udf { (k: Long) => evaluated.add(1L); k }.asNondeterministic()
+    val source = spark.range(keys.size).select(
+      tick(element_at(typedLit(keys), col("id").cast("int") + 1)).as("k"),
+      concat(lit("m"), col("id").cast("string")).as("v"))
+    val queries = new java.util.concurrent.ConcurrentLinkedQueue[(String, QueryExecution)]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution,
+          durationNs: Long): Unit = queries.add(funcName -> qe)
+      override def onFailure(funcName: String, qe: QueryExecution,
+          exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val jobs = try jobsOf(TxTable.merge(spark, dir, source, Seq("k"))).size
+      finally spark.listenerManager.unregister(listener)
+    assert(jobs == 3, "jobs: the key set, the search, the write")
+    assert(evaluated.value == 2L * keys.size, s"${evaluated.value} source rows read")
+    // the search: the one collect that scans the table
+    val searches = queries.asScala.toSeq.collect {
+      case ("collect", qe) if fileScans(qe.executedPlan).nonEmpty => qe.executedPlan
+    }
+    assert(searches.size == 1, queries.asScala.map(_._1))
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => q +: nodes(q.plan)
+      case o => o +: o.children.flatMap(nodes)
+    }
+    val shuffles = nodes(searches.head).filter(n => n.isInstanceOf[Exchange] ||
+      n.isInstanceOf[QueryStageExec] || n.isInstanceOf[BaseAggregateExec])
+    assert(shuffles.isEmpty, searches.head)
+    assert(fileScans(searches.head).map(_.metrics("numFiles").value).sum ==
+      candidates.size)
+    assert(slurp(dir) == (0L until 400L).filterNot(k => k == 5L || k == 10L)
+      .map(k => k -> s"v$k").toSet ++ Set(5L -> "m0", 10L -> "m1", 1000L -> "m2"))
+    val removed = TxTable.history(spark, dir).where(col("op") === "merge")
+      .collect()(0).getAs[Long]("n_removes")
+    assert(removed == 2L)
   }
 
   test("pure-insert merge (no matched keys) rewrites nothing") {
@@ -266,6 +325,22 @@ class TxTableSpec extends SparkSpec {
       .filter(p => Files.readString(p).contains("publish" + "ForSync")).toSeq
       finally walk.close()
     assert(stray.isEmpty, stray)
+  }
+
+  test("readChanges reads only the log entries of its window") {
+    val dir = freshDir("changes_window")
+    (0 until 8).foreach(i => TxTable.append(df(i.toLong -> s"v$i"), dir))
+    TxTable.merge(spark, dir, df(2L -> "B", 9L -> "i"), Seq("k")) // v8
+    val copy = freshDir("changes_window_copy")
+    Squatter.land(dir, copy)
+    (0L to 3L).foreach { v =>
+      Files.writeString(Paths.get(copy, "_txlog", f"$v%020d.json"), "unreadable")
+    }
+    val feed = TxTable.readChanges(spark, copy, 5L).collect()
+      .map(r => (r.getAs[Long]("_commit_version"), r.getAs[String]("_change_type"),
+        r.getAs[Long]("k"), r.getAs[String]("v"))).toSet
+    assert(feed == Set((6L, "insert", 6L, "v6"), (7L, "insert", 7L, "v7"),
+      (8L, "delete", 2L, "v2"), (8L, "insert", 2L, "B"), (8L, "insert", 9L, "i")))
   }
 
   test("log checkpoint at the interval: bounded replay, same snapshots") {
