@@ -122,7 +122,7 @@ final class GraftDataSource extends RelationProvider
   override def sourceSchema(sqlContext: SQLContext,
       schema: Option[StructType], providerName: String,
       parameters: Map[String, String]): (String, StructType) =
-    (shortName(), sourceSchemaOf(pathOf(parameters), parameters))
+    (shortName(), sourceSchemaOf(pathOf(parameters), cdfRequested(parameters)))
 
   override def createSource(sqlContext: SQLContext, metadataPath: String,
       schema: Option[StructType], providerName: String,
@@ -160,13 +160,14 @@ object GraftDataSource {
   private def cdfRequested(parameters: Map[String, String]): Boolean =
     parameters.get("readChangeFeed").exists(_.toBoolean)
 
-  private def sourceSchemaOf(dir: String,
-      parameters: Map[String, String]): StructType = {
+  /** The streaming source's schema: the committed one, plus the change
+    * columns for a change-feed stream.
+    */
+  private[sources] def sourceSchemaOf(dir: String, cdf: Boolean): StructType = {
     val base = TxTable.schemaAt(dir, None).getOrElse(
       throw new IllegalArgumentException(
         s"no TxTable at $dir (the streaming source needs a committed schema)"))
-    if (cdfRequested(parameters))
-      base.add("_change_type", "string").add("_commit_version", "long")
+    if (cdf) base.add("_change_type", "string").add("_commit_version", "long")
     else base
   }
 
@@ -202,12 +203,7 @@ private[graft] final class GraftStreamSource(spark: SparkSession,
   require(maxVersionsPerBatch.forall(_ > 0),
     "maxVersionsPerBatch must be positive")
 
-  override val schema: StructType = {
-    val base = TxTable.schemaAt(dir, None).getOrElse(
-      throw new IllegalArgumentException(s"no TxTable at $dir"))
-    if (cdf) base.add("_change_type", "string").add("_commit_version", "long")
-    else base
-  }
+  override val schema: StructType = GraftDataSource.sourceSchemaOf(dir, cdf)
 
   private def ver(o: Offset): Long = o match {
     case l: LongOffset => l.offset

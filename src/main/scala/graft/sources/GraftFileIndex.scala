@@ -71,20 +71,9 @@ final class GraftFileIndex private[sources] (snap: TxTable.Snapshot,
     */
   private def internalValues(rel: String): InternalRow =
     if (pcols.isEmpty) InternalRow.empty
-    else new GenericInternalRow(
-      TxTable.partRaw(rel, pcols).zip(partFields).map {
-        case (None, _) => null
-        case (Some(r), f) => f.dataType match {
-          case StringType => org.apache.spark.unsafe.types.UTF8String.fromString(r)
-          case ByteType => r.toByte
-          case ShortType => r.toShort
-          case IntegerType => r.toInt
-          case LongType => r.toLong
-          case BooleanType => r.toBoolean
-          case DateType => java.time.LocalDate.parse(r).toEpochDay.toInt
-          case other => sys.error(s"unsupported partition type $other")
-        }
-      }.toArray[Any])
+    else new GenericInternalRow(TxTable.partRaw(rel, pcols).zip(partFields).map {
+      case (raw, f) => raw.map(TxTable.partValue(_, f.dataType)).orNull
+    }.toArray[Any])
 
   /** Files grouped by partition directory (one group, empty values, for an
     * unpartitioned table).

@@ -26,33 +26,30 @@ import graft.functions.FileBloom
   * metadata, never from data IO.
   *
   * Design rules, in order:
-  *  - **Advisory, fail-open.** Stats only ever REMOVE files from a
-  *    scan: every TxTable read plans through [[GraftFileIndex]], which
-  *    prunes in `listFiles`, and Spark applies the full predicate to
-  *    whatever survives. A file with no stats (older commit, crashed
-  *    sidecar write, unsupported column type) is simply read. Wrong
-  *    results are therefore impossible by construction; stats quality
-  *    only moves performance.
+  *  - **Sound, and advisory where it can be.** Stats only ever REMOVE
+  *    files from a scan: every TxTable read plans through
+  *    [[GraftFileIndex]], which prunes in `listFiles`, and Spark applies
+  *    the full predicate to whatever survives; a file with no stats is
+  *    simply read. DELETE's zero-read drop is the one place a stats
+  *    verdict decides rows, so the walk must be sound, not just close.
+  *  - **One three-valued walk.** What a predicate can evaluate to on a
+  *    file's rows — a subset of {TRUE, FALSE, NULL} — is computed once:
+  *    [[canMatch]] asks whether TRUE is in it, [[mustMatchAll]] whether
+  *    nothing else is. A scan's pruning and a delete's drop thereby
+  *    share every comparison, NULL, IN and truncation rule, and NOT over
+  *    any shape is exact (it swaps TRUE and FALSE).
   *  - **Sound under truncation.** String bounds are capped at
   *    [[StringPrefixCap]] chars: the stored lower bound is a prefix of
-  *    the true minimum (a prefix never exceeds the string), and an
-  *    upper bound that WOULD need truncation is dropped entirely rather
-  *    than stored loosely — `hi = None` means "unbounded above", which
-  *    can never mis-prune. This is the safe version of Delta's
-  *    tightBounds handling, chosen over last-char increment games
-  *    (which are unsound across UTF-8/UTF-16 order divergence at
-  *    supplementary code points).
-  *  - **Compare in the query's coerced space.** The predicate is
-  *    analyzed against the snapshot schema first, so type coercion is
-  *    Spark's own (an int column probed with a double literal becomes a
-  *    double comparison). Interval tests then run in that space —
-  *    long→double / long→float conversions are monotone, so widening
-  *    the stored bounds through them keeps pruning sound even where the
-  *    conversions are lossy.
+  *    the true minimum, and an upper bound that WOULD need truncation is
+  *    dropped (`hi = None`, unbounded above) rather than stored loosely —
+  *    Delta's tightBounds rule without last-char increment games, which
+  *    are unsound where the UTF-8 and UTF-16 orders diverge.
+  *  - **Compare in the query's coerced space.** The predicate is analyzed
+  *    against the snapshot schema first, so type coercion is Spark's own
+  *    (an int column probed with a double literal becomes a double
+  *    comparison); bounds widen into that space through monotone casts.
   *  - **NaN and -0.0 follow Spark's total order** (NaN greatest,
-  *    -0.0 == 0.0): bounds are recorded in the order Spark's min/max
-  *    aggregates use, -0.0 is folded to 0.0, and they are compared with
-  *    `Double.compare`/`Float.compare`.
+  *    -0.0 == 0.0) in the recorded bounds and in every comparison.
   *
   * Stats are computed while each file is written ([[WriteStats]], a
   * tracker on the staging write's tasks — Delta's shape), so a commit
@@ -368,7 +365,7 @@ object TxStats {
     }.toMap
   }
 
-  // ---- predicate → can-this-file-match (driver-side, O(pred) per file) ----
+  // ---- predicate → its outcomes on a file (driver-side, O(pred) per file) ----
 
   /** Resolve a user predicate against the snapshot schema so coercion,
     * function resolution, and attribute binding are Spark's own — the
@@ -401,26 +398,26 @@ object TxStats {
     x.length - y.length
   }
 
-  /** Attribute under monotone casts only: unwrapping a cast is sound for
-    * interval tests iff the cast preserves order (numeric widenings are
-    * monotone even where lossy; string/date/timezone casts are not
-    * unwrapped).
+  /** Attribute under order-keeping casts only: unwrapping a cast is sound
+    * iff it maps values monotonically and never to null — the numeric
+    * widenings byte < short < int < long < float < double (monotone even
+    * where lossy), and an integral into a decimal with room for all its
+    * digits. A narrowing cast wraps around or overflows to null; string,
+    * date and timezone casts are not unwrapped.
     */
   private def attrOf(e: Expression): Option[String] = e match {
     case a: AttributeReference => Some(a.name)
-    case c: Cast if monotoneCast(c.child.dataType, c.dataType) => attrOf(c.child)
+    case c: Cast if widening(c.child.dataType, c.dataType) => attrOf(c.child)
     case _ => None
   }
 
-  private def numericLike(dt: DataType): Boolean = dt match {
-    case ByteType | ShortType | IntegerType | LongType | FloatType |
-         DoubleType => true
-    case _: DecimalType => true
-    case _ => false
-  }
+  private val Widenings = Seq(ByteType, ShortType, IntegerType, LongType, FloatType, DoubleType)
 
-  private def monotoneCast(from: DataType, to: DataType): Boolean =
-    numericLike(from) && numericLike(to)
+  private def widening(from: DataType, to: DataType): Boolean =
+    (Widenings.indexOf(from), to) match {
+      case (i, d: DecimalType) => i >= 0 && i <= 3 && d.precision - d.scale >= Seq(3, 5, 10, 20)(i)
+      case (i, _) => i >= 0 && i <= Widenings.indexOf(to)
+    }
 
   /** Literal (possibly under a foldable cast, which analysis leaves
     * unfolded): evaluated driver-side to (normalized value, coerced type).
@@ -436,7 +433,7 @@ object TxStats {
     case _ => None
   }
 
-  private def normLit(v: Any, dt: DataType): Any =
+  private[sources] def normLit(v: Any, dt: DataType): Any =
     if (v == null) null
     else dt match {
       case ByteType => v.asInstanceOf[Byte].toLong
@@ -470,9 +467,12 @@ object TxStats {
     * space. None = incomparable (never prune on it).
     */
   private def cmp(statVal: Any, litVal: Any, litDt: DataType): Option[Int] = litDt match {
-    case FloatType =>
-      statToDouble(statVal).map(s =>
-        java.lang.Float.compare(s.toFloat, litVal.asInstanceOf[Double].toFloat))
+    case FloatType => // a long casts to float in one rounding, never via double
+      (statVal match {
+        case l: Long => Some(l.toFloat)
+        case d: Double => Some(d.toFloat)
+        case _ => None
+      }).map(java.lang.Float.compare(_, litVal.asInstanceOf[Double].toFloat))
     case DoubleType =>
       statToDouble(statVal).map(s =>
         java.lang.Double.compare(s, litVal.asInstanceOf[Double]))
@@ -492,9 +492,7 @@ object TxStats {
     case _ => None
   }
 
-  /** Interval tests. Each returns "the file MAY contain a matching row";
-    * unknown bounds and incomparable values fall open (true).
-    */
+  /** Some row of the file holds a non-null value of the column. */
   private def hasNonNull(fs: FileStats, cs: ColStats): Boolean = cs.nulls < fs.rows
 
   /** Bloom probe: false ONLY when the filter proves the key absent.
@@ -503,47 +501,31 @@ object TxStats {
     */
   private def bloomMayContain(fs: FileStats, name: String, v: Any,
       dt: DataType): Boolean =
-    fs.blooms.get(name) match {
-      case None => true
-      case Some(b) => dt match {
-        case ByteType | ShortType | IntegerType | LongType | DateType |
-             TimestampType | BooleanType => v match {
-          case l: Long => b.mightContain(l.toString)
-          case _ => true
-        }
-        case StringType => v match {
-          case s: String => b.mightContain(s)
-          case _ => true
-        }
-        case _ => true
-      }
-    }
+    fs.blooms.get(name).forall(b => (dt, v) match {
+      case (ByteType | ShortType | IntegerType | LongType | DateType |
+            TimestampType | BooleanType, l: Long) => b.mightContain(l.toString)
+      case (StringType, s: String) => b.mightContain(s)
+      case _ => true
+    })
 
-  private def mayEq(fs: FileStats, cs: ColStats, v: Any, dt: DataType): Boolean =
-    hasNonNull(fs, cs) &&
-      cs.lo.forall(l => cmp(l, v, dt).forall(_ <= 0)) &&
-      cs.hi.forall(h => cmp(h, v, dt).forall(_ >= 0))
-
-  private def mayLt(fs: FileStats, cs: ColStats, v: Any, dt: DataType): Boolean =
-    hasNonNull(fs, cs) && cs.lo.forall(l => cmp(l, v, dt).forall(_ < 0))
-
-  private def mayLe(fs: FileStats, cs: ColStats, v: Any, dt: DataType): Boolean =
-    hasNonNull(fs, cs) && cs.lo.forall(l => cmp(l, v, dt).forall(_ <= 0))
-
-  private def mayGt(fs: FileStats, cs: ColStats, v: Any, dt: DataType): Boolean =
-    hasNonNull(fs, cs) && cs.hi.forall(h => cmp(h, v, dt).forall(_ > 0))
-
-  private def mayGe(fs: FileStats, cs: ColStats, v: Any, dt: DataType): Boolean =
-    hasNonNull(fs, cs) && cs.hi.forall(h => cmp(h, v, dt).forall(_ >= 0))
+  /** Every non-null value of the column equals `v`: lo == hi == v, with
+    * `lo` exact (a string `lo` of [[StringPrefixCap]] chars may be a
+    * truncated longer minimum; `hi` is only ever stored exact).
+    */
+  private def constantAt(cs: ColStats, v: Any, dt: DataType): Boolean =
+    cs.lo.exists {
+      case s: String if s.length >= StringPrefixCap => false
+      case x => cmp(x, v, dt).contains(0)
+    } && cs.hi.exists(x => cmp(x, v, dt).contains(0))
 
   /** The values of an `IN` list or an `INSET` over attribute `name`, in
-    * zone-map space: normalized as [[litOf]] normalizes a literal, nulls
-    * dropped (they make IN NULL, never TRUE), sorted in the coerced type
-    * `dt`'s order. A file's [lo, hi] then finds its values by binary
-    * search, so a large list costs O(log K) per file, not O(K).
+    * zone-map space: normalized as [[litOf]] normalizes a literal, sorted
+    * in the coerced type `dt`'s order, nulls dropped and recorded in
+    * `hasNull`. A file's [lo, hi] then finds its values by binary search,
+    * so a large list costs O(log K) per file, not O(K).
     */
   private[sources] final class ValueList(val name: String, val vs: Array[Any],
-      val dt: DataType) {
+      val dt: DataType, val hasNull: Boolean) {
     def size: Int = vs.length
 
     /** Index of the first value at or above `lo` (0 if incomparable). */
@@ -591,7 +573,8 @@ object TxStats {
       vs = values.filter(_ != null).toArray
       if vs.forall(v => cmp(v, v, dt).isDefined)
     } yield new ValueList(name,
-      vs.sorted(Ordering.fromLessThan[Any](cmp(_, _, dt).exists(_ < 0))), dt)
+      vs.sorted(Ordering.fromLessThan[Any](cmp(_, _, dt).exists(_ < 0))), dt,
+      values.contains(null))
   }
 
   /** IN over a sorted list: some value within the file's [lo, hi] that
@@ -610,135 +593,152 @@ object TxStats {
       hit
     }
 
-  /** One binary comparison, either operand order: apply `fwd` when the
-    * attribute is on the left, `rev` when on the right; a null literal
-    * makes the comparison NULL (no row passes a null filter).
+  // An outcome set: the subset of {TRUE, FALSE, NULL} a predicate can take
+  // on the rows of one file, one bit each.
+  private final val T = 1
+  private final val F = 2
+  private final val N = 4
+  private final val All = T | F | N
+
+  /** Entry `a << 3 | b`: the outcomes of `x op y` over x ∈ a, y ∈ b. */
+  private def kleene(op: (Int, Int) => Int): Array[Int] = Array.tabulate(64) { ab =>
+    var out = 0
+    for (x <- Seq(T, F, N) if ((ab >> 3) & x) != 0; y <- Seq(T, F, N) if (ab & y) != 0)
+      out |= op(x, y)
+    out
+  }
+  private val AndOf = kleene((x, y) => if (x == F || y == F) F else if (x == N || y == N) N else T)
+  private val OrOf = kleene((x, y) => if (x == T || y == T) T else if (x == N || y == N) N else F)
+
+  private def not(o: Int): Int = (o & N) | (o & T) << 1 | (o & F) >> 1
+
+  // a comparison with the attribute on the left: a < v, a > v, a <= v,
+  // a >= v, a = v; mirroring an order swaps the last bit
+  private final val Lt = 0
+  private final val Gt = 1
+  private final val Le = 2
+  private final val Ge = 3
+  private final val Eq = 4
+
+  /** A test on one column: TRUE if a non-null row may pass it, `failAs`
+    * if one may fail it, NULL if the column holds a null.
     */
-  private def binCmp(fs: FileStats, l: Expression, r: Expression)(
-      fwd: (String, ColStats, Any, DataType) => Boolean,
-      rev: (String, ColStats, Any, DataType) => Boolean): Boolean = {
-    val sides = Seq(
-      (attrOf(l), litOf(r), true),
-      (attrOf(r), litOf(l), false))
-    sides.collectFirst { case (Some(name), Some((v, dt)), isFwd) =>
-      if (v == null) false
-      else fs.cols.get(name) match {
-        case Some(cs) => if (isFwd) fwd(name, cs, v, dt) else rev(name, cs, v, dt)
-        case None => true // no stats for this column: cannot prune
-      }
-    }.getOrElse(true) // attr-vs-attr, function-of-attr, etc.: cannot prune
+  private def column(fs: FileStats, cs: ColStats, pass: => Boolean,
+      fail: => Boolean, failAs: Int = F): Int = {
+    val some = hasNonNull(fs, cs)
+    (if (some && pass) T else 0) | (if (some && fail) failAs else 0) |
+      (if (cs.nulls > 0) N else 0)
   }
 
-  /** Can a file with stats `fs` contain a row matching `e`? Sound,
-    * conservative: anything unrecognized is "maybe" (true).
+  /** `l op r` for an attribute against a literal, in either operand
+    * order (the op mirrored when the literal is on the left). Unknown
+    * bounds and incomparable values fall open; any other shape can take
+    * every outcome.
+    */
+  private def compare(op: Int, l: Expression, r: Expression, fs: FileStats): Int =
+    attrOf(l).zip(litOf(r)).map((_, op)).orElse(
+      attrOf(r).zip(litOf(l)).map((_, if (op == Eq) op else op ^ 1))) match {
+      case None => All
+      case Some(((_, (null, _)), _)) => N
+      case Some(((name, (v, dt)), op)) => fs.cols.get(name).fold(All) { cs =>
+        // does some stored bound (or an unknown one) pass `ok` against v?
+        def lo(ok: Int => Boolean) = cs.lo.forall(b => cmp(b, v, dt).forall(ok))
+        def hi(ok: Int => Boolean) = cs.hi.forall(b => cmp(b, v, dt).forall(ok))
+        op match {
+          case Lt => column(fs, cs, lo(_ < 0), hi(_ >= 0))
+          case Le => column(fs, cs, lo(_ <= 0), hi(_ > 0))
+          case Gt => column(fs, cs, hi(_ > 0), lo(_ <= 0))
+          case Ge => column(fs, cs, hi(_ >= 0), lo(_ < 0))
+          case _ => column(fs, cs,
+            lo(_ <= 0) && hi(_ >= 0) && bloomMayContain(fs, name, v, dt),
+            !constantAt(cs, v, dt))
+        }
+      }
+    }
+
+  /** `a IS NULL`, which is never NULL itself. */
+  private def isNull(a: Expression, fs: FileStats): Int =
+    attrOf(a).flatMap(fs.cols.get).fold(T | F) { cs =>
+      (if (cs.nulls > 0) T else 0) | (if (hasNonNull(fs, cs)) F else 0)
+    }
+
+  /** The outcomes `e` can take on the rows of a file with stats `fs`, a
+    * sound superset (a missing bit is a proof). [[canMatch]] and
+    * [[mustMatchAll]] both read this one walk:
+    *  - And / Or combine their sides by Kleene's tables; a left side that
+    *    is only FALSE decides an And, only TRUE an Or, and the right side
+    *    is then not walked (no Bloom probe is spent). Not swaps TRUE and
+    *    FALSE.
+    *  - `a op v` is TRUE if some non-null value may satisfy it (`=` also
+    *    asks the Bloom filter), FALSE if some may satisfy its complement
+    *    (for `=`: unless the file is constant at v), NULL if the column
+    *    holds a null; a null literal is NULL. `<=>` turns NULL into FALSE,
+    *    a boolean attribute is `a = true`, `IS NULL` is never NULL.
+    *  - IN / INSET is TRUE if some list value passes the bounds and the
+    *    Bloom filter; a non-member is FALSE, or NULL or FALSE when the list
+    *    holds a null (IN gives NULL; INSET gives FALSE on NaN); a null row
+    *    is NULL. An empty list is FALSE on every row, null rows included.
+    *  - `StartsWith` can be TRUE only where the bounds admit the prefix;
+    *    other shapes can take every outcome.
+    * The empty set means the file has no rows.
+    */
+  private def outcomes(e: Expression, fs: FileStats, lists: ValueLists): Int = e match {
+    case And(l, r) =>
+      val a = outcomes(l, fs, lists)
+      if ((a & ~F) == 0) a else AndOf(a << 3 | outcomes(r, fs, lists))
+    case Or(l, r) =>
+      val a = outcomes(l, fs, lists)
+      if ((a & ~T) == 0) a else OrOf(a << 3 | outcomes(r, fs, lists))
+    case Not(c) => not(outcomes(c, fs, lists))
+    case Literal(null, _) => N
+    case Literal(b: Boolean, BooleanType) => if (b) T else F
+    case a: AttributeReference if a.dataType == BooleanType =>
+      compare(Eq, a, Literal(true), fs)
+    case IsNull(a) => isNull(a, fs)
+    case IsNotNull(a) => not(isNull(a, fs))
+    case EqualTo(l, r) => compare(Eq, l, r, fs)
+    case EqualNullSafe(l, r) => (litOf(l), litOf(r)) match {
+      case (Some((null, _)), _) => isNull(r, fs)
+      case (_, Some((null, _))) => isNull(l, fs)
+      case _ =>
+        val o = compare(Eq, l, r, fs)
+        if ((o & N) != 0) o & ~N | F else o
+    }
+    case LessThan(l, r) => compare(Lt, l, r, fs)
+    case LessThanOrEqual(l, r) => compare(Le, l, r, fs)
+    case GreaterThan(l, r) => compare(Gt, l, r, fs)
+    case GreaterThanOrEqual(l, r) => compare(Ge, l, r, fs)
+    case In(_, _) | InSet(_, _) => lists(e).fold(All) { ks =>
+      if (ks.size == 0 && !ks.hasNull) F
+      else fs.cols.get(ks.name).fold(All) { cs =>
+        val member = cs.lo.exists { lo =>
+          val i = ks.from(lo)
+          i < ks.size && constantAt(cs, ks.vs(i), ks.dt)
+        }
+        column(fs, cs, mayIn(fs, cs, ks), !member, if (ks.hasNull) F | N else F)
+      }
+    }
+    case StartsWith(l, r) => (attrOf(l).flatMap(fs.cols.get), litOf(r)) match {
+      case (_, Some((null, _))) => N
+      // any x with prefix p has x >= p; and if lo > p with lo not itself
+      // prefixed by p, every x >= lo exceeds every p-prefixed string
+      case (Some(cs), Some((p: String, StringType))) if !(hasNonNull(fs, cs) &&
+          cs.hi.forall { case h: String => utf8Cmp(h, p) >= 0; case _ => true } &&
+          cs.lo.forall {
+            case lo: String => utf8Cmp(lo, p) <= 0 || lo.startsWith(p)
+            case _ => true
+          }) => F | N
+      case _ => All
+    }
+    case _ => All
+  }
+
+  /** Can a file with stats `fs` hold a row on which `e` is TRUE? Sound
+    * and conservative: what the walk cannot decide is "maybe" (true).
     */
   def canMatch(e: Expression, fs: FileStats,
-      lists: ValueLists = new ValueLists): Boolean = e match {
-    case And(l, r) => canMatch(l, fs, lists) && canMatch(r, fs, lists)
-    case Or(l, r) => canMatch(l, fs, lists) || canMatch(r, fs, lists)
-    case Not(child) => child match {
-      case IsNull(a) => canMatch(IsNotNull(a), fs, lists)
-      case IsNotNull(a) => canMatch(IsNull(a), fs, lists)
-      // comparison complements (a row MATCHES Not(cmp) only when cmp is
-      // FALSE, never NULL — so null rows are excluded, like any filter):
-      // NOT(a > v) ⇔ a <= v, etc.; NOT(a = v) can only be ruled out when
-      // the file is constant at v (lo == hi == v). These are what make a
-      // whole-partition or retention-range DELETE provably total on a
-      // file — the zero-read drop path.
-      case GreaterThan(l, r) => canMatch(LessThanOrEqual(l, r), fs, lists)
-      case GreaterThanOrEqual(l, r) => canMatch(LessThan(l, r), fs, lists)
-      case LessThan(l, r) => canMatch(GreaterThanOrEqual(l, r), fs, lists)
-      case LessThanOrEqual(l, r) => canMatch(GreaterThan(l, r), fs, lists)
-      case EqualTo(l, r) =>
-        // a string lo of exactly StringPrefixCap chars may be a TRUNCATED
-        // longer minimum — it cannot prove the file constant at v
-        def exactLo(x: Any): Boolean = x match {
-          case s: String => s.length < StringPrefixCap
-          case _ => true
-        }
-        def neq(n: String, cs: ColStats, v: Any, dt: DataType): Boolean =
-          hasNonNull(fs, cs) && !(
-            cs.lo.exists(x => exactLo(x) && cmp(x, v, dt).contains(0)) &&
-            cs.hi.exists(x => cmp(x, v, dt).contains(0)))
-        binCmp(fs, l, r)(neq, neq)
-      case Not(inner) => canMatch(inner, fs, lists) // ¬¬e
-      // the optimizer's form of `b = false`
-      case a: AttributeReference if a.dataType == BooleanType =>
-        canMatch(EqualTo(a, Literal(false)), fs, lists)
-      case _ => true
-    }
-    // the optimizer's form of `b = true`
-    case a: AttributeReference if a.dataType == BooleanType =>
-      canMatch(EqualTo(a, Literal(true)), fs, lists)
-    case Literal(b: Boolean, BooleanType) => b
-    case Literal(null, _) => false // WHERE NULL keeps nothing
-    case IsNull(a) => attrOf(a).flatMap(fs.cols.get) match {
-      case Some(cs) => cs.nulls > 0
-      case None => true
-    }
-    case IsNotNull(a) => attrOf(a).flatMap(fs.cols.get) match {
-      case Some(cs) => hasNonNull(fs, cs)
-      case None => true
-    }
-    case EqualTo(l, r) =>
-      def eq(n: String, cs: ColStats, v: Any, dt: DataType): Boolean =
-        mayEq(fs, cs, v, dt) && bloomMayContain(fs, n, v, dt)
-      binCmp(fs, l, r)(eq, eq)
-    case EqualNullSafe(l, r) =>
-      (litOf(l), litOf(r)) match {
-        case (Some((null, _)), _) => attrOf(r).flatMap(fs.cols.get)
-          .forall(_.nulls > 0)
-        case (_, Some((null, _))) => attrOf(l).flatMap(fs.cols.get)
-          .forall(_.nulls > 0)
-        case _ =>
-          def eq(n: String, cs: ColStats, v: Any, dt: DataType): Boolean =
-            mayEq(fs, cs, v, dt) && bloomMayContain(fs, n, v, dt)
-          binCmp(fs, l, r)(eq, eq)
-      }
-    case LessThan(l, r) => // attr < v | v < attr
-      binCmp(fs, l, r)((_, cs, v, dt) => mayLt(fs, cs, v, dt),
-        (_, cs, v, dt) => mayGt(fs, cs, v, dt))
-    case LessThanOrEqual(l, r) =>
-      binCmp(fs, l, r)((_, cs, v, dt) => mayLe(fs, cs, v, dt),
-        (_, cs, v, dt) => mayGe(fs, cs, v, dt))
-    case GreaterThan(l, r) => // attr > v | v > attr
-      binCmp(fs, l, r)((_, cs, v, dt) => mayGt(fs, cs, v, dt),
-        (_, cs, v, dt) => mayLt(fs, cs, v, dt))
-    case GreaterThanOrEqual(l, r) =>
-      binCmp(fs, l, r)((_, cs, v, dt) => mayGe(fs, cs, v, dt),
-        (_, cs, v, dt) => mayLe(fs, cs, v, dt))
-    case In(_, _) | InSet(_, _) =>
-      lists(e) match {
-        case None => true
-        case Some(ks) => fs.cols.get(ks.name) match {
-          case None => true
-          case Some(cs) => mayIn(fs, cs, ks)
-        }
-      }
-    case StartsWith(l, r) =>
-      (attrOf(l), litOf(r)) match {
-        case (Some(name), Some((p: String, StringType))) =>
-          fs.cols.get(name) match {
-            case None => true
-            case Some(cs) =>
-              // any x with prefix p satisfies x >= p; and if lo > p with
-              // lo not itself prefixed by p, every x >= lo exceeds all
-              // p-prefixed strings (comparison decided inside p)
-              hasNonNull(fs, cs) &&
-                cs.hi.forall {
-                  case h: String => utf8Cmp(h, p) >= 0
-                  case _ => true
-                } &&
-                cs.lo.forall {
-                  case lo: String => utf8Cmp(lo, p) <= 0 || lo.startsWith(p)
-                  case _ => true
-                }
-          }
-        case (_, Some((null, _))) => false
-        case _ => true
-      }
-    case _ => true // unknown shape: never prune on it
-  }
+      lists: ValueLists = new ValueLists): Boolean =
+    (outcomes(e, fs, lists) & T) != 0
 
   /** Partition `files` into (kept, skipped) under `cond` (a RESOLVED
     * predicate from [[resolve]]). Files without stats are always kept.
@@ -749,76 +749,13 @@ object TxStats {
     files.partition(f => stats.get(f).forall(canMatch(cond, _, lists)))
   }
 
-  /** Sound "EVERY row of this file satisfies `e` — TRUE, never null" test,
-    * the dual of [[canMatch]]: DELETE's zero-read drop removes a file from
-    * the log without reading it when the predicate provably holds on all
-    * its rows (a whole dropped partition's lo == hi value, a retention
-    * range entirely past the cutoff). Null semantics are the filter's: a
-    * row where `e` is NULL does NOT satisfy it, so any possible null
-    * operand fails the test. Conservative: anything unrecognized is false
-    * (the caller falls back to the copy-on-write rewrite).
-    *
-    * Truncated string bounds stay sound: a stored `lo` is a PREFIX of the
-    * true minimum, so `lo > v` / `lo >= v` still bound the true values
-    * from below; equality additionally needs `lo` exact (length under the
-    * cap), and `hi` is only ever stored exact.
+  /** Is `e` TRUE — never FALSE or NULL — on EVERY row of a file with stats
+    * `fs`? DELETE's zero-read drop removes such a file from the log
+    * without reading it (a whole dropped partition, a retention range
+    * entirely past the cutoff). What the walk cannot decide is false, and
+    * the caller falls back to the copy-on-write rewrite.
     */
   def mustMatchAll(e: Expression, fs: FileStats,
-      lists: ValueLists = new ValueLists): Boolean = {
-    def exactLo(x: Any): Boolean = x match {
-      case s: String => s.length < StringPrefixCap
-      case _ => true
-    }
-    def bin(l: Expression, r: Expression)(
-        fwd: (ColStats, Any, DataType) => Boolean,
-        rev: (ColStats, Any, DataType) => Boolean): Boolean =
-      Seq((attrOf(l), litOf(r), true), (attrOf(r), litOf(l), false))
-        .collectFirst { case (Some(name), Some((v, dt)), isFwd) =>
-          v != null && fs.cols.get(name).exists(cs =>
-            cs.nulls == 0 &&
-              (if (isFwd) fwd(cs, v, dt) else rev(cs, v, dt)))
-        }.getOrElse(false)
-    e match {
-      case And(l, r) => mustMatchAll(l, fs, lists) && mustMatchAll(r, fs, lists)
-      case Or(l, r) => mustMatchAll(l, fs, lists) || mustMatchAll(r, fs, lists)
-      case Literal(b: Boolean, BooleanType) => b
-      case IsNull(a) =>
-        attrOf(a).flatMap(fs.cols.get).exists(_.nulls == fs.rows)
-      case IsNotNull(a) =>
-        attrOf(a).flatMap(fs.cols.get).exists(_.nulls == 0)
-      case EqualTo(l, r) =>
-        def allEq(cs: ColStats, v: Any, dt: DataType): Boolean =
-          cs.lo.exists(x => exactLo(x) && cmp(x, v, dt).contains(0)) &&
-            cs.hi.exists(x => cmp(x, v, dt).contains(0))
-        bin(l, r)(allEq, allEq)
-      case LessThan(l, r) => // all(a < v) | all(v < a)
-        bin(l, r)(
-          (cs, v, dt) => cs.hi.exists(x => cmp(x, v, dt).exists(_ < 0)),
-          (cs, v, dt) => cs.lo.exists(x => cmp(x, v, dt).exists(_ > 0)))
-      case LessThanOrEqual(l, r) =>
-        bin(l, r)(
-          (cs, v, dt) => cs.hi.exists(x => cmp(x, v, dt).exists(_ <= 0)),
-          (cs, v, dt) => cs.lo.exists(x => cmp(x, v, dt).exists(_ >= 0)))
-      case GreaterThan(l, r) =>
-        bin(l, r)(
-          (cs, v, dt) => cs.lo.exists(x => cmp(x, v, dt).exists(_ > 0)),
-          (cs, v, dt) => cs.hi.exists(x => cmp(x, v, dt).exists(_ < 0)))
-      case GreaterThanOrEqual(l, r) =>
-        bin(l, r)(
-          (cs, v, dt) => cs.lo.exists(x => cmp(x, v, dt).exists(_ >= 0)),
-          (cs, v, dt) => cs.hi.exists(x => cmp(x, v, dt).exists(_ <= 0)))
-      case In(_, _) | InSet(_, _) =>
-        // all rows equal ONE constant that the list contains
-        lists(e).exists { ks =>
-          fs.cols.get(ks.name).exists { cs =>
-            cs.nulls == 0 && cs.lo.exists { lo =>
-              val i = ks.from(lo)
-              exactLo(lo) && i < ks.size && cmp(lo, ks.vs(i), ks.dt).contains(0) &&
-                cs.hi.exists(x => cmp(x, ks.vs(i), ks.dt).contains(0))
-            }
-          }
-        }
-      case _ => false // unknown shape: never drop on it
-    }
-  }
+      lists: ValueLists = new ValueLists): Boolean =
+    (outcomes(e, fs, lists) & ~T) == 0
 }

@@ -17,9 +17,13 @@ import org.apache.spark.sql.functions._
   *    same key do not commute), each as one atomic target commit.
   *  - **Idempotent / resumable.** Each applied source version rides
   *    the target commit's op as `:v<N>`; a re-run (crash recovery,
-  *    cron overlap) finds the tag and skips — exactly-once APPLICATION
-  *    with no state outside the two logs. The high-water mark IS the
-  *    target log.
+  *    cron overlap) resumes after the newest tag — exactly-once
+  *    APPLICATION with no state outside the two logs. The high-water
+  *    mark IS the target log, read backwards from its newest entry to
+  *    the first tag, so a catch-up never replays the whole log. Each
+  *    apply is pinned to the target version before it: a racing
+  *    replicator raises `ConcurrentModificationException`, as every
+  *    other semantic writer does, instead of applying a version twice.
   *  - **File-pruned apply.** Each apply is MERGE's keyed upsert: the
   *    changed keys, collected once, pick candidate target files from
   *    their zone maps and Bloom filters, and only the files a scan finds
@@ -34,21 +38,22 @@ import org.apache.spark.sql.functions._
 object TxSync {
 
   /** Apply one version's change-set (rows + `_change_type`) to the
-    * target as a single keyed upsert tagged `sync:v<N>`: every changed key
-    * leaves the target, the inserts go in.
+    * target snapshot `at` as a single keyed upsert tagged `sync:v<N>`:
+    * every changed key leaves the target, the inserts go in. Returns the
+    * target's new version.
     */
-  private def applyChanges(spark: SparkSession, dstDir: String,
+  private def applyChanges(spark: SparkSession, at: TxTable.Snapshot,
       changes: DataFrame, keys: Seq[String], tag: String): Long = {
     val cols = changes.columns.filterNot(c =>
       c == "_change_type" || c == "_commit_version")
     val inserts = changes.where(col("_change_type") === "insert")
       .select(cols.map(col).toIndexedSeq: _*)
-    TxTable.upsert(spark, TxTable.snapshot(dstDir), keys, changes, inserts,
-      s"sync:$tag")
+    TxTable.upsert(spark, at, keys, changes, inserts, s"sync:$tag")
   }
 
   /** Bring `dstDir` up to the source's current version: find the last
-    * applied `:v<N>` tag in the target's log, apply each newer source
+    * applied `:v<N>` tag in the target's log (applies go in version
+    * order, so the newest tag is the highest), apply each newer source
     * commit in order. Returns the number of source commits applied
     * (0 = already in sync).
     */
@@ -56,19 +61,14 @@ object TxSync {
       keys: Seq[String]): Long = {
     val top = TxTable.currentVersion(srcDir)
     if (top < 0) return 0L
-    val applied = TxTable.commitOps(dstDir).flatMap { op =>
-      ":v(\\d+)$".r.findFirstMatchIn(op).map(_.group(1).toLong)
+    val at = TxTable.currentVersion(dstDir)
+    val Tagged = ".*:v(\\d+)".r
+    val from = TxTable.opsNewestFirst(dstDir, at)
+      .collectFirst { case Tagged(n) => n.toLong }.getOrElse(-1L)
+    ((from + 1) to top).foldLeft(at) { (prev, v) =>
+      applyChanges(spark, TxTable.pinned(dstDir, Some(prev), s"sync:v$v"),
+        TxTable.readChanges(spark, srcDir, v - 1, Some(v)), keys, s"v$v")
     }
-    val from = if (applied.isEmpty) -1L else applied.max
-    var n = 0L
-    ((from + 1) to top).foreach { v =>
-      val tag = s"v$v"
-      if (!TxTable.hasCommitTag(dstDir, tag)) {
-        applyChanges(spark, dstDir,
-          TxTable.readChanges(spark, srcDir, v - 1, Some(v)), keys, tag)
-        n += 1
-      }
-    }
-    n
+    math.max(top - from, 0L)
   }
 }

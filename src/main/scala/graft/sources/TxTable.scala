@@ -71,9 +71,11 @@ import scala.jdk.CollectionConverters._
   *    are recovered TYPED from the path — synthesized into each file's
   *    zone map with lo == hi, so partition pruning is ordinary stats
   *    pruning and the whole DML/CDF surface works partitioned. A DELETE
-  *    that provably covers a file ([[TxStats.mustMatchAll]]) drops it
-  *    from the log WITHOUT reading it — partition drops and retention
-  *    sweeps are metadata-only.
+  *    whose predicate can only be TRUE on a file's rows (the same
+  *    three-valued zone-map walk that prunes scans, read through
+  *    [[TxStats.mustMatchAll]]) drops the file from the log WITHOUT
+  *    reading it — partition drops, their negations and retention sweeps
+  *    are metadata-only.
   *
   * Scale shape: the log is O(commits) driver-side JSON (the list-replay
   * is trivial next to any data pass; a checkpointed log is the known
@@ -269,15 +271,18 @@ object TxTable {
     }
   }
 
-  /** A raw partition value normalized into zone-map space (the same
-    * Long/String forms [[TxStats]] stores), so partition pruning IS
-    * zone-map pruning with lo == hi.
+  /** A raw partition value in Catalyst's internal form (UTF8String, int
+    * days, the integral or boolean itself): what the scan re-attaches, and
+    * what [[zoneMaps]] normalizes into each file's lo == hi zone map.
     */
-  private[sources] def partNorm(raw: String, dt: DataType): Any = dt match {
-    case ByteType | ShortType | IntegerType | LongType => raw.toLong
-    case BooleanType => if (raw.toBoolean) 1L else 0L
-    case DateType => java.time.LocalDate.parse(raw).toEpochDay
-    case StringType => raw
+  private[sources] def partValue(raw: String, dt: DataType): Any = dt match {
+    case StringType => org.apache.spark.unsafe.types.UTF8String.fromString(raw)
+    case ByteType => raw.toByte
+    case ShortType => raw.toShort
+    case IntegerType => raw.toInt
+    case LongType => raw.toLong
+    case BooleanType => raw.toBoolean
+    case DateType => java.time.LocalDate.parse(raw).toEpochDay.toInt
     case other => sys.error(s"unsupported partition type ${other.simpleString}")
   }
 
@@ -349,7 +354,7 @@ object TxTable {
           fd.name -> (raw match {
             case None => // hive null partition: all rows null here
               TxStats.ColStats(tag, base.rows, None, None)
-            case Some(r) => partNorm(r, fd.dataType) match {
+            case Some(r) => TxStats.normLit(partValue(r, fd.dataType), fd.dataType) match {
               case str: String =>
                 // the same truncation soundness rule stored stats use
                 val (lo, hi) = TxStats.strBounds(str, str)
@@ -506,7 +511,7 @@ object TxTable {
     * `expected` is the optimistic-concurrency guard: raise unless the
     * table still sits at that version.
     */
-  private def pinned(dir: String, expected: Option[Long], op: String): Snapshot = {
+  private[sources] def pinned(dir: String, expected: Option[Long], op: String): Snapshot = {
     val s = snapshot(dir)
     expected.filter(_ != s.version).foreach { e =>
       throw new java.util.ConcurrentModificationException(
@@ -843,7 +848,11 @@ object TxTable {
     * Scale shape: each version's diff reads ONLY that commit's
     * added/removed files — O(delta), never O(table); the signed count is
     * one aggregate shuffle over the touched slice. One-sided commits
-    * (pure appends, pure drops) skip it and only scan.
+    * (pure appends, pure drops) skip it and only scan. Memory bound: a
+    * distinct row with net count n is rebuilt from one `sequence(1, |n|)`
+    * array, 8 bytes per copy, held while the row explodes. Spark's own
+    * `EXCEPT ALL` rewrite is no lighter: its `ReplicateRows` builds a
+    * strict collection of the copies of each row (`NumericRange.map`).
     */
   def readChanges(spark: SparkSession, dir: String, fromVersion: Long,
       toVersion: Option[Long] = None): DataFrame = {
@@ -912,13 +921,13 @@ object TxTable {
   def hasCommitTag(dir: String, opTag: String): Boolean =
     readLog(dir).exists(_.op.endsWith(":" + opTag))
 
-  /** Commit ops in version order — the driver-side view [[TxSync]]'s
-    * high-water-mark scan reads (the log IS driver metadata; wrapping it
-    * in a DataFrame just to `collect` it back was one Spark job per
-    * replicate call for nothing).
+  /** Commit ops from version `top` down to 0, each entry read only when
+    * the iterator reaches it: [[TxSync]]'s high-water-mark scan stops at
+    * the newest tagged entry and never reads the log below it.
     */
-  private[sources] def commitOps(dir: String): Seq[String] =
-    readLog(dir).map(_.op)
+  private[sources] def opsNewestFirst(dir: String, top: Long): Iterator[String] =
+    Iterator.iterate(top)(_ - 1).takeWhile(_ >= 0)
+      .map(v => parse(Files.readString(entryPath(dir, v))).op)
 
   /** Commit history as a DataFrame: (version, op, n_adds, n_removes). */
   def history(spark: SparkSession, dir: String): DataFrame = {

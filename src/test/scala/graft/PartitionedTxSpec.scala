@@ -176,6 +176,27 @@ class PartitionedTxSpec extends SparkSpec {
     assert(TxTable.read(spark, dir).count() == 0)
   }
 
+  test("a negated partition DELETE is zero-read and leaves the kept partitions alone") {
+    val dir = freshDir("dml_del_not")
+    val s = spark
+    import s.implicits._
+    val rows = (0L until 40L).map(i => (i, (i % 4).toInt))
+    TxTable.append(rows.toDF("k", "p").repartition(2), dir, partitionBy = Seq("p"))
+    def kept(f: String) = f.startsWith("p=1/") || f.startsWith("p=2/")
+    val (keep, others) = TxTable.activeFiles(dir).partition(kept)
+    assert(keep.nonEmpty && others.nonEmpty)
+    // any read of these would now throw — the drop must be metadata-only
+    others.foreach { f =>
+      java.nio.file.Files.write(java.nio.file.Paths.get(dir, f),
+        "not a parquet file".getBytes)
+    }
+    TxTable.delete(spark, dir, !(col("p") === 1 || col("p") === 2))
+    // the kept partitions' files are not even rewritten
+    assert(TxTable.activeFiles(dir).sorted == keep.sorted)
+    assert(TxTable.read(spark, dir).as[(Long, Int)].collect().sorted.toSeq ==
+      rows.filter(r => r._2 == 1 || r._2 == 2))
+  }
+
   test("UPDATE on a partitioned table, including a partition-moving SET") {
     val dir = freshDir("dml_upd")
     TxTable.append(sample(), dir, partitionBy = Seq("region"))

@@ -536,4 +536,208 @@ class TxStatsSpec extends SparkSpec {
     assert(TxTable.readWhere(spark, dir,
       col("t") >= lit(ts("2021-01-01 00:00:00"))).count() == 2)
   }
+
+  // ---- the three-valued walk against Catalyst's own evaluation ----
+
+  import org.apache.spark.sql.catalyst.InternalRow
+  import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference,
+    AttributeSeq, BindReferences, Cast, EqualNullSafe, EqualTo, EvalMode, Expression,
+    GreaterThan, GreaterThanOrEqual, In, InSet, IsNotNull, IsNull, LessThan,
+    LessThanOrEqual, Literal, Not, Or, StartsWith}
+  import org.apache.spark.unsafe.types.UTF8String
+
+  private val kA = AttributeReference("l", LongType)()
+  private val dA = AttributeReference("d", DoubleType)()
+  private val sA = AttributeReference("s", StringType)()
+  private val bA = AttributeReference("b", BooleanType)()
+  private val tA = AttributeReference("t", DateType)()
+  private val attrs = Seq(kA, dA, sA, bA, tA)
+
+  /** Catalyst's answer for `e` on one row of (l, d, s, b, t). */
+  private def evalOn(e: Expression, row: InternalRow): Any =
+    BindReferences.bindReference(e, new AttributeSeq(attrs)).eval(row)
+
+  private def row(l: Any = null, d: Any = null, s: Any = null, b: Any = null,
+      t: Any = null): InternalRow =
+    InternalRow(l, d, Option(s).map(x => UTF8String.fromString(x.toString)).orNull, b, t)
+
+  /** A file's zone map built from its rows by the in-write rules: Spark's
+    * min/max order (UTF-8 bytes; NaN greatest, -0.0 == 0.0), -0.0 folded,
+    * string bounds truncated (lo) or dropped (hi) past the cap.
+    */
+  private def statsOf(rows: Seq[InternalRow], bloom: Boolean,
+      unindexed: Set[String]): TxStats.FileStats = {
+    def cmpD(x: Double, y: Double) = if (x == y) 0 else java.lang.Double.compare(x, y)
+    def fold(d: Double) = if (d == 0.0) 0.0 else d
+    def strBounds(lo: String, hi: String): (Option[String], Option[String]) = {
+      val cap = TxStats.StringPrefixCap
+      val cut = if (lo.length > cap && Character.isHighSurrogate(lo.charAt(cap - 1))) cap - 1
+        else cap
+      (Some(lo.take(cut)), Some(hi).filter(_.length <= cap))
+    }
+    val cols = attrs.zipWithIndex.filterNot(a => unindexed(a._1.name)).map { case (a, i) =>
+      val vs = rows.filterNot(_.isNullAt(i)).map(_.get(i, a.dataType))
+      val nulls = rows.size - vs.size.toLong
+      val (tag, lo, hi): (String, Option[Any], Option[Any]) =
+        if (vs.isEmpty) (if (a.dataType == DoubleType) "d" else if (a.dataType == StringType) "s"
+          else "l", None, None)
+        else a.dataType match {
+          case LongType => ("l", Some(vs.map(_.asInstanceOf[Long]).min),
+            Some(vs.map(_.asInstanceOf[Long]).max))
+          case DateType => ("l", Some(vs.map(_.asInstanceOf[Int].toLong).min),
+            Some(vs.map(_.asInstanceOf[Int].toLong).max))
+          case BooleanType =>
+            val ls = vs.map(v => if (v.asInstanceOf[Boolean]) 1L else 0L)
+            ("l", Some(ls.min), Some(ls.max))
+          case DoubleType =>
+            val ds = vs.map(_.asInstanceOf[Double])
+            ("d", Some(fold(ds.reduce((x, y) => if (cmpD(x, y) <= 0) x else y))),
+              Some(fold(ds.reduce((x, y) => if (cmpD(x, y) >= 0) x else y))))
+          case _ =>
+            val us = vs.map(_.asInstanceOf[UTF8String])
+            val (lo, hi) = strBounds(
+              us.reduce((x, y) => if (x.compareTo(y) <= 0) x else y).toString,
+              us.reduce((x, y) => if (x.compareTo(y) >= 0) x else y).toString)
+            ("s", lo, hi)
+        }
+      a.name -> TxStats.ColStats(tag, nulls, lo, hi)
+    }.toMap
+    // a deliberately small filter, so that it both rules keys out and
+    // lets absent keys through
+    val blooms = if (!bloom) Map.empty[String, graft.functions.FileBloom.Bloom] else {
+      val words = new Array[Long](2)
+      rows.filterNot(_.isNullAt(0))
+        .foreach(r => graft.functions.FileBloom.set(words, r.getLong(0).toString, 3))
+      Map("l" -> graft.functions.FileBloom.Bloom(3, words))
+    }
+    TxStats.FileStats(rows.size, cols, blooms)
+  }
+
+  test("the three-valued walk is sound on 20k random (predicate, file) cases") {
+    val rnd = new scala.util.Random(20261020L)
+    def pick[A](xs: Seq[A]): A = xs(rnd.nextInt(xs.size))
+    val longs = Seq(-2L, -1L, 0L, 1L, 2L, 3L, 5L, 7L, 10L)
+    val doubles = Seq(-1.5, -0.0, 0.0, 1.0, 2.5, Double.NaN, Double.PositiveInfinity)
+    val strings = Seq("", "a", "ab", "b", "ba", "z", "é", "a" * 64, "a" * 70,
+      "a" * 69 + "b", "b" * 70)
+    val dates = Seq(0, 1, 2, 10)
+    val pools: Map[String, Seq[Any]] = Map("l" -> longs, "d" -> doubles,
+      "s" -> strings.map(UTF8String.fromString), "b" -> Seq(true, false), "t" -> dates)
+    def value(a: AttributeReference, nullP: Double): Any =
+      if (rnd.nextDouble() < nullP) null else pick(pools(a.name))
+    def litFor(a: AttributeReference): Literal =
+      Literal.create(if (rnd.nextInt(20) == 0) null else pick(pools(a.name)), a.dataType)
+    def leaf(): Expression = {
+      val a = pick(attrs)
+      rnd.nextInt(12) match {
+        case 0 | 1 | 2 | 3 =>
+          val (x, y) = if (rnd.nextBoolean()) (a, litFor(a)) else (litFor(a), a)
+          pick(Seq[(Expression, Expression) => Expression](EqualTo(_, _),
+            LessThan(_, _), LessThanOrEqual(_, _), GreaterThan(_, _),
+            GreaterThanOrEqual(_, _), EqualNullSafe(_, _)))(x, y)
+        case 4 => In(a, Seq.fill(rnd.nextInt(4))(litFor(a)))
+        case 5 => InSet(a, Seq.fill(rnd.nextInt(4))(litFor(a).value).toSet)
+        case 6 => IsNull(a)
+        case 7 => IsNotNull(a)
+        case 8 => bA
+        case 9 => StartsWith(sA, Literal.create(
+          if (rnd.nextInt(10) == 0) null else pick(pools("s") ++
+            Seq("a", "ab", "a" * 65).map(UTF8String.fromString)), StringType))
+        case 10 => Literal.create(pick(Seq(true, false, null)), BooleanType)
+        case _ => EqualTo(a, litFor(a))
+      }
+    }
+    def pred(depth: Int): Expression =
+      if (depth == 0) leaf()
+      else rnd.nextInt(5) match {
+        case 0 => Not(pred(depth - 1))
+        case 1 => And(pred(depth - 1), pred(depth - 1))
+        case 2 => Or(pred(depth - 1), pred(depth - 1))
+        case _ => leaf()
+      }
+    var (rejected, dropped) = (0, 0)
+    (1 to 20000).foreach { n =>
+      val nullP = pick(Seq(0.0, 0.2, 1.0))
+      val rows = Seq.fill(1 + rnd.nextInt(6))(
+        InternalRow.fromSeq(attrs.map(value(_, if (rnd.nextBoolean()) 0.0 else nullP))))
+      val fs = statsOf(rows, bloom = rnd.nextBoolean(),
+        unindexed = if (rnd.nextInt(10) == 0) Set(pick(attrs).name) else Set.empty)
+      val e = pred(3)
+      val got = rows.map(evalOn(e, _))
+      if (!TxStats.canMatch(e, fs)) {
+        rejected += 1
+        assert(!got.contains(true), s"case $n: canMatch rejected $e on $fs but rows gave $got")
+      }
+      if (TxStats.mustMatchAll(e, fs)) {
+        dropped += 1
+        assert(got.forall(_ == true),
+          s"case $n: mustMatchAll accepted $e on $fs but rows gave $got")
+      }
+    }
+    info(s"canMatch rejected $rejected and mustMatchAll accepted $dropped of 20000 cases")
+    // the property is not vacuous: both verdicts are reached often
+    assert(rejected > 1000 && dropped > 1000, s"rejected $rejected, dropped $dropped")
+  }
+
+  test("Spark's edge cases: empty lists, a null member on NaN, NOT IN with a null") {
+    val allNull = TxStats.FileStats(2, Map("l" -> TxStats.ColStats("l", 2, None, None)))
+    // `x IN ()` and `x INSET ()` are FALSE, not NULL, on a null row: the
+    // negation is TRUE there
+    Seq(In(kA, Nil), InSet(kA, Set.empty)).foreach { e =>
+      assert(evalOn(e, row()) == false, e)
+      assert(TxStats.canMatch(Not(e), allNull), e)
+      assert(!TxStats.canMatch(e, allNull), e)
+    }
+    // with a null member, INSET is FALSE on NaN while IN is NULL
+    val nan = TxStats.FileStats(1, Map("d" -> TxStats.ColStats("d", 0, Some(Double.NaN),
+      Some(Double.NaN))))
+    val inSet = InSet(dA, Set(1.0, null))
+    val in = In(dA, Seq(Literal(1.0), Literal.create(null, DoubleType)))
+    assert(evalOn(inSet, row(d = Double.NaN)) == false)
+    assert(evalOn(in, row(d = Double.NaN)) == null)
+    assert(TxStats.canMatch(Not(inSet), nan), "NOT INSET is TRUE on the NaN row")
+    assert(!TxStats.mustMatchAll(Not(in), nan), "NOT IN is NULL on the NaN row")
+    // NOT (k IN (5, NULL)) is never TRUE: a non-member is NULL, not FALSE
+    val notIn = Not(In(kA, Seq(Literal(5L), Literal.create(null, LongType))))
+    val low = TxStats.FileStats(3, Map("l" -> TxStats.ColStats("l", 0, Some(0L), Some(3L))))
+    assert((0L to 3L).forall(k => evalOn(notIn, row(l = k)) == null))
+    assert(!TxStats.mustMatchAll(notIn, low), "a delete must not drop rows that are NULL")
+  }
+
+  test("NOT is exact over AND, IN and IS NULL") {
+    val kv = TxStats.FileStats(4, Map(
+      "l" -> TxStats.ColStats("l", 0, Some(0L), Some(3L)),
+      "d" -> TxStats.ColStats("d", 0, Some(1.0), Some(2.0))))
+    // every row has k < 5 and v > 0, so the negation holds on none
+    assert(!TxStats.canMatch(Not(And(LessThan(kA, Literal(5L)),
+      GreaterThan(dA, Literal(0.0)))), kv))
+    val sevens = TxStats.FileStats(2, Map("l" -> TxStats.ColStats("l", 0, Some(7L), Some(7L))))
+    assert(!TxStats.canMatch(Not(In(kA, Seq(Literal(7L)))), sevens))
+    assert(!TxStats.canMatch(Not(In(kA, Seq(Literal(7L), Literal.create(null, LongType)))),
+      sevens))
+    assert(TxStats.mustMatchAll(Not(IsNull(kA)), kv))
+    val allNull = TxStats.FileStats(2, Map("l" -> TxStats.ColStats("l", 2, None, None)))
+    assert(TxStats.mustMatchAll(Not(In(kA, Nil)), allNull))
+    // and the dual verdicts of the same shapes stay open where rows differ
+    assert(TxStats.canMatch(Not(In(kA, Seq(Literal(2L)))), kv))
+    assert(!TxStats.mustMatchAll(Not(In(kA, Seq(Literal(2L)))), kv))
+  }
+
+  test("casts: a narrowing one is not unwrapped, a long reaches float in one rounding") {
+    val big = 1L << 32
+    val wide = TxStats.FileStats(11,
+      Map("l" -> TxStats.ColStats("l", 0, Some(big), Some(big + 10))))
+    val narrowed = EqualTo(Cast(kA, IntegerType, evalMode = EvalMode.LEGACY), Literal(5))
+    assert(evalOn(narrowed, row(l = big + 5)) == true)
+    assert(TxStats.canMatch(narrowed, wide))
+    // a widening cast still prunes
+    assert(!TxStats.canMatch(EqualTo(Cast(kA, DoubleType), Literal(5.0)), wide))
+    // a long past 2^53 casts to float in one rounding; through double it
+    // would round twice, to a neighbouring float
+    val l = (1L << 60) + (1L << 36) + 1
+    val atL = TxStats.FileStats(1, Map("l" -> TxStats.ColStats("l", 0, Some(l), Some(l))))
+    val asFloat = EqualTo(Cast(kA, FloatType), Literal(l.toFloat))
+    assert(l.toFloat != l.toDouble.toFloat && evalOn(asFloat, row(l = l)) == true)
+    assert(TxStats.canMatch(asFloat, atL) && TxStats.mustMatchAll(asFloat, atL))
+  }
 }

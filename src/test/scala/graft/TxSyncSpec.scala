@@ -85,4 +85,25 @@ class TxSyncSpec extends SparkSpec {
     assertSame(src, dst)
     assert(TxTable.read(spark, dst).collect().map(_.getLong(0)).toSet == Set(2L))
   }
+
+  test("a catch-up reads the replica's log back to its newest tag only") {
+    val src = freshDir("hwm_src")
+    val dst = freshDir("hwm_dst")
+    val s = spark
+    import s.implicits._
+    def df(rows: (Long, String)*) = rows.toDF("k", "v").repartition(1)
+    (0L until 12L).foreach(i => TxTable.append(df(i -> s"v$i"), src))
+    assert(TxSync.replicate(spark, src, dst, Seq("k")) == 12L)
+    val log = java.nio.file.Paths.get(dst, "_txlog")
+    assert(java.nio.file.Files.exists(log.resolve(f"${10}%020d.checkpoint.json")))
+    // the replica's history below its checkpoint becomes unreadable: the
+    // high-water mark and the applies must not need it
+    (0 until 10).foreach(v =>
+      java.nio.file.Files.writeString(log.resolve(f"$v%020d.json"), "unreadable"))
+    TxTable.append(df(12L -> "v12"), src)
+    TxTable.update(spark, src, col("k") === 3L, Map("v" -> lit("X")))
+    assert(TxSync.replicate(spark, src, dst, Seq("k")) == 2L)
+    assertSame(src, dst)
+    assert(TxSync.replicate(spark, src, dst, Seq("k")) == 0L)
+  }
 }
