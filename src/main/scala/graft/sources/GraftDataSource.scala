@@ -35,9 +35,10 @@ import org.apache.spark.sql.types.StructType
   *    `option("bloomFor", "c1,c2")`), Overwrite → [[TxTable.overwrite]],
   *    ErrorIfExists / Ignore with their standard semantics; a
   *    `.partitionBy(cols)` writes (and thereafter inherits) the hive
-  *    `col=value/` layout, which the read path prunes statically. All
-  *    writes are the table's own atomic commits — a failed job publishes
-  *    nothing.
+  *    `col=value/` layout, which the read path prunes statically;
+  *    ErrorIfExists / Ignore commit pinned at version -1 (a racing creator
+  *    that loses raises / no-ops). All writes are the table's own atomic
+  *    commits — a failed job publishes nothing.
   *  - **Streaming source** — `spark.readStream.format("graft")`: offsets
   *    ARE table versions, so replay is deterministic (a micro-batch is
   *    `readChanges(start, end]`, derived from the immutable log). Default
@@ -46,10 +47,10 @@ import org.apache.spark.sql.types.StructType
   *    `maxVersionsPerBatch` bounds each micro-batch for backfills
   *    (admission control, maxFilesPerTrigger's shape).
   *  - **Streaming sink** — `ds.writeStream.format("graft")`: exactly-once
-  *    appends, the batchId riding the commit's op tag
-  *    (`append:stream:<appId>:batch=<n>`) so a replayed micro-batch finds
-  *    its tag in the log and no-ops — the commit IS the marker, the same
-  *    contract as [[graft.streaming.BatchSink.upsertBatchTx]].
+  *    appends, each a [[TxTable.append]] with `txn = (stream:<appId>:batch=,
+  *    batchId)`; a micro-batch at or below the app's high-water mark is a
+  *    no-op — the commit IS the marker, the same contract as
+  *    [[graft.streaming.BatchSink.upsertBatchTx]].
   *
   * Scale shape: all planning decisions are O(files) driver-side metadata
   * (log replay is checkpoint-bounded); all data movement is distributed
@@ -100,19 +101,16 @@ final class GraftDataSource extends RelationProvider
       .orElse(parameters.get("partitionBy").map(
         _.split(",").map(_.trim).filter(_.nonEmpty).toSeq))
       .getOrElse(Nil)
-    val exists = TxTable.currentVersion(dir) >= 0
     mode match {
       case SaveMode.Append =>
         TxTable.append(data, dir, bloomFor, partitionBy = partitionBy)
       case SaveMode.Overwrite =>
         TxTable.overwrite(data, dir, partitionBy = partitionBy)
-      case SaveMode.ErrorIfExists =>
-        if (exists) throw new IllegalStateException(
-          s"TxTable $dir already exists (mode=ErrorIfExists)")
-        else TxTable.append(data, dir, bloomFor, partitionBy = partitionBy)
-      case SaveMode.Ignore =>
-        if (!exists) TxTable.append(data, dir, bloomFor,
-          partitionBy = partitionBy)
+      case SaveMode.ErrorIfExists | SaveMode.Ignore =>
+        try TxTable.create(data, dir, bloomFor, partitionBy)
+        catch { case e: java.util.ConcurrentModificationException =>
+          if (mode == SaveMode.ErrorIfExists) throw new IllegalStateException(
+            s"TxTable $dir already exists (mode=ErrorIfExists)", e) }
     }
     createRelation(sqlContext, parameters)
   }
@@ -281,23 +279,21 @@ private[graft] final class GraftStreamSource(spark: SparkSession,
   override def toString: String = s"GraftStreamSource[$dir, cdf=$cdf]"
 }
 
-/** V1 streaming sink: exactly-once atomic appends. The micro-batch's id is
-  * carried in the commit op (`append:stream:<appId>:batch=<n>`); a replay
-  * after crash-recovery finds the tag via [[TxTable.hasCommitTag]] and
-  * no-ops, so duplicates are impossible however many times the engine
-  * re-runs the batch.
+/** V1 streaming sink: exactly-once atomic appends. Each micro-batch is
+  * the transaction `(stream:<appId>:batch=, batchId)` of [[TxTable.append]]:
+  * a replay after crash-recovery, even one racing its own original, is at
+  * or below the app's high-water mark and no-ops, so duplicates are
+  * impossible however many times the engine re-runs the batch.
   */
 private[graft] final class GraftStreamSink(dir: String,
     appId: String, partitionBy: Seq[String] = Nil) extends Sink {
 
   override def addBatch(batchId: Long, data: DataFrame): Unit = {
-    val tag = s"stream:$appId:batch=$batchId"
-    if (TxTable.hasCommitTag(dir, tag)) return // replayed batch
     // the frame a V1 sink receives carries an incremental plan batch
     // writers refuse — re-root it over the computed rows (foreachBatch's
     // own wrapping)
-    val batch = org.apache.spark.sql.GraftSqlBridge.asBatchFrame(data)
-    TxTable.append(batch, dir, opTag = Some(tag), partitionBy = partitionBy)
+    TxTable.append(org.apache.spark.sql.GraftSqlBridge.asBatchFrame(data), dir,
+      txn = Some(s"stream:$appId:batch=" -> batchId), partitionBy = partitionBy)
     ()
   }
 

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Incremental table replication over the change data feed — the CDF
@@ -15,15 +15,15 @@ import org.apache.spark.sql.functions._
   *  - **Version-ordered.** Source commits apply ONE AT A TIME (a
   *    net-diff feed is ordered — an insert and a later delete of the
   *    same key do not commute), each as one atomic target commit.
-  *  - **Idempotent / resumable.** Each applied source version rides
-  *    the target commit's op as `:v<N>`; a re-run (crash recovery,
-  *    cron overlap) resumes after the newest tag — exactly-once
-  *    APPLICATION with no state outside the two logs. The high-water
-  *    mark IS the target log, read backwards from its newest entry to
-  *    the first tag, so a catch-up never replays the whole log. Each
-  *    apply is pinned to the target version before it: a racing
-  *    replicator raises `ConcurrentModificationException`, as every
-  *    other semantic writer does, instead of applying a version twice.
+  *  - **Idempotent / resumable.** Applying source version N is the
+  *    target transaction `(v, N)`, recorded as `sync:v<N>`; a re-run
+  *    (crash recovery, cron overlap) resumes after the app's high-water
+  *    mark — exactly-once APPLICATION with no state outside the two logs.
+  *    The mark is read backwards from the target's newest entry to its
+  *    newest sync, so a catch-up never replays the whole log. Each apply
+  *    is pinned to the target version before it: a racing replicator
+  *    no-ops on a version the other applied, and raises
+  *    `ConcurrentModificationException` otherwise, never applying twice.
   *  - **File-pruned apply.** Each apply is MERGE's keyed upsert: the
   *    changed keys, collected once, pick candidate target files from
   *    their zone maps and Bloom filters, and only the files a scan finds
@@ -37,37 +37,24 @@ import org.apache.spark.sql.functions._
   */
 object TxSync {
 
-  /** Apply one version's change-set (rows + `_change_type`) to the
-    * target snapshot `at` as a single keyed upsert tagged `sync:v<N>`:
-    * every changed key leaves the target, the inserts go in. Returns the
-    * target's new version.
-    */
-  private def applyChanges(spark: SparkSession, at: TxTable.Snapshot,
-      changes: DataFrame, keys: Seq[String], tag: String): Long = {
-    val cols = changes.columns.filterNot(c =>
-      c == "_change_type" || c == "_commit_version")
-    val inserts = changes.where(col("_change_type") === "insert")
-      .select(cols.map(col).toIndexedSeq: _*)
-    TxTable.upsert(spark, at, keys, changes, inserts, s"sync:$tag")
-  }
-
-  /** Bring `dstDir` up to the source's current version: find the last
-    * applied `:v<N>` tag in the target's log (applies go in version
-    * order, so the newest tag is the highest), apply each newer source
-    * commit in order. Returns the number of source commits applied
-    * (0 = already in sync).
+  /** Bring `dstDir` up to the source's current version: apply each source
+    * commit above the target's high-water mark for app `v`, in version
+    * order, each as one keyed upsert of its change-set (rows +
+    * `_change_type`): every changed key leaves the target, the inserts go
+    * in. Returns the number of source commits applied (0 = in sync).
     */
   def replicate(spark: SparkSession, srcDir: String, dstDir: String,
       keys: Seq[String]): Long = {
     val top = TxTable.currentVersion(srcDir)
     if (top < 0) return 0L
     val at = TxTable.currentVersion(dstDir)
-    val Tagged = ".*:v(\\d+)".r
-    val from = TxTable.opsNewestFirst(dstDir, at)
-      .collectFirst { case Tagged(n) => n.toLong }.getOrElse(-1L)
+    val from = TxTable.lastTxn(dstDir, "v", at).fold(-1L)(_._2)
     ((from + 1) to top).foldLeft(at) { (prev, v) =>
-      applyChanges(spark, TxTable.pinned(dstDir, Some(prev), s"sync:v$v"),
-        TxTable.readChanges(spark, srcDir, v - 1, Some(v)), keys, s"v$v")
+      val changes = TxTable.readChanges(spark, srcDir, v - 1, Some(v))
+      val inserts = changes.where(col("_change_type") === "insert")
+        .drop("_change_type", "_commit_version")
+      TxTable.upsert(spark, TxTable.pinned(dstDir, Some(prev), "sync"), keys,
+        changes, inserts, "sync", Some("v" -> v))
     }
     math.max(top - from, 0L)
   }

@@ -91,8 +91,9 @@ object TxTable {
       partitionBy: Seq[String] = Nil)
 
   private def logDir(dir: String): Path = Paths.get(dir, "_txlog")
-  private def entryPath(dir: String, v: Long): Path =
-    logDir(dir).resolve(f"$v%020d.json")
+  /** The `_txlog/` file `<v><suffix>`: a commit entry by default. */
+  private def logFile(dir: String, v: Long, suffix: String = ".json"): Path =
+    logDir(dir).resolve(f"$v%020d$suffix")
 
   /** Versions `v` of the `_txlog/` files named `<v><suffix>`, ascending
     * (none for an absent log). The listing is closed before it returns: a
@@ -152,12 +153,8 @@ object TxTable {
       arrOpt("partitionBy").getOrElse(Nil))
   }
 
-  /** The log entries from version `from` up to `to` (default: latest). */
-  private def readLog(dir: String, from: Long = 0L,
-      to: Long = Long.MaxValue): Seq[Commit] =
-    (from to math.min(to, currentVersion(dir))).map { v =>
-      parse(Files.readString(entryPath(dir, v)))
-    }
+  private def entry(dir: String, v: Long): Commit =
+    parse(Files.readString(logFile(dir, v)))
 
   /** Commit interval for log checkpoints: at every multiple, publish
     * also writes `<v>.checkpoint.json` holding the FULL live file list
@@ -168,33 +165,24 @@ object TxTable {
     */
   val CheckpointEvery = 10L
 
-  private def checkpointPath(dir: String, v: Long): Path =
-    logDir(dir).resolve(f"$v%020d.checkpoint.json")
-
-  /** Latest checkpoint at or before `top`, if any: an entry whose adds
-    * are the full live file list at its version.
-    */
-  private def latestCheckpoint(dir: String, top: Long): Option[Commit] =
-    logVersions(dir, ".checkpoint.json").filter(_ <= top).lastOption
-      .map(v => parse(Files.readString(checkpointPath(dir, v))))
-
   /** Live file names at version `top` and the entry that describes that
     * version (its schema and layout): replay adds minus removes in version
-    * order, starting from the newest checkpoint at or before `top`.
+    * order, starting from the newest checkpoint at or before `top` (an
+    * entry whose adds are the full live file list at its version).
     */
   private def replay(dir: String, top: Long): (Seq[String], Option[Commit]) = {
-    val ckpt = latestCheckpoint(dir, top)
+    val ckpt = logVersions(dir, ".checkpoint.json").filter(_ <= top).lastOption
+      .map(v => parse(Files.readString(logFile(dir, v, ".checkpoint.json"))))
     val live = collection.mutable.LinkedHashSet.empty[String]
     ckpt.foreach(live ++= _.adds)
     var last = ckpt
     (ckpt.map(_.version + 1).getOrElse(0L) to top).foreach { v =>
-      val c = parse(Files.readString(entryPath(dir, v)))
+      val c = entry(dir, v)
       c.removes.foreach(live.remove); live ++= c.adds
       last = Some(c)
     }
     (live.toSeq, last)
   }
-
 
   /** One resolved snapshot: a version with its live files, committed
     * schema and partition columns, pinned together so a read never pairs
@@ -311,12 +299,6 @@ object TxTable {
     else df.select(s.schema.fieldNames.map(col).toIndexedSeq: _*)
   }
 
-  private def statsPath(dir: String, v: Long): Path =
-    logDir(dir).resolve(f"$v%020d.stats.tsv")
-
-  private def statsCkptPath(dir: String, v: Long): Path =
-    logDir(dir).resolve(f"$v%020d.stats.ckpt.tsv")
-
   /** Zone maps of every file that has them at `asOf` (keyed by file
     * name). O(CheckpointEvery) driver-side metadata — the per-commit
     * stats sidecars are folded into a consolidated checkpoint on the
@@ -332,12 +314,12 @@ object TxTable {
       logVersions(s.dir, suffix).filter(_ <= s.version)
     val ckptV = versionsOf(".stats.ckpt.tsv").lastOption
     val seed = ckptV
-      .map(v => TxStats.parse(Files.readString(statsCkptPath(s.dir, v))))
+      .map(v => TxStats.parse(Files.readString(logFile(s.dir, v, ".stats.ckpt.tsv"))))
       .getOrElse(Map.empty[String, TxStats.FileStats])
     val stored = versionsOf(".stats.tsv")
       .filter(v => ckptV.forall(_ < v))
       .foldLeft(seed) { (m, v) =>
-        m ++ TxStats.parse(Files.readString(statsPath(s.dir, v)))
+        m ++ TxStats.parse(Files.readString(logFile(s.dir, v, ".stats.tsv")))
       }
     // partitioned table: each live file's partition values (from its
     // path) become per-file zone maps with lo == hi — partition pruning
@@ -463,7 +445,7 @@ object TxTable {
     // EEXIST instead, which is the loser's signal (found by the
     // concurrent-appender stress test: 10 of 48 commits lost under the
     // rename scheme)
-    try { Files.createLink(entryPath(dir, c.version), tmp); true }
+    try { Files.createLink(logFile(dir, c.version), tmp); true }
     catch { case _: java.nio.file.FileAlreadyExistsException => false }
     finally Files.delete(tmp)
   }
@@ -473,37 +455,28 @@ object TxTable {
     */
   private def record(dir: String, v: Long,
       stats: Map[String, TxStats.FileStats]): Unit = {
+    def put(target: Path, content: String): Unit = {
+      val tmp = logDir(dir).resolve(s".tmp-${java.util.UUID.randomUUID()}")
+      Files.writeString(tmp, content)
+      try Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE)
+      catch { case _: java.nio.file.FileAlreadyExistsException =>
+        Files.delete(tmp) }
+    }
     // zone-map sidecar AFTER the commit wins its version (a commit
     // without stats is merely unprunable — fail-open by design, so
     // a crash in this window cannot affect correctness)
-    if (stats.nonEmpty) {
-      val st = logDir(dir).resolve(s".stats-${java.util.UUID.randomUUID()}")
-      Files.writeString(st, TxStats.render(stats))
-      try Files.move(st, statsPath(dir, v), StandardCopyOption.ATOMIC_MOVE)
-      catch { case _: java.nio.file.FileAlreadyExistsException =>
-        Files.delete(st) }
-    }
+    if (stats.nonEmpty) put(logFile(dir, v, ".stats.tsv"), TxStats.render(stats))
     // best-effort bounded-replay checkpoint; a crash before this
     // write only means readers replay from the previous checkpoint
     if (v > 0 && v % CheckpointEvery == 0) {
       val snap = snapshot(dir, Some(v))
-      val ct = logDir(dir).resolve(s".ckpt-${java.util.UUID.randomUUID()}")
-      Files.writeString(ct, render(Commit(v, "checkpoint", snap.files, Nil,
-        snap.schema.json, snap.pcols)))
-      try Files.move(ct, checkpointPath(dir, v),
-        StandardCopyOption.ATOMIC_MOVE)
-      catch { case _: java.nio.file.FileAlreadyExistsException =>
-        Files.delete(ct) }
+      put(logFile(dir, v, ".checkpoint.json"), render(Commit(v, "checkpoint", snap.files,
+        Nil, snap.schema.json, snap.pcols)))
       // consolidated zone-map checkpoint on the same cadence, live
       // files only (bounds stats replay AND sheds dead entries)
       val liveSet = snap.files.toSet
-      val sct = logDir(dir).resolve(s".sckpt-${java.util.UUID.randomUUID()}")
-      Files.writeString(sct, TxStats.render(
-        snap.stats.filter(kv => liveSet(kv._1))))
-      try Files.move(sct, statsCkptPath(dir, v),
-        StandardCopyOption.ATOMIC_MOVE)
-      catch { case _: java.nio.file.FileAlreadyExistsException =>
-        Files.delete(sct) }
+      put(logFile(dir, v, ".stats.ckpt.tsv"),
+        TxStats.render(snap.stats.filter(kv => liveSet(kv._1))))
     }
   }
 
@@ -521,13 +494,33 @@ object TxTable {
     s
   }
 
+  /** The version and `n` of `app`'s newest transaction in the entries
+    * `[lo, hi]`: one backward scan that stops at the app's newest entry,
+    * so a writer that commits every batch reads back to its previous one.
+    * The text after the op's kind must be exactly `app` and digits.
+    */
+  private[sources] def lastTxn(dir: String, app: String, hi: Long,
+      lo: Long = 0L): Option[(Long, Long)] = {
+    val Recorded = s"[^:]*:${java.util.regex.Pattern.quote(app)}(\\d+)".r
+    (hi to lo by -1).iterator.map(v => v -> entry(dir, v).op)
+      .collectFirst { case (v, Recorded(n)) => v -> n.toLong }
+  }
+
   /** The one commit path every writer ends in. Stages `data` in layout
     * `pcols`, drops the zero-row staged files (an empty write commits its
     * schema and no data file) and publishes at exactly `s.version + 1`,
     * removing `removes` (files of `s`) under the schema `schemaFor(s)`.
     *
-    * A semantic writer that loses that version raises: the table changed
-    * under the snapshot its file set was derived from. An append
+    * An idempotent write `txn = (app, n)` (Delta's per-application
+    * transaction id) records the op `<kind>:<app><n>`; `app` ends in a
+    * non-digit, so the op reads back as one `(app, n)`. The high-water
+    * rule: the write is a no-op, returning the version of the app's newest
+    * entry, when that entry records `n' >= n` — in `s`, or among the
+    * entries that won the version the write tried; then it deletes its
+    * staged files, so a replay racing its own original never publishes.
+    *
+    * Otherwise a semantic writer that loses its version raises: the table
+    * changed under the snapshot its file set was derived from. An append
     * (`rebase`) is order-independent instead: it takes the new snapshot
     * and, if the layout is still `pcols`, re-derives the schema from it
     * (so a column another writer added survives, and a clashing type
@@ -535,9 +528,19 @@ object TxTable {
     * the table was re-partitioned, it raises. A commit that raises
     * deletes its staged files.
     */
-  private def commit(s: Snapshot, op: String, data: DataFrame,
+  private def commit(s: Snapshot, kind: String, data: DataFrame,
       removes: Seq[String], pcols: Seq[String], bloomFor: Seq[String],
-      rebase: Boolean = false)(schemaFor: Snapshot => StructType): Long = {
+      rebase: Boolean = false, txn: Option[(String, Long)] = None)(
+      schemaFor: Snapshot => StructType): Long = {
+    val op = txn.fold(kind) { case (app, n) =>
+      require(app.nonEmpty && !app.last.isDigit && n >= 0, s"txn ($app, $n)")
+      s"$kind:$app$n"
+    }
+    def recorded(hi: Long, lo: Long): Option[Long] = txn.flatMap { case (app, n) =>
+      lastTxn(s.dir, app, hi, lo).collect { case (v, m) if m >= n => v }
+    }
+    val replay = recorded(s.version, 0L)
+    if (replay.nonEmpty) return replay.get
     val schema = schemaFor(s) // a refused schema fails before any data moves
     Files.createDirectories(Paths.get(s.dir))
     val (staged, stats0) = stage(data, s.dir, pcols, bloomFor)
@@ -549,22 +552,28 @@ object TxTable {
     drop(empty)
     def conflict(why: String) = new java.util.ConcurrentModificationException(
       s"TxTable ${s.dir}: $why; re-derive and retry the $op")
+    // Right(v): published at v; Left(w): entry w already records the txn
     @annotation.tailrec
-    def from(at: Snapshot, schema: StructType, attempts: Int): Long = {
+    def from(at: Snapshot, schema: StructType, attempts: Int): Either[Long, Long] = {
       val v = at.version + 1
-      if (publish(s.dir, Commit(v, op, adds, removes, schema.json, pcols))) v
-      else if (!rebase) throw conflict(s"version $v committed concurrently")
-      else if (attempts >= 100) sys.error(s"TxTable ${s.dir}: publish starved")
+      if (publish(s.dir, Commit(v, op, adds, removes, schema.json, pcols))) Right(v)
       else {
-        val next = snapshot(s.dir)
-        if (next.pcols != pcols) throw conflict(
-          s"re-partitioned by ${next.pcols.mkString(",")} concurrently")
-        from(next, schemaFor(next), attempts + 1)
+        val top = currentVersion(s.dir)
+        val replayed = recorded(top, v)
+        if (replayed.nonEmpty) Left(replayed.get)
+        else if (!rebase) throw conflict(s"version $v committed concurrently")
+        else if (attempts >= 100) sys.error(s"TxTable ${s.dir}: publish starved")
+        else {
+          // pinned at `top`: the versions the rule just read
+          val next = snapshot(s.dir, Some(top))
+          if (next.pcols != pcols) throw conflict(
+            s"re-partitioned by ${next.pcols.mkString(",")} concurrently")
+          from(next, schemaFor(next), attempts + 1)
+        }
       }
     }
-    val v = try from(s, schema, 0) catch { case e: Throwable => drop(adds); throw e }
-    record(s.dir, v, stats)
-    v
+    val won = try from(s, schema, 0) catch { case e: Throwable => drop(adds); throw e }
+    won.fold({ w => drop(adds); w }, { v => record(s.dir, v, stats); v })
   }
 
   /** Additive schema evolution: the committed snapshot schema is the
@@ -623,13 +632,28 @@ object TxTable {
     * absent" prunes it (no false negatives, so always sound). Rewrites
     * (merge, update, delete, and compact without its own `bloomFor`)
     * keep the Bloom columns of the files they replace.
+    *
+    * `txn = (app, n)`, recorded as `append:<app><n>`, makes it exactly-once:
+    * a no-op, returning the version of the app's newest entry, when that
+    * entry records `n' >= n` (the high-water rule of [[commit]]).
     */
   def append(df: DataFrame, dir: String, bloomFor: Seq[String] = Nil,
-      opTag: Option[String] = None, partitionBy: Seq[String] = Nil): Long = {
+      txn: Option[(String, Long)] = None, partitionBy: Seq[String] = Nil): Long = {
     val s = snapshot(dir)
-    commit(s, "append" + opTag.map(":" + _).getOrElse(""), df, Nil,
+    commit(s, "append", df, Nil,
       resolvePartitioning(s, df, partitionBy, allowChange = false), bloomFor,
-      rebase = true)(evolve(_, df.schema))
+      rebase = true, txn)(evolve(_, df.schema))
+  }
+
+  /** The first commit of a table, op `append`: pinned at version -1 and
+    * never rebased, so it raises `ConcurrentModificationException` when
+    * the table exists or another writer creates it first.
+    */
+  private[sources] def create(df: DataFrame, dir: String,
+      bloomFor: Seq[String], partitionBy: Seq[String]): Long = {
+    val s = pinned(dir, Some(-1L), "create")
+    commit(s, "append", df, Nil, resolvePartitioning(s, df, partitionBy,
+      allowChange = false), bloomFor)(_ => df.schema)
   }
 
   /** Atomic full overwrite (snapshot replace). `expectedVersion` is the
@@ -743,14 +767,16 @@ object TxTable {
 
   /** MERGE (upsert): rows of `source` replace same-key rows, new keys
     * insert. Copy-on-write with file pruning — only files containing a
-    * matched key are rewritten; the rest carry over untouched.
+    * matched key are rewritten; the rest carry over untouched. `txn =
+    * (app, n)` makes it exactly-once under the same high-water rule as
+    * [[append]], recorded as `merge:<app><n>`; a MERGE never rebases, so
+    * it raises on a lost version unless the winner records the txn.
     */
   def merge(spark: SparkSession, dir: String, source: DataFrame,
       keys: Seq[String], expectedVersion: Option[Long] = None,
-      opTag: Option[String] = None): Long = {
-    val op = "merge" + opTag.map(":" + _).getOrElse("")
-    upsert(spark, pinned(dir, expectedVersion, op), keys, source, source, op)
-  }
+      txn: Option[(String, Long)] = None): Long =
+    upsert(spark, pinned(dir, expectedVersion, "merge"), keys, source, source,
+      "merge", txn)
 
   /** The keyed upsert MERGE and the sync apply share: in one commit over
     * `s`, rows whose `keys` appear in `keyRows` leave the table and
@@ -773,7 +799,8 @@ object TxTable {
     * write.
     */
   private[sources] def upsert(spark: SparkSession, s: Snapshot,
-      keys: Seq[String], keyRows: DataFrame, rows: DataFrame, op: String): Long = {
+      keys: Seq[String], keyRows: DataFrame, rows: DataFrame, kind: String,
+      txn: Option[(String, Long)]): Long = {
     val found = if (s.files.isEmpty) Nil else keySet(spark, s, keys, keyRows)
     def inSet(key: Column, values: Seq[Any]): Column =
       GraftSqlBridge.column(InSet(GraftSqlBridge.expression(key), values.toSet))
@@ -798,7 +825,8 @@ object TxTable {
       if (s.version < 0) rows
       else if (touched.isEmpty) scan(spark, s, Nil).unionByName(rows) // pure insert
       else scan(spark, s, touched).where(!coalesce(hit, lit(false))).unionByName(rows)
-    commit(s, op, data, touched, s.pcols, bloomsOf(s, touched))(evolve(_, rows.schema))
+    commit(s, kind, data, touched, s.pcols, bloomsOf(s, touched), txn = txn)(
+      evolve(_, rows.schema))
   }
 
   /** The distinct keys of `keyRows` with no null column, in Catalyst form
@@ -859,7 +887,7 @@ object TxTable {
     val top = math.min(toVersion.getOrElse(Long.MaxValue), currentVersion(dir))
     // the entries the diff reads: the window and the one before it (the
     // layout its first removes were written in), never the whole log
-    val allCommits = readLog(dir, math.max(math.min(fromVersion, top), 0L), top)
+    val allCommits = (math.max(math.min(fromVersion, top), 0L) to top).map(entry(dir, _))
     val layoutOf: Map[Long, Seq[String]] =
       allCommits.map(c => c.version -> c.partitionBy).toMap
     val commits = allCommits.filter(_.version > fromVersion)
@@ -917,22 +945,10 @@ object TxTable {
     } else parts.reduce(_.unionByName(_, allowMissingColumns = true))
   }
 
-  /** True if some commit carries `opTag` (idempotence lookup for sinks). */
-  def hasCommitTag(dir: String, opTag: String): Boolean =
-    readLog(dir).exists(_.op.endsWith(":" + opTag))
-
-  /** Commit ops from version `top` down to 0, each entry read only when
-    * the iterator reaches it: [[TxSync]]'s high-water-mark scan stops at
-    * the newest tagged entry and never reads the log below it.
-    */
-  private[sources] def opsNewestFirst(dir: String, top: Long): Iterator[String] =
-    Iterator.iterate(top)(_ - 1).takeWhile(_ >= 0)
-      .map(v => parse(Files.readString(entryPath(dir, v))).op)
-
   /** Commit history as a DataFrame: (version, op, n_adds, n_removes). */
   def history(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    readLog(dir)
+    (0L to currentVersion(dir)).map(entry(dir, _))
       .map(c => (c.version, c.op, c.adds.size.toLong, c.removes.size.toLong))
       .toDF("version", "op", "n_adds", "n_removes")
   }
@@ -943,9 +959,11 @@ object TxTable {
     * retention trade.
     */
   def vacuum(dir: String, retainFrom: Long = Long.MaxValue): Long = {
-    val horizon = math.min(retainFrom, currentVersion(dir))
-    val reachable = (horizon to currentVersion(dir))
-      .flatMap(v => activeFiles(dir, Some(v))).toSet
+    val top = currentVersion(dir)
+    val horizon = math.max(math.min(retainFrom, top), -1L)
+    // every snapshot in [horizon, top]: the horizon's files, later adds
+    val reachable = (snapshot(dir, Some(horizon)).files ++
+      (horizon + 1 to top).flatMap(entry(dir, _).adds)).toSet
     val root = Paths.get(dir)
     // recursive: partitioned tables nest data files under col=value/ dirs
     // (the log keys them by relative path); staging and log dirs excluded

@@ -54,6 +54,24 @@ class GraftConnectorSpec extends SparkSpec {
       .load(dir).count() == 20)
   }
 
+  test("ErrorIfExists / Ignore lose to a concurrent creator: raise / no-op, publish nothing") {
+    import spark.implicits._
+    Seq(SaveMode.ErrorIfExists, SaveMode.Ignore).foreach { mode =>
+      val dir = freshDir(s"create_race_$mode")
+      val from = freshDir(s"create_race_from_$mode")
+      rows(100, 103).write.format("graft").save(from) // the other creator
+      val write = Squatter.whileStaging(rows(0, 10), from, dir)
+        .write.format("graft").mode(mode)
+      if (mode == SaveMode.ErrorIfExists)
+        intercept[IllegalStateException](write.save(dir))
+      else write.save(dir)
+      assert(TxTable.currentVersion(dir) == 0L, mode)
+      assert(spark.read.format("graft").load(dir).select("k").as[Long]
+        .collect().toSet == (100L until 103L).toSet, mode)
+      assert(TxTable.vacuum(dir, retainFrom = 0L) == 0L, mode)
+    }
+  }
+
   test("planning-time zone-map pruning shrinks numFiles, result exact") {
     val dir = freshDir("prune")
     (0 until 4).foreach(i =>

@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
-import graft.sources.TxTable
+import graft.sources.{GraftStreamSink, TxTable}
+import graft.streaming.BatchSink
 
 /** `format("graft")` streaming surface: the TxTable log as a Structured
   * Streaming SOURCE (offsets = table versions; resumable from the
@@ -95,6 +96,71 @@ class GraftStreamSpec extends SparkSpec {
     assert(spark.read.format("graft").load(sink).count() == 9)
     s.addBatch(8L, rows(9, 10))
     assert(spark.read.format("graft").load(sink).count() == 10)
+  }
+
+  private def keys(dir: String): Seq[Long] = {
+    import spark.implicits._
+    TxTable.read(spark, dir).select("k").as[Long].collect().toSeq.sorted
+  }
+
+  test("a stream sink's batch 0 and a BatchSink's batch 0 both land in one table") {
+    val dir = freshDir("crosstalk")
+    new GraftStreamSink(dir, "testapp").addBatch(0L, rows(0, 5))
+    BatchSink.upsertBatchTx(rows(5, 9), 0L, dir, "k")
+    assert(keys(dir) == (0L until 9L))
+    assert(TxTable.history(spark, dir).collect().map(_.getString(1)).toSeq ==
+      Seq("append:stream:testapp:batch=0", "merge:batch=0"))
+  }
+
+  test("a stream sink replay that loses its version to its original publishes nothing") {
+    val sink = freshDir("race_stream")
+    rows(0, 5).write.format("graft").save(sink)
+    val from = freshDir("race_stream_from")
+    Squatter.land(sink, from)
+    new GraftStreamSink(from, "testapp").addBatch(3L, rows(5, 9)) // the original
+    new GraftStreamSink(sink, "testapp")
+      .addBatch(3L, Squatter.whileStaging(rows(5, 9), from, sink))
+    assert(TxTable.currentVersion(sink) == 1L)
+    assert(keys(sink) == (0L until 9L))
+    assert(TxTable.vacuum(sink, retainFrom = 0L) == 0L) // no staged file left
+  }
+
+  test("a BatchSink replay that loses its batch to its original publishes nothing") {
+    val tbl = freshDir("race_batch")
+    BatchSink.upsertBatchTx(rows(0, 5), 0L, tbl, "k")
+    val from = freshDir("race_batch_from")
+    Squatter.land(tbl, from)
+    BatchSink.upsertBatchTx(rows(3, 8), 1L, from, "k") // the original
+    BatchSink.upsertBatchTx(Squatter.whileStaging(rows(3, 8), from, tbl), 1L, tbl, "k")
+    assert(TxTable.currentVersion(tbl) == 1L)
+    assert(keys(tbl) == (0L until 8L))
+    assert(TxTable.vacuum(tbl, retainFrom = 0L) == 0L)
+  }
+
+  test("a sink batch reads the log back to its own previous batch only") {
+    // the log below the version-10 checkpoint becomes unreadable: batch 12
+    // and a replay of batch 11 must not need it
+    def unreadableBelowCheckpoint(dir: String): Unit = {
+      val log = java.nio.file.Paths.get(dir, "_txlog")
+      assert(java.nio.file.Files.exists(log.resolve(f"${10}%020d.checkpoint.json")))
+      (0 until 10).foreach(v =>
+        java.nio.file.Files.writeString(log.resolve(f"$v%020d.json"), "unreadable"))
+    }
+    val streamed = freshDir("budget_stream")
+    val sink = new GraftStreamSink(streamed, "testapp")
+    (0L until 12L).foreach(b => sink.addBatch(b, rows(b, b + 1)))
+    unreadableBelowCheckpoint(streamed)
+    sink.addBatch(12L, rows(12, 13))
+    sink.addBatch(11L, rows(11, 12))
+    assert(TxTable.currentVersion(streamed) == 12L)
+    assert(keys(streamed) == (0L until 13L))
+    val merged = freshDir("budget_batch")
+    (0L until 12L).foreach(b => BatchSink.upsertBatchTx(rows(b, b + 1), b, merged, "k"))
+    unreadableBelowCheckpoint(merged)
+    BatchSink.upsertBatchTx(rows(12, 13), 12L, merged, "k")
+    BatchSink.upsertBatchTx(rows(11, 12), 11L, merged, "k")
+    assert(TxTable.currentVersion(merged) == 12L)
+    assert(keys(merged) == (0L until 13L))
   }
 
   test("end-to-end streaming replication through source and sink") {

@@ -31,6 +31,14 @@ object Squatter {
     }
     true
   }
+
+  /** `df` whose evaluation lands `from`'s newer commit in `to`: a write of
+    * it into `to` loses its version to that commit.
+    */
+  def whileStaging(df: DataFrame, from: String, to: String): DataFrame = {
+    val squat = udf((f: String, t: String) => land(f, t)).asNondeterministic()
+    df.where(squat(lit(from), lit(to)))
+  }
 }
 
 /** ACID contract tests for the log-structured table format: atomic
@@ -225,11 +233,8 @@ class TxTableSpec extends SparkSpec {
   }
 
   /** `df` whose write copies `from`'s newer commit into `to` mid-stage. */
-  private def squatWhileStaging(df: DataFrame, from: String, to: String): DataFrame = {
-    val squat = udf((f: String, t: String) => Squatter.land(f, t))
-      .asNondeterministic()
-    df.where(squat(lit(from), lit(to)))
-  }
+  private def squatWhileStaging(df: DataFrame, from: String, to: String): DataFrame =
+    Squatter.whileStaging(df, from, to)
 
   /** A copy of `dir` with `change` committed to it: the squatter's commit. */
   private def squatter(dir: String, tag: String)(change: String => Unit): String = {
@@ -293,6 +298,46 @@ class TxTableSpec extends SparkSpec {
     assert(TxTable.vacuum(dir, retainFrom = 0L) == 0L)
   }
 
+  test("a txn write is a no-op at or below its app's high-water mark") {
+    val dir = freshDir("txn_hwm")
+    assert(TxTable.append(df(1L -> "a"), dir, txn = Some("app=" -> 2L)) == 0L)
+    TxTable.append(df(2L -> "b"), dir) // no txn: the scan walks past it
+    // the same n and a lower n are replays: the app's entry, no new version
+    assert(TxTable.append(df(1L -> "a"), dir, txn = Some("app=" -> 2L)) == 0L)
+    assert(TxTable.merge(spark, dir, df(1L -> "x"), Seq("k"),
+      txn = Some("app=" -> 1L)) == 0L)
+    // another app whose text ends like this one's is another app
+    assert(TxTable.append(df(3L -> "c"), dir, txn = Some("my-app=" -> 2L)) == 2L)
+    assert(TxTable.merge(spark, dir, df(1L -> "A"), Seq("k"),
+      txn = Some("app=" -> 3L)) == 3L)
+    assert(slurp(dir) == Set(1L -> "A", 2L -> "b", 3L -> "c"))
+    assert(TxTable.history(spark, dir).collect().map(_.getString(1)).toSeq ==
+      Seq("append:app=2", "append", "append:my-app=2", "merge:app=3"))
+    intercept[IllegalArgumentException] { // `app` then `n` must read back as one pair
+      TxTable.append(df(4L -> "d"), dir, txn = Some("app1" -> 2L))
+    }
+  }
+
+  test("a txn MERGE that loses its version to the same txn is a no-op; to another, raises") {
+    val dir = freshDir("txn_race")
+    TxTable.append(df(1L -> "a", 2L -> "b"), dir)
+    val from = squatter(dir, "txn_race_from")(
+      TxTable.merge(spark, _, df(2L -> "B"), Seq("k"), txn = Some("batch=" -> 4L)))
+    assert(TxTable.merge(spark, dir, squatWhileStaging(df(2L -> "B"), from, dir),
+      Seq("k"), txn = Some("batch=" -> 4L)) == 1L)
+    assert(TxTable.currentVersion(dir) == 1L)
+    assert(slurp(dir) == Set(1L -> "a", 2L -> "B"))
+    assert(TxTable.vacuum(dir, retainFrom = 0L) == 0L) // its staged files are gone
+    val next = squatter(dir, "txn_race_next")(
+      TxTable.merge(spark, _, df(1L -> "A"), Seq("k"), txn = Some("batch=" -> 5L)))
+    intercept[java.util.ConcurrentModificationException] {
+      TxTable.merge(spark, dir, squatWhileStaging(df(3L -> "c"), next, dir),
+        Seq("k"), txn = Some("batch=" -> 6L))
+    }
+    assert(TxTable.currentVersion(dir) == 2L)
+    assert(TxTable.vacuum(dir, retainFrom = 0L) == 0L)
+  }
+
   test("an empty write commits its schema and no data file") {
     val empty = df(1L -> "a").where(lit(false))
     def assertEmptyCommit(dir: String): Unit = {
@@ -320,11 +365,28 @@ class TxTableSpec extends SparkSpec {
     assert(callSites("stage") == 1, "stage through the commit helper")
     assert(callSites("publish") == 1, "publish through the commit helper")
     val walk = Files.walk(Paths.get("src"))
-    val stray = try walk.iterator().asScala
+    val sources = try walk.iterator().asScala
       .filter(p => p.toString.endsWith(".scala"))
-      .filter(p => Files.readString(p).contains("publish" + "ForSync")).toSeq
+      .map(p => p -> Files.readString(p)).toList
       finally walk.close()
+    val stray = sources.collect { case (p, code) if code.contains("publish" + "ForSync") => p }
     assert(stray.isEmpty, stray)
+    // one transaction-id rule: the op grammar and the high-water lookup
+    // live in TxTable alone — the retired per-writer lookups are gone, and
+    // no other file reads a commit op, spells one out or matches one
+    val retired = Seq("hasCommit" + "Tag", "opsNewest" + "First")
+    val lookups = sources.collect { case (p, code) if retired.exists(code.contains) => p }
+    assert(lookups.isEmpty, lookups)
+    val opParsing = Seq("""TxTable\s*\.\s*history\b""",
+      "\"(append|merge|sync|overwrite|update|delete):", """endsWith\(":""").map(_.r)
+    val tagRegex = "\"\"*\\.r\\b".r // a regex literal in the table's writers
+    val parsers = sources.collect {
+      case (p, code) if p.toString.startsWith("src/main") && p != src &&
+        (opParsing.exists(_.findFirstIn(code).nonEmpty) ||
+          (Seq("/sources/", "/streaming/").exists(p.toString.contains) &&
+            tagRegex.findFirstIn(code).nonEmpty)) => p
+    }
+    assert(parsers.isEmpty, parsers)
   }
 
   test("readChanges reads only the log entries of its window") {
